@@ -44,10 +44,8 @@ object AnnAppendBench {
     // the A/B as long as BOTH probed indexes share one centroid set,
     // which they do — the union rebuild regenerates the same centroids
     // only if the sliver contributes none, so exclude them explicitly)
-    val corpus = e.filter(col("vec_id") % 11 =!= 0 || col("vec_id") % 200 === 0)
-      .localCheckpoint()
-    val sliver = e.filter(col("vec_id") % 11 === 0 && col("vec_id") % 200 =!= 0)
-      .localCheckpoint()
+    val corpus = Pins.checkpoint(e.filter(col("vec_id") % 11 =!= 0 || col("vec_id") % 200 === 0))
+    val sliver = Pins.checkpoint(e.filter(col("vec_id") % 11 === 0 && col("vec_id") % 200 =!= 0))
     val nCorpus = corpus.count(); val nSliver = sliver.count()
 
     def timed[A](f: => A): (A, Double) = {
@@ -59,8 +57,8 @@ object AnnAppendBench {
     val (_, tRebuild) = timed(
       Similarity.buildAnnFor(corpus.unionByName(sliver), "annab_full"))
 
-    val q = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv")).localCheckpoint()
+    val q = Pins.checkpoint(e.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("q_id"), col("v").as("qv")))
     def probe(tag: String) = Similarity.ivfProbe(spark, tag, q)
       .collect().map(_.mkString("|")).toSeq
     val (appended, tProbeAppended) = timed(probe("annab_base"))

@@ -55,13 +55,12 @@ object AsOfWidthBench {
     // fixed scheduling overhead (~0.3 s) drowns the operator cost; the
     // cache pins the input so repeated runs time the JOIN, not the scan
     val factor = sys.env.getOrElse("SPARK_GRAFT_ASOF_INFLATE", "20").toInt
-    val ev = Tables.events(spark, sfDir)
+    val ev = Pins.cache(Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
       .withColumn("rep", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("event_id", col("event_id") * factor + col("rep"))
-      .drop("rep")
-      .cache()
+      .drop("rep"))
     val nEv = ev.count()
 
     /** Min of 3 timed runs (post-warmup), so codegen/JIT order can't pick

@@ -143,7 +143,7 @@ object Bench {
       // pure collector time — every 4th query keeps the cleaner fed at a
       // quarter of the cost (validated: no late-suite slowdown).
       spark.catalog.clearCache()
-      graft.operators.Ranks.releaseAll() // persisted global sorts, same deal
+      Pins.releaseAll() // session-ledger pins (checkpoints, persisted sorts), same deal
       qIdx += 1
       if (qIdx % gcEvery == 0) System.gc()
       Obs(elapsed, wall, ld, otherCpuFrac(s0, s1, c0, c1))

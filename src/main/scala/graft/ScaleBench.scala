@@ -360,7 +360,7 @@ object ScaleBench {
             Some(try {
               val t = Some(time(fn(spark, dir).count()))
               spark.catalog.clearCache()
-              graft.operators.Ranks.releaseAll()
+              Pins.releaseAll()
               t
             } catch { case e: IllegalArgumentException =>
               refused = true; refusal(name, e) })

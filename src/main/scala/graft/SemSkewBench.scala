@@ -47,13 +47,11 @@ object SemSkewBench {
     // group's lowest centroid — 8 cells at nBase/8 occupancy
     def axisExpr(idCol: String): String =
       s"transform(sequence(0, 7), i -> IF(i = cast($idCol / 200 as int) % 8, 10.0d, 0.1d))"
-    val base = spark.range(nBase.toLong)
-      .select(col("id").as("vec_id"), expr(axisExpr("id")).as("v"))
-      .localCheckpoint()
-    val flood = spark.range(1000000L, 1000000L + nDup)
+    val base = Pins.checkpoint(spark.range(nBase.toLong)
+      .select(col("id").as("vec_id"), expr(axisExpr("id")).as("v")))
+    val flood = Pins.checkpoint(spark.range(1000000L, 1000000L + nDup)
       .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 7), i -> IF(i % 2 = 0, 10.0d, -10.0d))").as("v"))
-      .localCheckpoint()
+        expr("transform(sequence(0, 7), i -> IF(i % 2 = 0, 10.0d, -10.0d))").as("v")))
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -74,7 +74,7 @@ object Verify {
       // large heap may never trigger — see Bench.scala / BASELINE.md);
       // every 4th query suffices, as validated for Bench
       spark.catalog.clearCache()
-      graft.operators.Ranks.releaseAll() // persisted global sorts, same deal
+      Pins.releaseAll() // session-ledger pins (checkpoints, persisted sorts), same deal
       qIdx += 1
       if (qIdx % 4 == 0) System.gc()
     }

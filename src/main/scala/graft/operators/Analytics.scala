@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -117,7 +118,7 @@ object Analytics {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     // cached: both the scoring join and the doc-frequency aggregate read
     // tf — without the cache the corpus-wide tokenize+aggregate runs twice
-    val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")).cache()
+    val tf = Pins.cache(toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val nDocs = Tables.documents(s, dir).agg(countDistinct(col("doc_id")).as("n"))
     val scored = tf.join(broadcast(dfreq), "tok").crossJoin(broadcast(nDocs))
@@ -182,7 +183,7 @@ object Analytics {
     val toks = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     // cached: doc lengths, query-term dfs and the scoring join all read tf
-    val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")).cache()
+    val tf = Pins.cache(toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy("doc_id").agg(sum(col("tf")).cast("double").as("dl"))
     val stats = dl.agg(avg(col("dl")).as("avgdl"), count(lit(1)).as("n"))
     val terms = Bm25Terms.toDF("term")
@@ -616,7 +617,7 @@ object Analytics {
     // one lazy plan
     val perOrder = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey")).agg(collect_set(col("l_suppkey")).as("sks"))
-    val edges = perOrder
+    val edges = Pins.cache(perOrder
       .select(explode(col("sks")).as("src"), col("sks"))
       .select(col("src"), explode(col("sks")).as("dst"))
       .filter(col("src") =!= col("dst"))
@@ -629,8 +630,8 @@ object Analytics {
       // (r19 optimization, guide §2.4: two operations keyed the same way
       // share one exchange). Skew note: a hot src hashes to one partition
       // either way — this moves the exchange, it cannot add skew.
-      .repartition(col("src")).cache()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).cache()
+      .repartition(col("src")))
+    val deg = Pins.cache(edges.groupBy("src").agg(count(lit(1)).as("deg")))
     val nn = deg.agg(count(lit(1)).cast("double").as("nn"))
     var pr = deg.select(col("src").as("node")).crossJoin(broadcast(nn))
       .select(col("node"), (lit(1.0) / col("nn")).as("pr"), col("nn"))
@@ -973,8 +974,8 @@ object Analytics {
     * identical. Wedges come from per-node degree aggregates (one tiny
     * agg), never a join. */
   def graphTriangles(s: SparkSession, dir: String): DataFrame = {
-    val e = Dedup.jaccardPairsFrom(Tables.documents(s, dir))
-      .select(col("a_id").as("a"), col("b_id").as("b")).cache()
+    val e = Pins.cache(Dedup.jaccardPairsFrom(Tables.documents(s, dir))
+      .select(col("a_id").as("a"), col("b_id").as("b")))
     val wedgeJoin = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("a"), col("e1.b").as("b"), col("e2.b").as("c"))
     val triangles = wedgeJoin

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -483,11 +484,10 @@ object Curation {
     // cache: the survivor set feeds BOTH the model fit and the scoring pass
     // (and through them four aggregate subtrees) — without it every stage
     // re-runs the gate + dedup window from the scan
-    val deduped = gated
+    val deduped = Pins.cache(gated
       .withColumn("rn", row_number().over(w.orderBy(col("doc_id"))))
       .filter(col("rn") === 1)
-      .select("doc_id", "text", "source")
-      .cache()
+      .select("doc_id", "text", "source"))
     val scored = dsirScoreOf(docTokens(deduped), dsirModelOf(docTokens(deduped)))
     val budget = scored.agg(expr("sum(n_toks) div 2").as("budget"))
     val cum = Window.orderBy(col("dsir_logweight").desc, col("doc_id"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -452,16 +453,15 @@ object DataPrep {
     * randomized property spec drives (caller must hold the sanctioned
     * eager-job tag; the public query does). */
   private[graft] def bpeTrainFrom(docs: DataFrame): DataFrame = {
-    var words = docs
+    var words = Pins.checkpoint(docs
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("freq"),
-        expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms"))
-      .localCheckpoint()
+        expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms")))
     var merges: DataFrame = null
     for (i <- 1 to BpeMerges) {
-      val bp = words
+      val bp = Pins.checkpoint(words
         .filter(size(col("syms")) >= 2)
         .select(col("freq"), explode(expr(
           // Spark array access is 0-based (the DuckDB twin's is 1-based)
@@ -471,18 +471,16 @@ object DataPrep {
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1)
-        .select(lit(i.toLong).as("step"), col("l"), col("r"), col("cnt"))
-        .localCheckpoint()
+        .select(lit(i.toLong).as("step"), col("l"), col("r"), col("cnt")))
       merges = if (merges == null) bp else merges.unionByName(bp)
       val prev = words
-      words = words.crossJoin(broadcast(bp))
+      words = Pins.checkpoint(words.crossJoin(broadcast(bp))
         .select(col("freq"), expr(
           """aggregate(syms, CAST(array() AS ARRAY<STRING>),
             |  (acc, c) -> IF(size(acc) > 0 AND element_at(acc, -1) = l AND c = r,
             |                 concat(slice(acc, 1, size(acc) - 1), array(concat(l, r))),
-            |                 concat(acc, array(c))))""".stripMargin).as("syms"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(prev)
+            |                 concat(acc, array(c))))""".stripMargin).as("syms")))
+      Pins.release(prev)
     }
     merges.select(col("step"), col("l").as("left_sym"), col("r").as("right_sym"), col("cnt"))
       .orderBy("step")

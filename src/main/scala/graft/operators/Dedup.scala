@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -99,9 +100,16 @@ object Dedup {
     * (sf0.1 = 5 k docs, the sf1 rehearsal = 50 k) and below the
     * second-decade corpus (~500 k), where only the banded forms run. */
   private[graft] val MaxExactRowsKey = "spark.graft.exactBaseline.maxRows"
+  /** A whole-number `spark.graft.*` setting; a malformed value fails
+    * naming the key and the value instead of a bare NumberFormatException. */
+  private[operators] def longConf(s: SparkSession, key: String, default: Long): Long =
+    s.conf.getOption(key).map(v => v.trim.toLongOption.getOrElse(
+      throw new IllegalArgumentException(s"$key must be a whole number, got '$v'")))
+      .getOrElse(default)
+
   private[operators] def guardExactPairs(s: SparkSession, dir: String,
                                          what: String, scaleAlt: String): Unit = {
-    val max = s.conf.getOption(MaxExactRowsKey).map(_.toLong).getOrElse(100000L)
+    val max = longConf(s, MaxExactRowsKey, 100000L)
     val n = Tables.footerRowCount(s, dir, "documents")
     require(n <= max,
       s"$what rides the exact shingle pair join (candidate space sum df^2, " +
@@ -125,7 +133,7 @@ object Dedup {
     * deterministic"). Query-level callers that declare ordered output
     * sort at their own tail. */
   private[graft] def jaccardPairsFrom(docs: DataFrame, t: Double = 0.5): DataFrame =
-    jaccardPairsFromArrays(shingleArrays(docs).cache(), t)
+    jaccardPairsFromArrays(Pins.cache(shingleArrays(docs)), t)
 
   /** [[jaccardPairsFrom]] over an ALREADY-BUILT (doc_id, sh) shingle-array
     * frame (callers that hold one cached — the incremental batch stages —
@@ -287,7 +295,7 @@ object Dedup {
     * so the composed paths keep the form that is faster where they
     * actually run. */
   private[graft] def jaccardPairsPrefixFrom(docs: DataFrame, t: Double): DataFrame = {
-    val docsArr = shingleArrays(docs).cache()
+    val docsArr = Pins.cache(shingleArrays(docs))
     val sh = docsArr.select(col("doc_id"), explode(col("sh")).as("s"))
     // global order key: (document frequency asc, shingle asc) — a total
     // order (s is distinct per doc), identical for every document.
@@ -314,13 +322,13 @@ object Dedup {
     // their first common prefix shingle, only verification-doomed pairs
     // drop (r19 optimization — measured 2.5× fewer candidate pairs on the
     // R-S form at sf0.1, same mechanism here).
-    // overlap bound vs required overlap compared ALGEBRAICALLY —
-    // bound * (1+t) >= t * (nx+ny) — instead of bound >= ceil(t*(nx+ny)/(1+t)):
-    // for integer bound the two are mathematically identical, but the ceil
-    // form divides doubles and an FP quotient epsilon above an integer
-    // would raise the ceil and silently drop a true boundary pair at
-    // thresholds where the division is inexact (r20, advisor note; at the
-    // shipped t = 0.5 both forms are provably exact and bit-identical)
+    // overlap bound vs required overlap compared without a division —
+    // bound * (1+t) >= t * (nx+ny) — instead of bound >= ceil(t*(nx+ny)/(1+t)),
+    // which adds a rounded quotient and a ceil. Both sides are still
+    // rounded doubles, so only the shipped t = 0.5 is provably exact
+    // (1.5 and 0.5 are dyadic: every product of them with a long up to
+    // 2^52 is exact); every call site passes 0.5. Another t needs an
+    // integer comparison (t = p/q, long products) to be exact.
     val candidates = idx.as("x").join(idx.as("y"),
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id") &&
           col("y.n") * t <= col("x.n") && col("x.n") * t <= col("y.n") &&
@@ -371,7 +379,7 @@ object Dedup {
     * residual band from counts). Fully deterministic (no hash functions)
     * → oracle-checked. */
   def jaccardNearDupDfCap(s: SparkSession, dir: String): DataFrame = {
-    val docsArr = shingleArrays(Tables.documents(s, dir)).cache()
+    val docsArr = Pins.cache(shingleArrays(Tables.documents(s, dir)))
     val sh = docsArr.select(col("doc_id"), explode(col("sh")).as("s"))
     // document frequency via a WINDOW over the shingle, not groupBy +
     // join-back: one shuffle hash-partitions the exploded rows by s, the
@@ -380,10 +388,9 @@ object Dedup {
     // two cached sides with NO further exchange (measured: the groupBy +
     // join-back form paid two extra full-width shuffles of the exploded
     // rows, 8.8 s → 3.7 s standalone-warm at sf0.1)
-    val rare = sh
+    val rare = Pins.cache(sh
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
-      .filter(col("df") <= DfCap).drop("df")
-      .cache()
+      .filter(col("df") <= DfCap).drop("df"))
     // per-pair RARE-common counts via one partial-agg shuffle — the same
     // cheap aggregation shape as the uncapped query, never a materialized
     // candidate×array join for the bulk of pairs
@@ -460,16 +467,20 @@ object Dedup {
     docs
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .filter(size(col("tk")) >= n)
-      // the IF makes the expression TOTAL: `sequence(0, size - n)` flips
-      // to a descending sequence (0, -1, …) on a sub-n-token row, and the
-      // optimizer may constant-fold this projection over a local relation
-      // BEFORE the filter above prunes such rows (seen with streaming
-      // micro-batches) — the guard must live in the expression itself
-      .select(col("doc_id"),
-        array_distinct(expr(s"IF(size(tk) >= $n, " +
-          s"transform(sequence(0, size(tk) - $n), i -> concat_ws(' ', slice(tk, i + 1, $n))), " +
-          "array())"))
-          .as("sh"))
+      .select(col("doc_id"), shingleSet(n).as("sh"))
+
+  /** The distinct n-word shingles of the token-array column `tk` — empty
+    * for a row of fewer than n tokens. The IF makes the expression TOTAL:
+    * `sequence(0, size - n)` flips to a descending sequence (0, -1, …) on a
+    * sub-n-token row, and the optimizer may constant-fold the projection
+    * over a local relation BEFORE a token filter prunes such rows (seen
+    * with streaming micro-batches) — the guard must live in the expression
+    * itself. The one shingle definition: [[shingleArrays]] and the growing
+    * stream index both compile from it. */
+  private[graft] def shingleSet(n: Int = 3): Column =
+    array_distinct(expr(s"IF(size(tk) >= $n, " +
+      s"transform(sequence(0, size(tk) - $n), i -> concat_ws(' ', slice(tk, i + 1, $n))), " +
+      "array())"))
 
   // ------------------------------------------------------------ MinHash LSH
   private[graft] val NumHashes = 16
@@ -503,15 +514,7 @@ object Dedup {
     * computes the same stats in one shuffle, but each *use* of the result
     * re-executes it — the self-join's two sides plus the star branch cost
     * three window shuffles; the groupBy form is computed once.) */
-  private[graft] def bucketCandidates(rows: DataFrame, k1: String, k2: String): DataFrame =
-    bucketCandidatesPlan(rows, k1, k2)._1
-
-  /** [[bucketCandidates]] with its internal cache handle exposed — for
-    * callers that run per micro-batch (the standing semantic probe, the
-    * streams) and must release the diamond cache once the candidate join
-    * materializes, instead of leaking one cached sliver per call. */
-  private[graft] def bucketCandidatesPlan(rows: DataFrame, k1: String,
-                                          k2: String): (DataFrame, DataFrame) = {
+  private[graft] def bucketCandidates(rows: DataFrame, k1: String, k2: String): DataFrame = {
     val bstats = rows.groupBy(k1, k2)
       .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"))
       .filter(col("bsz") >= 2)
@@ -520,7 +523,7 @@ object Dedup {
     // (measured 3× the shuffles; exchange reuse does not fire across the
     // aliased branches). Rows here are (doc_id, bucket key, two longs) in
     // multi-member buckets only — a sliver of the corpus at any scale.
-    val joined = rows.join(bstats, Seq(k1, k2)).cache()
+    val joined = Pins.cache(rows.join(bstats, Seq(k1, k2)))
     val small = joined.filter(col("bsz") <= MaxBucket).select("doc_id", k1, k2)
     val smallPairs = small.as("x").join(small.as("y"),
         col(s"x.$k1") === col(s"y.$k1") && col(s"x.$k2") === col(s"y.$k2") &&
@@ -529,7 +532,7 @@ object Dedup {
     val starPairs = joined
       .filter(col("bsz") > MaxBucket && col("doc_id") =!= col("bmin"))
       .select(col("bmin").as("a_id"), col("doc_id").as("b_id"))
-    (smallPairs.union(starPairs).distinct(), joined)
+    smallPairs.union(starPairs).distinct()
   }
 
   /** Single-key form of [[bucketCandidates]] — for candidate generators
@@ -541,12 +544,6 @@ object Dedup {
     * self-join is quadratic in the bucket size. */
   private[graft] def bucketCandidates(rows: DataFrame, key: String): DataFrame =
     bucketCandidates(rows.withColumn("__band", lit(0)), "__band", key)
-
-  /** Single-key [[bucketCandidatesPlan]] — cache handle exposed, for
-    * per-micro-batch callers (see the two-key form). */
-  private[graft] def bucketCandidatesPlan(rows: DataFrame,
-                                          key: String): (DataFrame, DataFrame) =
-    bucketCandidatesPlan(rows.withColumn("__band", lit(0)), "__band", key)
 
   /** MinHash + LSH near-dup pairs, exact-verified.
     * Pipeline: per-row shingle arrays → k minhashes (explode + one
@@ -560,7 +557,7 @@ object Dedup {
     * end. No SQL oracle (xxhash64 internals) → rows-only gate; scalatest
     * checks recall vs the exact-Jaccard query. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val docsArr = shingleArrays(Tables.documents(s, dir)).cache()
+    val docsArr = Pins.cache(shingleArrays(Tables.documents(s, dir)))
     val cand = bucketCandidates(xxhashBandBuckets(docsArr), "band", "bucket")
     verifyPairs(cand, docsArr, 0.5).orderBy("a_id", "b_id")
   }
@@ -615,7 +612,7 @@ object Dedup {
     * against an independent engine rather than against our own spec.
     * Same 4-shuffle, candidates-not-n² scale story as [[minhashLsh]]. */
   def minhashMd5(s: SparkSession, dir: String): DataFrame = {
-    val docsArr = shingleArrays(Tables.documents(s, dir)).cache()
+    val docsArr = Pins.cache(shingleArrays(Tables.documents(s, dir)))
     verifyPairs(minhashMd5CandidatesFrom(docsArr), docsArr, 0.5)
       .orderBy("a_id", "b_id")
   }
@@ -676,7 +673,7 @@ object Dedup {
     * expensive stages are the same inverted-index join and signature
     * aggregation the standalone queries already run. */
   def minhashRecall(s: SparkSession, dir: String): DataFrame = {
-    val docsArr = shingleArrays(Tables.documents(s, dir)).cache()
+    val docsArr = Pins.cache(shingleArrays(Tables.documents(s, dir)))
     val cand = minhashMd5CandidatesFrom(docsArr)
     val exact = jaccardPairsFrom(Tables.documents(s, dir))
       .select(col("a_id"), col("b_id"), lit(1L).as("t"))
@@ -817,7 +814,7 @@ object Dedup {
     * computes the SAME hashes both engines agree bit-for-bit even if a
     * collision ever occurred. */
   def winnowNearDup(s: SparkSession, dir: String): DataFrame = {
-    val hashed = winnowHashes(Tables.documents(s, dir)).cache()
+    val hashed = Pins.cache(winnowHashes(Tables.documents(s, dir)))
     val docsArr = hashed.select(col("doc_id"), array_distinct(col("hs")).as("sh"))
     val fp = winnowSelect(hashed)
     val cand = bucketCandidates(fp, "fp")
@@ -983,11 +980,10 @@ object Dedup {
     val w = Window.partitionBy(col("blk"), col("blkval"))
     // min(struct) picks the bucket's lowest doc_id AND its fingerprint in
     // the same pass (struct ordering is lexicographic, doc_id first)
-    val annotated = blocks
+    val annotated = Pins.cache(blocks
       .withColumn("bsz", count(lit(1)).over(w))
       .withColumn("bm", min(struct(col("doc_id"), col("simhash"))).over(w))
-      .filter(col("bsz") >= 2)
-      .cache()
+      .filter(col("bsz") >= 2))
     val small = annotated.filter(col("bsz") <= MaxBucket)
       .select(col("doc_id"), col("simhash"), col("blk"), col("blkval"))
     val smallPairs = small.as("x").join(small.as("y"),
@@ -1194,7 +1190,7 @@ object Dedup {
     * whole accumulated plan each iteration — the classic iterative-DataFrame
     * trap. (On a real cluster use `checkpoint` to reliable storage instead;
     * localCheckpoint keeps blocks on executors, which is exactly right for
-    * local[n].) Superseded label tables are unpersisted as soon as the next
+    * local[n].) Superseded label tables are released as soon as the next
     * round is materialized, so the loop holds at most two label snapshots —
     * not one per round. The driver holds only counts, never rows. */
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
@@ -1233,15 +1229,6 @@ object Dedup {
   private[graft] val CcDriverMaxEdgesKey = "spark.graft.cc.driverMaxEdges"
 
   private def ccLabelsInner(pairs: DataFrame): DataFrame = {
-    // per-round lap timing is opt-in (SPARK_GRAFT_CC_TIMING=1) — the
-    // library proper stays silent; only the bench harness logs
-    val ccTiming = sys.env.contains("SPARK_GRAFT_CC_TIMING")
-    var tMark = System.nanoTime()
-    def lap(tag: String): Unit = {
-      val now = System.nanoTime()
-      if (ccTiming) System.err.println(f"[cc] $tag ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     // Every snapshot below is localCheckpoint + repinStats: the checkpoint
     // truncates DATA lineage, the re-pin truncates STATISTICS lineage.
     // Without the re-pin, each round's carried size estimate is the
@@ -1254,12 +1241,13 @@ object Dedup {
     // (cheap), and node count is round-invariant so it is counted once.
     var nEdges = 0L
     val edges = {
-      val e0 = pairs.union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-        .toDF("src", "dst").localCheckpoint()
+      // ids cast to long here, so every path below (the driver collect's
+      // getLong included) holds for any integral id type
+      val e = pairs.select(col("a_id").cast("long").as("src"), col("b_id").cast("long").as("dst"))
+      val e0 = Pins.checkpoint(e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
       nEdges = e0.count()
       GraftShims.repinStats(e0, nEdges, 16L)
     }
-    lap("edges")
     // SMALL-GRAPH FAST PATH (r20 optimization, guide §1.2 "the distributed
     // algorithm"): the fixpoint below costs 2-4 driver round-trips (plan
     // compile + checkpoint + convergence count per round) REGARDLESS of
@@ -1275,8 +1263,7 @@ object Dedup {
     // before. This is the bounded-collect class the streaming decisions
     // already use (batch-sized, size-guarded), not a corpus-sized pull:
     // the guard reads the count the stats re-pin pays for anyway.
-    val maxDriverEdges = pairs.sparkSession.conf
-      .getOption(CcDriverMaxEdgesKey).map(_.toLong).getOrElse(200000L)
+    val maxDriverEdges = longConf(pairs.sparkSession, CcDriverMaxEdgesKey, 200000L)
     if (nEdges <= maxDriverEdges) {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
@@ -1295,8 +1282,7 @@ object Dedup {
         if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
       }
       val rows = parent.keys.toSeq.sorted.map(id => (id, find(id)))
-      lap(s"driver union-find ($nEdges edges)")
-      GraftShims.unpersistCheckpoint(edges)
+      Pins.release(edges)
       val spark = pairs.sparkSession
       import spark.implicits._
       return rows.toDF("id", "lbl")
@@ -1304,13 +1290,12 @@ object Dedup {
     var nNodes = 0L
     // round 0 for free: label = min(id, min neighbor)
     var labels = {
-      val l0 = edges.groupBy(col("src").as("id"))
-        .agg(least(min(col("dst")), col("src")).as("lbl"))
-        .localCheckpoint()
+      val l0 = Pins.checkpoint(edges.groupBy(col("src").as("id"))
+        .agg(least(min(col("dst")), col("src")).as("lbl")))
       nNodes = l0.count()
       GraftShims.repinStats(l0, nNodes, 16L)
     }
-    lap("init labels")
+    var labelsPin = labels // the snapshot `labels` projects
     var changed = 1L
     var rounds = 0
     // with doubling, 50 rounds covers diameters up to ~2^50 — but if the
@@ -1331,24 +1316,22 @@ object Dedup {
       // the changed-count run on the materialized snapshot — one extra
       // narrow column instead of a second join-against-previous job.
       val next = GraftShims.repinStats(
-        prop.join(
+        Pins.checkpoint(prop.join(
           prev.select(col("id").as("lbl"), col("lbl").as("lbl2")),
           Seq("lbl"), "left")
-        .select(col("id"), coalesce(col("lbl2"), col("lbl")).as("lbl"), col("old"))
-        .localCheckpoint(),
+        .select(col("id"), coalesce(col("lbl2"), col("lbl")).as("lbl"), col("old"))),
         nNodes, 24L) // one row per node at every round — no recount needed
       changed = next.filter(col("lbl") =!= col("old")).count()
-      GraftShims.unpersistCheckpoint(prev)
+      Pins.release(labelsPin)
+      labelsPin = next
       labels = next.drop("old")
-      lap(s"round $rounds (changed=$changed)")
     }
-    GraftShims.unpersistCheckpoint(edges)
+    Pins.release(edges)
     if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge after $rounds rounds ($changed labels still changing)")
-    // the final `labels` snapshot stays persisted — the returned (lazy)
-    // DataFrame reads it; its blocks are reclaimed by the ContextCleaner
-    // once the caller drops the result
+    // the final `labels` snapshot stays pinned — the returned (lazy)
+    // DataFrame reads it, so it moves to the caller's scope
     labels
   }
 
@@ -1514,7 +1497,7 @@ object Dedup {
       .withColumn("bmin", min(col("doc_id")).over(w))
       .filter(col("doc_id") =!= col("bmin"))
       .select(col("bmin").as("a_id"), col("doc_id").as("b_id"))
-    val docsArr = shingleArrays(docs).cache()
+    val docsArr = Pins.cache(shingleArrays(docs))
     val near = verifyPairs(minhashMd5CandidatesFrom(docsArr), docsArr, 0.7)
       .select(col("a_id"), col("b_id"))
     val media = Multimodal.imageNearDupOf(docs, sentinels = false)
@@ -1636,7 +1619,7 @@ object Dedup {
     * unchanged oracle hash-gate proves end-to-end. Output: one row per
     * duplicated batch doc (batch_id, corpus_id, kind ∈ exact|near, jac),
     * fully oracle-checked. */
-  def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
+  def incrementalDedup(s: SparkSession, dir: String): DataFrame = Pins.scope {
     val docs = Tables.documents(s, dir)
     val batch  = docs.filter(col("doc_id") % 7 === 0)
     val corpus = docs.filter(col("doc_id") % 7 =!= 0)
@@ -1648,23 +1631,20 @@ object Dedup {
     // side is read twice (prefix-index explode + exact verify join) —
     // without the caches one action re-runs the full-corpus digest join
     // three times
-    val exact = keyed(batch, "batch_id").join(keyed(corpus, "corpus_id"), Seq("h", "len"))
+    val exact = Pins.cache(keyed(batch, "batch_id").join(keyed(corpus, "corpus_id"), Seq("h", "len"))
       .groupBy("batch_id").agg(min("corpus_id").as("corpus_id"))
       .select(col("batch_id"), col("corpus_id"),
-        lit("exact").as("kind"), lit(1.0).as("jac"))
-      .cache()
+        lit("exact").as("kind"), lit(1.0).as("jac")))
     val rest = batch.join(
       exact.select(col("batch_id").as("doc_id")), Seq("doc_id"), "left_anti")
-    val bArr = shingleArrays(rest).select(
-      col("doc_id").as("batch_id"), col("sh"), size(col("sh")).cast("long").as("nb"))
-      .cache()
-    val cArr = shingleArrays(corpus).select(
-      col("doc_id").as("corpus_id"), col("sh"), size(col("sh")).cast("long").as("nc"))
-      .cache()
+    val bArr = Pins.cache(shingleArrays(rest).select(
+      col("doc_id").as("batch_id"), col("sh"), size(col("sh")).cast("long").as("nb")))
+    val cArr = Pins.cache(shingleArrays(corpus).select(
+      col("doc_id").as("corpus_id"), col("sh"), size(col("sh")).cast("long").as("nc")))
     // exact full-set verification of the prefix-filtered candidates: join
     // both arrays back, score, keep ≥ t, best corpus match per batch doc
     // (highest Jaccard, ties to lowest corpus_id)
-    val (nearCand, nearCaches) = incrementalNearCandidates(bArr, cArr, 0.5,
+    val nearCand = incrementalNearCandidates(bArr, cArr, 0.5,
         "dedup_incremental", "dedup_incremental_banded (the banded standing probe)")
     val best = nearCand
       .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
@@ -1678,12 +1658,8 @@ object Dedup {
       .filter(col("rn") === 1)
       .select(col("batch_id"), col("corpus_id"), lit("near").as("kind"), col("jac"))
     // the output is sliver-sized (≤1 row per duplicated batch doc) —
-    // materialize eagerly and release every cache this run pinned (round
-    // 19, advisor: dfreq/idx leaked for the session lifetime before)
-    val out = exact.unionByName(best).orderBy("batch_id").localCheckpoint()
-    exact.unpersist(); bArr.unpersist(); cArr.unpersist()
-    nearCaches.foreach(_.unpersist())
-    out
+    // materialize eagerly; the scope releases every other pin of this run
+    Pins.checkpoint(exact.unionByName(best).orderBy("batch_id"))
   }
 
   /** Prefix-filtered batch→corpus candidate pairs — the R-S–join form of
@@ -1716,7 +1692,7 @@ object Dedup {
                                                t: Double,
                                                what: String = "incremental near candidates",
                                                alt: String = "the banded standing probe")
-      : (DataFrame, Seq[DataFrame]) = {
+      : DataFrame = {
     // ONE side-tagged union builds both prefix indexes in a single df-join
     // + groupBy pipeline (two per-side pipelines would pay the df join and
     // the per-doc re-sort twice); the cached exploded index is then split
@@ -1731,11 +1707,10 @@ object Dedup {
     // shingles — dfc carries the per-side split) and the prefix-index
     // join reads it — one computation. The prefix ORDER stays the union
     // df: both sides must share one total order; the split is guard-only.
-    val dfreq = sh.groupBy("s")
+    val dfreq = Pins.cache(sh.groupBy("s")
       .agg(count(lit(1)).as("df"),
-        count(when(!col("isB"), lit(1))).as("dfc"))
-      .cache()
-    val idx = sh.join(dfreq, "s")
+        count(when(!col("isB"), lit(1))).as("dfc")))
+    val idx = Pins.cache(sh.join(dfreq, "s")
       .groupBy("id", "isB")
       .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
       .select(col("id"), col("isB"), size(col("os")).cast("long").as("n"),
@@ -1746,8 +1721,7 @@ object Dedup {
       // in the candidate join below
       .select(col("id"), col("isB"), col("n"), posexplode(col("pf")).as(Seq("p", "e")))
       .select(col("id"), col("isB"), col("n"), col("p").cast("long").as("p"),
-        col("e.s").as("s"))
-      .cache()
+        col("e.s").as("s")))
     // in-run saturation guard — computing dfreq is linear in total
     // shingle rows (safe at any vocabulary shape); the CANDIDATE JOIN
     // below is the Σ dfB·dfC stage the guard exists to stop. The
@@ -1781,16 +1755,9 @@ object Dedup {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val prefixRows = guardStats(0)
     val dfreqRows = guardStats(1).max(1L)
-    try {
-      StandingIndex.guardMeanPrefixDf(bArr.sparkSession,
-        prefixRows.toDouble / dfreqRows,
-        "computed in-run before the candidate join", what, alt)
-    } catch { case e: Throwable =>
-      // refusal paths (ScaleBench's especially) repeat without a
-      // clearCache — release the two materialized caches before
-      // propagating, or they accumulate for the session lifetime
-      dfreq.unpersist(); idx.unpersist(); throw e
-    }
+    StandingIndex.guardMeanPrefixDf(bArr.sparkSession,
+      prefixRows.toDouble / dfreqRows,
+      "computed in-run before the candidate join", what, alt)
     // PPJoin positional filter (Xiao et al., WWW 2008 — lossless): a
     // common prefix shingle found at 0-based sorted positions (pb, pc)
     // bounds the pair's possible overlap at 1 + min(bn−pb−1, cn−pc−1);
@@ -1801,17 +1768,17 @@ object Dedup {
     // verification would reject anyway — measured ~2× fewer candidate
     // pairs into the verify join at sf0.1 (r19 optimization, guide §3.2
     // family: prune before the expensive stage).
-    val cand = idx.filter(col("isB"))
+    idx.filter(col("isB"))
       .select(col("id").as("batch_id"), col("n").as("bn"), col("p").as("pb"), col("s"))
       .join(idx.filter(!col("isB"))
         .select(col("id").as("corpus_id"), col("n").as("cn"), col("p").as("pc"), col("s")), "s")
       .filter(col("bn") * t <= col("cn") && col("cn") * t <= col("bn"))
-      // algebraic form of the overlap bound (see [[jaccardPairsPrefixFrom]]):
-      // identical decisions at t = 0.5, no ceil-of-double FP edge for other t
+      // overlap bound without a division (see [[jaccardPairsPrefixFrom]]):
+      // provably exact at the shipped t = 0.5 only — both sides are
+      // rounded doubles
       .filter((lit(1L) + least(col("bn") - col("pb") - 1L, col("cn") - col("pc") - 1L))
         * lit(1 + t) >= lit(t) * (col("bn") + col("cn")))
       .select("batch_id", "corpus_id").distinct()
-    (cand, Seq(dfreq, idx))
   }
 
   val incrementalDedupSql: String =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -154,8 +155,8 @@ object Modern {
     * this twin is the auditable form. */
   def approxTopKMd5(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = Tables.documents(s, dir)
-      .select(explode(split(col("text"), " ")).as("tok")).cache()
+    val toks = Pins.cache(Tables.documents(s, dir)
+      .select(explode(split(col("text"), " ")).as("tok")))
     val rows = (0 until CmD).toDF("r")
     val keyed = toks.crossJoin(broadcast(rows))
       .select(col("tok"), col("r"),

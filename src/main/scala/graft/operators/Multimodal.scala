@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -689,7 +690,7 @@ object Multimodal {
     * rangepartitioning Exchange; query-level registrations sort at their
     * own tail, r20). */
   private[graft] def imageNearDupOf(docs: DataFrame, sentinels: Boolean): DataFrame = {
-    val hashes = hashesOfMedia(mediaOf(docs, sentinels)).cache()
+    val hashes = Pins.cache(hashesOfMedia(mediaOf(docs, sentinels)))
     val bands = hashes.selectExpr("doc_id",
       "stack(4, 0, ahash_lo % 65536, 1, ahash_lo div 65536, " +
         "2, ahash_hi % 65536, 3, ahash_hi div 65536) AS (blk, blkval)")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -103,18 +104,14 @@ object Pipeline {
   /** The banded near-dup pair generator over the exact survivors —
     * stage 2 of [[keptDocsLsh]] and [[funnelReportLsh]] (package-wide so
     * the streaming-fold specs can rebuild the SAME banded kept state). */
-  private[graft] def bandedNearPairs(exact: DataFrame): DataFrame = {
-    val arr = Dedup.shingleArrays(exact).cache()
-    // localCheckpoint is EAGER: the verified pair set (two longs per
-    // row, tiny vs the shingle arrays) is materialized right here, so
-    // the arr cache can be released immediately instead of living until
-    // the ContextCleaner gets to it — the downstream CC fixpoint
+  private[graft] def bandedNearPairs(exact: DataFrame): DataFrame = Pins.scope {
+    val arr = Pins.cache(Dedup.shingleArrays(exact))
+    // the checkpoint is EAGER: the verified pair set (two longs per row,
+    // tiny vs the shingle arrays) is materialized right here, so the scope
+    // releases the arr cache on return — the downstream CC fixpoint
     // re-checkpoints and repins its own edge stats anyway
-    val pairs = Dedup.verifyPairs(Dedup.minhashMd5CandidatesFrom(arr), arr, 0.5)
-      .select("a_id", "b_id")
-      .localCheckpoint()
-    arr.unpersist()
-    pairs
+    Pins.checkpoint(Dedup.verifyPairs(Dedup.minhashMd5CandidatesFrom(arr), arr, 0.5)
+      .select("a_id", "b_id"))
   }
 
   private def keptDocsVia(s: SparkSession, dir: String)
@@ -198,23 +195,22 @@ object Pipeline {
     * intentionally differs from re-curating base ∪ batch from scratch
     * (CC components cannot bridge through dropped docs); the oracle pins
     * the incremental semantics themselves, row-for-row. */
-  def curateIncremental(s: SparkSession, dir: String): DataFrame = {
+  def curateIncremental(s: SparkSession, dir: String): DataFrame = Pins.scope {
     val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
     val base  = corpus.filter(col("doc_id") % 7 =!= 0)
-    val batch = corpus.filter(col("doc_id") % 7 === 0).cache()
+    val batch = Pins.cache(corpus.filter(col("doc_id") % 7 === 0))
     // the per-doc quality flags serve BOTH the base-kept build and the
     // batch's own stage 3/4 — compute the corpus text scans once
-    val rep = QualityFilters.repetitionFlagsOf(Tables.documents(s, dir))
-      .select("doc_id").cache()
-    val con = QualityFilters.decontaminateFlags(s, dir).select("doc_id").cache()
+    val rep = Pins.cache(QualityFilters.repetitionFlagsOf(Tables.documents(s, dir))
+      .select("doc_id"))
+    val con = Pins.cache(QualityFilters.decontaminateFlags(s, dir).select("doc_id"))
     // the standing kept state rides the BANDED pair stage (round 16; it
     // rode the exact Σ df² join before, which made this the suite's most
     // expensive query at 18.9 s and a 6.5×-at-10× growth term): the same
     // swap [[curateLsh]] made on stage 2, with the oracle's base-kept
     // chain banded to match — the hash gate still covers the build
     // semantics end-to-end, now of the plan a deployment would run
-    val kept = keptDocsOf(s, dir, base, Some(rep), Some(con))(bandedNearPairs)
-      .cache()
+    val kept = Pins.cache(keptDocsOf(s, dir, base, Some(rep), Some(con))(bandedNearPairs))
 
     def keyed(d: DataFrame, as: String): DataFrame = d.select(
       col("doc_id").as(as), md5(col("text")).as("h"),
@@ -242,55 +238,52 @@ object Pipeline {
     // subtree (prefix candidates + array verify, the query's hot stage)
     // once per branch — exchange reuse catches some but not all of the
     // repeats (measured: pinning these cut the full query ~17.6 → ~11 s)
-    val r2 = r1k.filter(col("doc_id") === col("keep_id")).drop("keep_id")
-      .cache()
+    val r2 = Pins.cache(r1k.filter(col("doc_id") === col("keep_id")).drop("keep_id"))
 
     // 2a. near vs the standing kept set — prefix-filtered R-S candidates,
     // exact full-set verification, best match wins
-    val bArr = Dedup.shingleArrays(r2).select(
+    val bArr = Pins.cache(Dedup.shingleArrays(r2).select(
       col("doc_id").as("batch_id"), col("sh"),
-      size(col("sh")).cast("long").as("nb")).cache()
-    val cArr = Dedup.shingleArrays(kept).select(
+      size(col("sh")).cast("long").as("nb")))
+    val cArr = Pins.cache(Dedup.shingleArrays(kept).select(
       col("doc_id").as("corpus_id"), col("sh"),
-      size(col("sh")).cast("long").as("nc")).cache()
-    val (nearCand, nearCaches) = Dedup.incrementalNearCandidates(bArr, cArr, 0.5,
+      size(col("sh")).cast("long").as("nc")))
+    // the inner scope releases the prefix index + dfreq caches, which feed
+    // ONLY the candidate join, as soon as nearBase's eager checkpoint has
+    // materialized it
+    val nearBase = Pins.scope {
+      val nearCand = Dedup.incrementalNearCandidates(bArr, cArr, 0.5,
         "pipeline_curate_incremental",
         "pipeline_curate_incremental_banded (the banded standing probe)")
-    val nearBase = nearCand
-      .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
-      .join(cArr.select(col("corpus_id"), col("sh").as("sc"), col("nc")), "corpus_id")
-      .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
-      .withColumn("jac",
-        col("c").cast("double") / (col("nb") + col("nc") - col("c")))
-      .filter(col("jac") >= 0.5)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
-      .filter(col("rn") === 1)
-      .select(col("batch_id").as("doc_id"), lit("near_base").as("decision"),
-        col("corpus_id").as("ref_id"), col("jac"), nullSplit)
       // eager + tiny (≤1 row per batch doc): cuts the probe lineage so it
       // runs exactly once
-      .localCheckpoint()
-    // the prefix index + dfreq caches fed ONLY the candidate join, which
-    // nearBase's eager checkpoint just materialized — release them here
-    // (round 19, advisor: they leaked for the session lifetime before)
-    nearCaches.foreach(_.unpersist())
-    val r3 = r2.join(nearBase.select("doc_id"), Seq("doc_id"), "left_anti")
-      .cache()
+      Pins.checkpoint(nearCand
+        .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
+        .join(cArr.select(col("corpus_id"), col("sh").as("sc"), col("nc")), "corpus_id")
+        .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
+        .withColumn("jac",
+          col("c").cast("double") / (col("nb") + col("nc") - col("c")))
+        .filter(col("jac") >= 0.5)
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
+        .filter(col("rn") === 1)
+        .select(col("batch_id").as("doc_id"), lit("near_base").as("decision"),
+          col("corpus_id").as("ref_id"), col("jac"), nullSplit))
+    }
+    val r3 = Pins.cache(r2.join(nearBase.select("doc_id"), Seq("doc_id"), "left_anti"))
 
     // 2b. near within the remaining batch — the pipeline's CC collapse.
     // The sliver's shingle arrays are already sitting in the bArr cache
     // (r2 ⊇ r3, shingleArrays is per-row): a semi-join reads them back
     // instead of re-tokenizing r3's texts (r20, guide §5 reuse)
-    val nearBatch = Dedup.ccLabels(
+    val nearBatch = Pins.checkpoint(Dedup.ccLabels(
         Dedup.jaccardPairsFromArrays(bArr
           .join(r3.select(col("doc_id").as("batch_id")), Seq("batch_id"), "left_semi")
           .select(col("batch_id").as("doc_id"), col("sh")))
           .select("a_id", "b_id"))
       .filter(col("id") =!= col("lbl"))
       .select(col("id").as("doc_id"), lit("near_batch").as("decision"),
-        col("lbl").as("ref_id"), nullJac, nullSplit)
-      .localCheckpoint()
+        col("lbl").as("ref_id"), nullJac, nullSplit))
     val r4 = r3.join(nearBatch.select("doc_id"), Seq("doc_id"), "left_anti")
 
     // 3./4. per-doc quality gates, in stage order (flags shared with the
@@ -310,22 +303,11 @@ object Pipeline {
         nullRef, nullJac, col("split"))
 
     // the decision table is tiny (one row per batch doc) — materialize it
-    // eagerly so the four fat caches can be released now rather than at
-    // ContextCleaner leisure (the bandedNearPairs pattern)
-    val out = exactBase.unionByName(exactBatch).unionByName(nearBase)
+    // eagerly; the scope then releases every cache and checkpoint above
+    Pins.checkpoint(exactBase.unionByName(exactBatch).unionByName(nearBase)
       .unionByName(nearBatch).unionByName(repDrop).unionByName(conDrop)
       .unionByName(admitted)
-      .orderBy("doc_id")
-      .localCheckpoint()
-    batch.unpersist(); kept.unpersist(); bArr.unpersist(); cArr.unpersist()
-    rep.unpersist(); con.unpersist(); r2.unpersist(); r3.unpersist()
-    // the intermediate checkpoints fed `out`, which is itself checkpointed
-    // above — release their blocks now instead of at ContextCleaner
-    // leisure (they linger in the block manager across long banded
-    // streams / bench loops otherwise; the deleteProbeTables pattern)
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(nearBase)
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(nearBatch)
-    out
+      .orderBy("doc_id"))
   }
 
   /** Shared head of the kept-CTE chain (corpus → exact survivors →
@@ -928,7 +910,7 @@ object Pipeline {
       col("nc").as("an"))
     val bIdx = postings.select(col("s"), col("corpus_id").as("b_id"),
       col("nc").as("bn"))
-    val pairs = aIdx.join(bIdx, "s")
+    val pairs = Pins.cache(aIdx.join(bIdx, "s")
       .filter(col("a_id") < col("b_id") &&
         col("an") * LeakThreshold <= col("bn") &&
         col("bn") * LeakThreshold <= col("an"))
@@ -937,8 +919,7 @@ object Pipeline {
       .withColumn("jac",
         col("c").cast("double") / (col("an") + col("bn") - col("c")))
       .filter(col("jac") >= LeakThreshold)
-      .select("a_id", "b_id", "jac")
-      .cache()
+      .select("a_id", "b_id", "jac"))
     val curatedPairs = pairs
       .join(keptIds.withColumnRenamed("doc_id", "a_id"), Seq("a_id"), "left_semi")
       .join(keptIds.withColumnRenamed("doc_id", "b_id"), Seq("b_id"), "left_semi")
@@ -1031,15 +1012,15 @@ object Pipeline {
     val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
     val w = Window.partitionBy(md5(col("text")), length(col("text")))
       .orderBy(col("doc_id"))
-    val exact = corpus.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn").cache()
+    val exact = Pins.cache(corpus.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn"))
     val nonReps = Dedup.ccLabels(nearPairsOf(exact))
       .filter(col("id") =!= col("lbl"))
       .select(col("id").as("doc_id"))
-    val afterNear = exact.join(nonReps, Seq("doc_id"), "left_anti").cache()
-    val afterRep = afterNear.join(
+    val afterNear = Pins.cache(exact.join(nonReps, Seq("doc_id"), "left_anti"))
+    val afterRep = Pins.cache(afterNear.join(
       QualityFilters.repetitionFlagsOf(Tables.documents(s, dir)).select("doc_id"),
-      Seq("doc_id"), "left_anti").cache()
+      Seq("doc_id"), "left_anti"))
     val afterDecon = afterRep.join(
       QualityFilters.decontaminateFlags(s, dir).select("doc_id"),
       Seq("doc_id"), "left_anti")
@@ -1091,10 +1072,9 @@ object Pipeline {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"),
         split(col("text"), " ").as("toks"), md5(col("text")).as("h"))
-    val perDoc = docs.select(col("source"), col("lang"), col("h"),
+    val perDoc = Pins.cache(docs.select(col("source"), col("lang"), col("h"),
       size(col("toks")).cast("long").as("n_toks"),
-      DataPrep.splitLabelOf(DataPrep.splitBucketCol).as("split"))
-      .cache() // read by four card branches; vocabulary branch aside, text is scanned once
+      DataPrep.splitLabelOf(DataPrep.splitBucketCol).as("split"))) // read by four card branches; vocabulary branch aside, text is scanned once
     val totals = perDoc.agg(
       count(lit(1)).as("n_docs"),
       countDistinct(col("source")).as("n_sources"),

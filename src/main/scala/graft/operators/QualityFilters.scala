@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -589,8 +590,8 @@ object QualityFilters {
     val prevTag = sc.getLocalProperty(Dedup.CcFixpointTag)
     sc.setLocalProperty(Dedup.CcFixpointTag, "1")
     try {
-      var w = s.range(1).select(lit(0.0).as("w1"), lit(0.0).as("w2"),
-        lit(0.0).as("w3"), lit(0.0).as("w4")).localCheckpoint()
+      var w = Pins.checkpoint(s.range(1).select(lit(0.0).as("w1"), lit(0.0).as("w2"),
+        lit(0.0).as("w3"), lit(0.0).as("w4")))
       for (_ <- 1 to LrSteps) {
         val sig = lit(1.0) / (lit(1.0) + exp(-lrScore))
         def grad(xj: org.apache.spark.sql.Column, as: String) =
@@ -600,20 +601,19 @@ object QualityFilters {
           .agg(grad(col("x1"), "g1"), grad(col("x2"), "g2"),
                grad(col("x3"), "g3"), grad(lit(1.0), "g4"))
         val prev = w
-        w = prev.crossJoin(g).select(
+        w = Pins.checkpoint(prev.crossJoin(g).select(
           round(col("w1") - lit(LrRate) * col("g1"), 9).as("w1"),
           round(col("w2") - lit(LrRate) * col("g2"), 9).as("w2"),
           round(col("w3") - lit(LrRate) * col("g3"), 9).as("w3"),
-          round(col("w4") - lit(LrRate) * col("g4"), 9).as("w4"))
-          .localCheckpoint()
-        org.apache.spark.sql.GraftShims.unpersistCheckpoint(prev)
+          round(col("w4") - lit(LrRate) * col("g4"), 9).as("w4")))
+        Pins.release(prev)
       }
       w
     } finally sc.setLocalProperty(Dedup.CcFixpointTag, prevTag)
   }
 
   def qualityLrFit(s: SparkSession, dir: String): DataFrame = {
-    val f = lrFeatures(s, dir).cache()
+    val f = Pins.cache(lrFeatures(s, dir))
     val w = lrWeights(s, f)
     val acc = f.crossJoin(broadcast(w))
       .agg(count(when((lrScore >= 0) === (col("y") === 1.0), 1)).cast("double").as("value"))
@@ -631,7 +631,7 @@ object QualityFilters {
     * its single un-iterated exp sits ~10 orders below that grid). One
     * broadcast join of the 1-row weight table against the feature scan. */
   def qualityLrScores(s: SparkSession, dir: String): DataFrame = {
-    val f = lrFeatures(s, dir).cache()
+    val f = Pins.cache(lrFeatures(s, dir))
     f.crossJoin(broadcast(lrWeights(s, f)))
       .select(col("doc_id"),
         round(lit(1.0) / (lit(1.0) + exp(-lrScore)), 6).as("score"),
@@ -700,7 +700,7 @@ object QualityFilters {
     * All metrics are ratios of exact integer counts computed in double,
     * rounded at 6 — fully hash-gated through the shared descent chain. */
   def qualityLrEval(s: SparkSession, dir: String): DataFrame = {
-    val f = lrFeatures(s, dir).cache()
+    val f = Pins.cache(lrFeatures(s, dir))
     f.crossJoin(broadcast(lrWeights(s, f)))
       .select(col("y"), (lrScore >= 0).as("pred"))
       .agg(

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.Pins
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed global row-numbering.
   *
@@ -21,12 +21,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Ranks {
 
-  // every persisted sort, so long-lived sessions can reclaim the blocks
-  // deterministically via [[releaseAll]] instead of waiting for driver GC
-  // + ContextCleaner (repeat callers — vocabEncode, qualitySignalAgreement
-  // — would otherwise accumulate corpus-sized storage within a session)
-  private val live = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[Row]]
-
   /** `df` with an `out` column = 1-based global row number under
     * `sortCols` (which must define a total order for determinism). */
   def globalRowNumber(df: DataFrame, out: String, sortCols: Column*): DataFrame = {
@@ -39,21 +33,17 @@ object Ranks {
     // partition — i.e. it runs the complete post-shuffle sort. Persist the
     // sorted rows so that first pass materializes the sort once and both
     // the size job and every downstream action reuse it; without this,
-    // each action on the result re-sorts the corpus.
-    val sorted = df.orderBy(sortCols: _*).rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    live.add(sorted)
+    // each action on the result re-sorts the corpus. The sort is a pin
+    // (graft.Pins), so repeat callers — vocabEncode,
+    // qualitySignalAgreement — release it with their scope or the
+    // harness's releaseAll instead of accumulating corpus-sized storage.
+    val sorted = graft.Pins.cache(df.orderBy(sortCols: _*).rdd)
     val schema = df.schema.add(out, LongType, nullable = false)
     val rdd = sorted.zipWithIndex()
       .map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
     df.sparkSession.createDataFrame(rdd, schema)
   }
 
-  /** Unpersist every sort this object has persisted. Call between
-    * queries (the harness loops do) or after the consumers of a returned
-    * frame have run — a released frame still WORKS if re-executed, it
-    * just re-sorts. Non-blocking: block removal proceeds async. */
-  def releaseAll(): Unit = {
-    var r = live.poll()
-    while (r != null) { r.unpersist(blocking = false); r = live.poll() }
-  }
+  /** Forwarder kept for callers outside `src/main`: see [[graft.Pins.releaseAll]]. */
+  def releaseAll(): Unit = graft.Pins.releaseAll()
 }

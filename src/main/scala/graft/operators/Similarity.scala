@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,14 +60,13 @@ object Similarity {
     * parquet footer metadata driver-side ([[Tables.footerRowCount]],
     * cached) — zero Spark jobs, so guarded builders keep the one-action-
     * per-query contract. */
-  private val MaxExactRowsKey = "spark.graft.exactBaseline.maxRows"
   private def guardExactBaseline(s: SparkSession, dir: String,
                                  what: String, annAlt: String): Unit = {
-    val max = s.conf.getOption(MaxExactRowsKey).map(_.toLong).getOrElse(100000L)
+    val max = Dedup.longConf(s, Dedup.MaxExactRowsKey, 100000L)
     val n = Tables.footerRowCount(s, dir, "embeddings")
     require(n <= max,
       s"$what is an exact baseline (quadratic pair space) guarded at $max rows; " +
-      s"the corpus has $n. Use $annAlt at scale, or raise $MaxExactRowsKey deliberately.")
+      s"the corpus has $n. Use $annAlt at scale, or raise ${Dedup.MaxExactRowsKey} deliberately.")
   }
 
   // ---------------------------------------------------- brute-force top-k
@@ -159,7 +159,7 @@ object Similarity {
     * recall vs brute force. Probing is query-side only: the corpus keeps
     * one bucket id per vector, queries explode ×(Planes+1). */
   def lshTopK(s: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(s, dir).withColumn("bucket", srpBucket(col("v"))).cache()
+    val e = Pins.cache(embeddings(s, dir).withColumn("bucket", srpBucket(col("v"))))
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket"))
       .withColumn("bucket",
@@ -186,7 +186,7 @@ object Similarity {
     * retrieval with its top-k tie-breaks). xxhash [[lshTopK]] stays the
     * hot path. */
   def lshMd5TopK(s: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(s, dir).withColumn("bucket", srpMd5Bucket(col("v"))).cache()
+    val e = Pins.cache(embeddings(s, dir).withColumn("bucket", srpMd5Bucket(col("v"))))
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket"))
       .withColumn("bucket",
@@ -315,7 +315,7 @@ object Similarity {
     * carrying (vec_id, v, bucket) — shared by the xxhash hot path and the
     * md5 oracle twin. */
   private def srpNearDupPairs(withBuckets: DataFrame): DataFrame = {
-    val e = withBuckets.cache()
+    val e = Pins.cache(withBuckets)
     val probes = e.select(col("vec_id").as("a_id"), col("bucket"))
       .withColumn("bucket",
         explode(array(col("bucket") +:
@@ -421,7 +421,7 @@ object Similarity {
   /** Shared candidate+verify core of [[cosineNearDupSignGrid]] and
     * [[semanticDedup]]: (a_id, b_id, score) with exact cosine ≥ 0.4. */
   private def signGridPairs(s: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(s, dir).withColumn("bucket", signGridBucket(col("v"))).cache()
+    val e = Pins.cache(embeddings(s, dir).withColumn("bucket", signGridBucket(col("v"))))
     val probes = e.select(col("vec_id").as("a_id"), col("bucket"))
       .withColumn("bucket",
         explode(array(col("bucket") +:
@@ -473,7 +473,7 @@ object Similarity {
     * already-proven operators: sign-grid bucketed cosine pairs
     * ([[signGridPairs]] — deterministic cells; candidates follow cell
     * occupancy, which is n/2⁸ once the fixed grid saturates, so this
-    * form is tripwired past [[MaxExactRowsKey]] and the at-scale form is
+    * form is tripwired past [[Dedup.MaxExactRowsKey]] and the at-scale form is
     * IVF-clustered — see [[guardExactBaseline]]) → connected components
     * over the pair graph
     * (min-label propagation with pointer doubling, O(log diameter) rounds
@@ -633,13 +633,14 @@ object Similarity {
     * FROZEN into a standing bucketed table, delta-sized per-run work —
     * is the GATED [[semanticDedupIvfIndexed]] (round 18), so the Lloyd
     * term never reaches a day-2 pipeline. */
-  def semanticDedupIvf(s: SparkSession, dir: String): DataFrame = {
+  def semanticDedupIvf(s: SparkSession, dir: String): DataFrame = Pins.scope {
     // cached: the within-cell pair stage references the assignment on
     // BOTH self-join sides, and the Lloyd chain's broadcast stages are
     // not covered by exchange reuse — without the cache the 3-round fit
     // executed twice (r19 optimization; ccLabels materializes the pair
-    // edges eagerly right below, so the cache is released before return)
-    val assigned = kmeansAssignments(s, dir, KmeansIters).cache()
+    // edges eagerly right below, so the result no longer reads the cache
+    // and the scope releases it)
+    val assigned = Pins.cache(kmeansAssignments(s, dir, KmeansIters))
     val pairs = assigned.select(col("c_id"), col("vec_id").as("a_id"), col("v").as("va"))
       .join(assigned.select(col("c_id"), col("vec_id").as("b_id"), col("v").as("vb")),
             Seq("c_id"))
@@ -648,7 +649,6 @@ object Similarity {
       .filter(col("score") >= 0.4)
     val labels = Dedup.ccLabels(pairs.select("a_id", "b_id"))
       .withColumnRenamed("id", "vec_id")
-    assigned.unpersist()
     embeddings(s, dir).select(col("vec_id"))
       .join(labels, Seq("vec_id"), "left")
       .select(col("vec_id"),
@@ -755,11 +755,9 @@ object Similarity {
   private[graft] def deleteSemDedupFor(s: SparkSession, tag: String,
                                        ids: DataFrame): Unit =
     semBuilt.synchronized {
-      val kept = s.table(s"graft_idx_sema_$tag")
-        .join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti")
-        .localCheckpoint()
-      StandingIndex.save(kept, tag, "sema", "c_id", "overwrite")
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(kept)
+      Pins.scope(StandingIndex.save(Pins.checkpoint(s.table(s"graft_idx_sema_$tag")
+        .join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti")),
+        tag, "sema", "c_id", "overwrite"))
     }
 
   private lazy val semLog = org.slf4j.LoggerFactory.getLogger("graft.Similarity")
@@ -886,25 +884,19 @@ object Similarity {
     * delta frame — the lifecycle specs probe appended/deleted indexes
     * through this (the [[StandingIndex]] `...For` pattern). The decision
     * table is delta-sized (one row per delta vector) — materialize it
-    * eagerly and release the fat caches now (the
-    * [[StandingIndex.curateIncrementalIndexedFor]] pattern: this runs
-    * once per micro-batch on the semantic stream, and leaked caches
-    * would accumulate per batch). */
+    * eagerly so the scope releases the plan's pins now (this runs once
+    * per micro-batch on the semantic stream). */
   private[graft] def semanticDedupIvfIndexedFor(s: SparkSession, tag: String,
-                                                delta: DataFrame): DataFrame = {
-    val (out0, caches) = semanticDedupIvfIndexedPlan(s, tag, delta)
-    val out = out0.localCheckpoint()
-    caches.foreach(_.unpersist())
-    out
-  }
+                                                delta: DataFrame): DataFrame =
+    Pins.scope(Pins.checkpoint(semanticDedupIvfIndexedPlan(s, tag, delta)))
 
-  /** The probe's LAZY plan + its cache handles — split out so the
-    * plan-pin spec can assert the `sema` scan stays bucketed (the public
-    * form checkpoints the delta-sized result, which hides the joins
-    * behind an ExistingRDD scan) — the [[StandingIndex]] plan/probe
-    * convention. */
+  /** The probe's LAZY plan — split out so the plan-pin spec can assert the
+    * `sema` scan stays bucketed (the public form checkpoints the
+    * delta-sized result, which hides the joins behind an ExistingRDD scan)
+    * — the [[StandingIndex]] plan/probe convention. Its pins belong to the
+    * caller's scope. */
   private[graft] def semanticDedupIvfIndexedPlan(s: SparkSession, tag: String,
-      delta: DataFrame): (DataFrame, Seq[DataFrame]) = {
+      delta: DataFrame): DataFrame = {
     val cent = s.table(s"graft_idx_semc_$tag")
     val lists = s.table(s"graft_idx_sema_$tag")
     // acceptance guard on the FROZEN quantizer (round 19): a drifted or
@@ -917,18 +909,17 @@ object Similarity {
     // frozen assignment: the tiny centroid table broadcasts; one narrow
     // pass over the delta. Cached: feeds stage 1, the anti-join, and
     // both sides of the stage-2 pair join.
-    val dAssigned = assignToCentroids(delta, cent).cache()
+    val dAssigned = Pins.cache(assignToCentroids(delta, cent))
     val wBest = Window.partitionBy(col("vec_id"))
       .orderBy(col("score").desc, col("b_id"))
-    val baseHit = dAssigned
+    val baseHit = Pins.cache(dAssigned
       .join(lists.select(col("c_id"), col("vec_id").as("b_id"), col("v").as("bv")),
             Seq("c_id"))
       .withColumn("score", cosine(col("v"), col("bv")))
       .filter(col("score") >= 0.4)
       .withColumn("rn", row_number().over(wBest))
       .filter(col("rn") === 1)
-      .select(col("vec_id"), col("b_id").as("base_rep"))
-      .cache()
+      .select(col("vec_id"), col("b_id").as("base_rep")))
     val r2 = dAssigned.join(baseHit.select("vec_id"), Seq("vec_id"), "left_anti")
     // stage-2 within-cell pairs ride the SAME star-capped candidate
     // generator as every sibling family ([[Dedup.MaxBucket]], round 19):
@@ -940,15 +931,14 @@ object Similarity {
     // connected through the hub — CC recovers the full component), and
     // every candidate still passes the exact cosine before any decision.
     // The cap is mirrored in [[semanticDedupIvfIndexedSql]].
-    val (cand, candCache) = Dedup.bucketCandidatesPlan(
+    val pairs = Dedup.bucketCandidates(
       r2.select(col("vec_id").as("doc_id"), col("c_id")), "c_id")
-    val pairs = cand
       .join(r2.select(col("vec_id").as("a_id"), col("v").as("va")), Seq("a_id"))
       .join(r2.select(col("vec_id").as("b_id"), col("v").as("vb")), Seq("b_id"))
       .filter(cosine(col("va"), col("vb")) >= 0.4)
     val ccRep = Dedup.ccLabels(pairs.select("a_id", "b_id"))
       .withColumnRenamed("id", "vec_id")
-    val out = delta.select(col("vec_id"))
+    delta.select(col("vec_id"))
       .join(baseHit, Seq("vec_id"), "left")
       .join(ccRep, Seq("vec_id"), "left")
       .select(col("vec_id"),
@@ -956,7 +946,6 @@ object Similarity {
         (coalesce(col("base_rep"), col("lbl"), col("vec_id")) === col("vec_id"))
           .as("kept"))
       .orderBy("vec_id")
-    (out, Seq(dAssigned, baseHit, candCache))
   }
 
   /** [[semanticDedupIvfIndexed]]'s twin: the frozen base quantizer +
@@ -1397,11 +1386,9 @@ object Similarity {
   private[graft] def deleteAnnFor(s: SparkSession, tag: String,
                                   ids: DataFrame): Unit =
     annBuilt.synchronized {
-      val kept = s.table(s"graft_idx_anna_$tag")
-        .join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti")
-        .localCheckpoint()
-      StandingIndex.save(kept, tag, "anna", "c_id", "overwrite")
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(kept)
+      Pins.scope(StandingIndex.save(Pins.checkpoint(s.table(s"graft_idx_anna_$tag")
+        .join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti")),
+        tag, "anna", "c_id", "overwrite"))
     }
 
   /** Dir-keyed convenience over [[deleteAnnFor]]. */
@@ -1540,7 +1527,7 @@ object Similarity {
     * [[pruneGroupPrototypes]] ranks within. */
   private[graft] def kmeansAssignments(s: SparkSession, dir: String, iters: Int): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    val e = embeddings(s, dir).select(col("vec_id"), col("v")).cache()
+    val e = Pins.cache(embeddings(s, dir).select(col("vec_id"), col("v")))
     // argmin per vector as min(struct(d2, c_id)) — lexicographic struct
     // ordering is exactly the rank-1 window's (d2 asc, ties to c_id), and
     // the partial aggregate collapses the n·k broadcast-join rows to one
@@ -1705,11 +1692,10 @@ object Similarity {
     import graft.functions.VectorFunctions.dot
     def d2(v: org.apache.spark.sql.Column, sv: org.apache.spark.sql.Column) =
       dot(v, v) - lit(2.0) * dot(v, sv) + dot(sv, sv)
-    val e = embeddings(s, dir).select(col("vec_id"), col("v")).cache()
-    var sel = e.orderBy("vec_id").limit(1)
+    val e = Pins.cache(embeddings(s, dir).select(col("vec_id"), col("v")))
+    var sel = Pins.checkpoint(e.orderBy("vec_id").limit(1)
       .select(col("vec_id"), col("v"), lit(1L).as("s_rank"),
-        lit(null).cast("double").as("dmin"))
-      .localCheckpoint()
+        lit(null).cast("double").as("dmin")))
     // Running min-distance-to-selected per remaining vector, updated with
     // ONLY the newest center each round (r19 optimization): the earlier
     // form re-joined the full corpus against the ENTIRE selected set every
@@ -1722,33 +1708,30 @@ object Similarity {
     // DuckDB twin gate that. Each round's frame is one broadcast-scalar
     // join over the cached corpus, checkpointed under the sanctioned
     // eager-job tag as before.
-    var dmin = e
+    var dmin = Pins.checkpoint(e
       .join(broadcast(sel.select(col("vec_id").as("s_id"), col("v").as("sv"))), lit(true))
       .filter(col("vec_id") =!= col("s_id"))
-      .select(col("vec_id"), col("v"), d2(col("v"), col("sv")).as("dmin"))
-      .localCheckpoint()
+      .select(col("vec_id"), col("v"), d2(col("v"), col("sv")).as("dmin")))
     for (i <- 2 to KcenterK) {
-      val next = dmin
+      val next = Pins.checkpoint(dmin
         .orderBy(col("dmin").desc, col("vec_id"))
         .limit(1)
-        .select(col("vec_id"), col("v"), lit(i.toLong).as("s_rank"), col("dmin"))
-        .localCheckpoint()
+        .select(col("vec_id"), col("v"), lit(i.toLong).as("s_rank"), col("dmin")))
       val prevSel = sel
-      sel = prevSel.unionByName(next).localCheckpoint()
-      GraftShims.unpersistCheckpoint(prevSel)
+      sel = Pins.checkpoint(prevSel.unionByName(next))
+      Pins.release(prevSel)
       if (i < KcenterK) {
         val prevD = dmin
-        dmin = prevD
+        dmin = Pins.checkpoint(prevD
           .join(broadcast(next.select(col("vec_id").as("s_id"), col("v").as("sv"))),
             lit(true))
           .filter(col("vec_id") =!= col("s_id"))
           .select(col("vec_id"), col("v"),
-            least(col("dmin"), d2(col("v"), col("sv"))).as("dmin"))
-          .localCheckpoint()
-        GraftShims.unpersistCheckpoint(prevD)
+            least(col("dmin"), d2(col("v"), col("sv"))).as("dmin")))
+        Pins.release(prevD)
       }
     }
-    GraftShims.unpersistCheckpoint(dmin)
+    Pins.release(dmin)
     sel.select(col("s_rank"), col("vec_id"), round(col("dmin"), 6).as("dmin"))
       .orderBy("s_rank")
   }
@@ -1823,24 +1806,22 @@ object Similarity {
   private def mmrInner(s: SparkSession, dir: String): DataFrame = {
     val cosine = graft.functions.VectorFunctions.cosine _
     guardExactBaseline(s, dir, "ann_mmr_topk", "ann_ivf_topk (as pool source)")
-    val e = embeddings(s, dir).select(col("vec_id"), col("v")).cache()
+    val e = Pins.cache(embeddings(s, dir).select(col("vec_id"), col("v")))
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val wQ = Window.partitionBy(col("q_id")).orderBy(col("rel").desc, col("n_id"))
-    val pool = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val pool = Pins.checkpoint(e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("rel", cosine(col("qv"), col("v")))
       .select(col("q_id"), col("vec_id").as("n_id"), col("v"), col("rel"))
       .withColumn("rk", row_number().over(wQ))
-      .filter(col("rk") <= MmrPool).drop("rk")
-      .localCheckpoint()
+      .filter(col("rk") <= MmrPool).drop("rk"))
     // first pick: pure relevance (empty selected set → diversity term 0)
-    var sel = pool
+    var sel = Pins.checkpoint(pool
       .withColumn("mmr", lit(MmrLambda) * col("rel"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("mmr").desc, col("n_id"))))
       .filter(col("rk") === 1)
-      .select(col("q_id"), col("n_id"), col("v"), lit(1L).as("rnk"), col("mmr"))
-      .localCheckpoint()
+      .select(col("q_id"), col("n_id"), col("v"), lit(1L).as("rnk"), col("mmr")))
     // Remaining pool rows per query with the RUNNING diversity term —
     // the kcenterInner recurrence grouped by query (r19 optimization):
     // max_{s∈selected} cos(c, s) updates as greatest(prev, cos(c, new))
@@ -1850,37 +1831,34 @@ object Similarity {
     // value (no re-association), and `rel` is functionally determined by
     // (q_id, n_id), so picks, ranks and reported mmr are unchanged —
     // spec- and oracle-gated as before.
-    var cand = pool
+    var cand = Pins.checkpoint(pool
       .join(sel.select(col("q_id"), col("n_id").as("s_id"), col("v").as("sv")), "q_id")
       .filter(col("n_id") =!= col("s_id"))
       .select(col("q_id"), col("n_id"), col("v"), col("rel"),
-        cosine(col("v"), col("sv")).as("maxsim"))
-      .localCheckpoint()
+        cosine(col("v"), col("sv")).as("maxsim")))
     for (r <- 2 to MmrK) {
-      val next = cand
+      val next = Pins.checkpoint(cand
         .withColumn("mmr",
           lit(MmrLambda) * col("rel") - lit(1.0 - MmrLambda) * col("maxsim"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("q_id")).orderBy(col("mmr").desc, col("n_id"))))
         .filter(col("rk") === 1)
-        .select(col("q_id"), col("n_id"), col("v"), lit(r.toLong).as("rnk"), col("mmr"))
-        .localCheckpoint()
+        .select(col("q_id"), col("n_id"), col("v"), lit(r.toLong).as("rnk"), col("mmr")))
       val prevSel = sel
-      sel = prevSel.unionByName(next).localCheckpoint()
-      GraftShims.unpersistCheckpoint(prevSel)
+      sel = Pins.checkpoint(prevSel.unionByName(next))
+      Pins.release(prevSel)
       if (r < MmrK) {
         val prevC = cand
-        cand = prevC
+        cand = Pins.checkpoint(prevC
           .join(next.select(col("q_id"), col("n_id").as("s_id"), col("v").as("sv")),
             "q_id")
           .filter(col("n_id") =!= col("s_id"))
           .select(col("q_id"), col("n_id"), col("v"), col("rel"),
-            greatest(col("maxsim"), cosine(col("v"), col("sv"))).as("maxsim"))
-          .localCheckpoint()
-        GraftShims.unpersistCheckpoint(prevC)
+            greatest(col("maxsim"), cosine(col("v"), col("sv"))).as("maxsim")))
+        Pins.release(prevC)
       }
     }
-    GraftShims.unpersistCheckpoint(cand)
+    Pins.release(cand)
     sel.select(col("q_id"), col("rnk"), col("n_id"), round(col("mmr"), 6).as("mmr"))
       .orderBy("q_id", "rnk")
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -367,17 +368,15 @@ object StandingIndex {
     * (p = "") and the curation index (p = "cur"); the scaladoc invariants
     * on [[deleteFor]] are prefix-independent. */
   private def deleteProbeTables(s: SparkSession, tag: String, ids: DataFrame,
-                                remaining: DataFrame, p: String): Unit = {
+                                remaining: DataFrame, p: String): Unit = Pins.scope {
     markMaintained(s, tag, p)
     val del = ids.select(col("doc_id").as("corpus_id"))
     def tbl(name: String): DataFrame = s.table(s"graft_idx_${p}${name}_$tag")
-    def rewrite(name: String, df: DataFrame, bucketCol: String): Unit = {
-      val snap = df.localCheckpoint()
-      save(snap, tag, s"$p$name", bucketCol, "overwrite")
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(snap)
+    def rewrite(name: String, df: DataFrame, bucketCol: String): Unit = Pins.scope {
+      save(Pins.checkpoint(df), tag, s"$p$name", bucketCol, "overwrite")
     }
-    val affected = tbl("digests")
-      .join(broadcast(del), "corpus_id").select("h", "len").localCheckpoint()
+    val affected = Pins.checkpoint(tbl("digests")
+      .join(broadcast(del), "corpus_id").select("h", "len"))
     val fallback = remaining
       .select(md5(col("text")).as("h"), length(col("text")).as("len"),
         col("doc_id").as("corpus_id"))
@@ -396,7 +395,6 @@ object StandingIndex {
     rewrite("bands",
       tbl("bands").join(broadcast(del), Seq("corpus_id"), "left_anti"),
       "bucket")
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(affected)
   }
 
   /** Right-to-be-forgotten for the CURATED state: remove `ids` from the
@@ -565,20 +563,18 @@ object StandingIndex {
     // add a second segment row for a digest — [[minAcrossSegments]]
     // re-collapses to the batch operator's lowest-twin rule only when the
     // MAINTAINED marker says segments can actually exist
-    val exact = minAcrossSegments(s, tag, "", batch
+    val exact = Pins.cache(minAcrossSegments(s, tag, "", batch
         .select(col("doc_id").as("batch_id"), md5(col("text")).as("h"),
           length(col("text")).as("len"))
         .join(idx("digests"), Seq("h", "len")), "batch_id", "corpus_id")
       .select(col("batch_id"), col("corpus_id"),
-        lit("exact").as("kind"), lit(1.0).as("jac"))
-      .cache() // feeds both the output union and the left_anti below
+        lit("exact").as("kind"), lit(1.0).as("jac"))) // feeds both the output union and the left_anti below
 
     val rest = batch.join(
       exact.select(col("batch_id").as("doc_id")), Seq("doc_id"), "left_anti")
-    val bArr = Dedup.shingleArrays(rest).select(
+    val bArr = Pins.cache(Dedup.shingleArrays(rest).select(
       col("doc_id").as("batch_id"), col("sh"),
-      size(col("sh")).cast("long").as("nb"))
-      .cache() // read twice: prefix build + exact verify
+      size(col("sh")).cast("long").as("nb"))) // read twice: prefix build + exact verify
 
     // batch prefixes under the frozen corpus order: stored df, 0 for
     // corpus-unseen shingles (see object scaladoc for why this stays
@@ -816,10 +812,8 @@ object StandingIndex {
         val bytes = tbl.queryExecution.optimizedPlan.stats.sizeInBytes
         val perBucket = (bytes / (targetFileMB.toLong * 1024 * 1024) / Buckets)
           .min(BigInt(1024)).toInt.max(1)
-        val snap = tbl.localCheckpoint()
-        save(snap.repartition(Buckets * perBucket, col(bucketCol)),
-          tag, name, bucketCol, "overwrite")
-        org.apache.spark.sql.GraftShims.unpersistCheckpoint(snap)
+        Pins.scope(save(Pins.checkpoint(tbl).repartition(Buckets * perBucket, col(bucketCol)),
+          tag, name, bucketCol, "overwrite"))
         s.catalog.refreshTable(s"graft_idx_${name}_$tag")
         (name, before, files())
       }
@@ -844,21 +838,11 @@ object StandingIndex {
     * the lifecycle surface: day-2 probes (post-append) and spec-owned
     * private tags route through here. */
   private[graft] def curateIncrementalIndexedFor(s: SparkSession, tag: String,
-                                                 batch0: DataFrame): DataFrame = {
-    val (out0, caches, ckpts) = curateIndexedPlan(s, tag, batch0)
+                                                 batch0: DataFrame): DataFrame =
     // the decision table is tiny (one row per batch doc) — materialize it
-    // eagerly so the fat caches can be released now (the bandedNearPairs
-    // pattern); the plan's OWN checkpoints additionally need their RDD
-    // blocks dropped (runs once per micro-batch on the durable curation
-    // stream — leaked checkpoints would accumulate per batch). Only the
-    // plan's own: unpersistCheckpoint digs to the first LogicalRDD, and
-    // aiming it at a cache would release the CALLER's checkpointed input
-    // (the stream's micro-batch frame) out from under the append stage.
-    val out = out0.localCheckpoint()
-    caches.foreach(_.unpersist())
-    ckpts.foreach(org.apache.spark.sql.GraftShims.unpersistCheckpoint)
-    out
-  }
+    // eagerly so the scope releases the plan's pins now (runs once per
+    // micro-batch on the durable curation stream)
+    Pins.scope(Pins.checkpoint(curateIndexedPlan(s, tag, batch0)))
 
   /** The BANDED standing probe — [[curateIncrementalIndexed]] with both
     * near stages riding the md5-minhash band family instead of the
@@ -884,18 +868,9 @@ object StandingIndex {
     * the lifecycle/spec surface, mirroring
     * [[curateIncrementalIndexedFor]]. */
   private[graft] def curateIncrementalBandedFor(s: SparkSession, tag: String,
-                                                batch0: DataFrame): DataFrame = {
-    val (out0, caches, ckpts) = curateIndexedPlan(s, tag, batch0, banded = true)
-    val out = out0.localCheckpoint()
-    caches.foreach(_.unpersist())
-    ckpts.foreach(org.apache.spark.sql.GraftShims.unpersistCheckpoint)
-    out
-  }
+                                                batch0: DataFrame): DataFrame =
+    Pins.scope(Pins.checkpoint(curateIndexedPlan(s, tag, batch0, banded = true)))
 
-  /** The probe's LAZY plan + its cache handles — split out so the
-    * plan-pin spec can assert the cur* scans stay bucketed (the public
-    * form checkpoints the result, which hides the joins behind an
-    * ExistingRDD scan). */
   /** The BANDED standing dedup probe — [[incrementalDedupIndexed]] with
     * the near stage riding the md5-minhash band family instead of the
     * lossless prefix filter: the batch sliver's band rows R-S-join the
@@ -917,27 +892,24 @@ object StandingIndex {
   /** [[incrementalDedupBanded]] against an explicit tag + batch frame —
     * the lifecycle/spec surface. */
   private[graft] def incrementalDedupBandedFor(s: SparkSession, tag: String,
-                                               batch: DataFrame): DataFrame = {
+                                               batch: DataFrame): DataFrame = Pins.scope {
     def idx(name: String): DataFrame = s.table(s"graft_idx_${name}_$tag")
     val t = Threshold
-    val exact = minAcrossSegments(s, tag, "", batch
+    val exact = Pins.cache(minAcrossSegments(s, tag, "", batch
         .select(col("doc_id").as("batch_id"), md5(col("text")).as("h"),
           length(col("text")).as("len"))
         .join(idx("digests"), Seq("h", "len")), "batch_id", "corpus_id")
       .select(col("batch_id"), col("corpus_id"),
-        lit("exact").as("kind"), lit(1.0).as("jac"))
-      .cache() // feeds both the output union and the left_anti below
+        lit("exact").as("kind"), lit(1.0).as("jac"))) // feeds both the output union and the left_anti below
     val rest = batch.join(
       exact.select(col("batch_id").as("doc_id")), Seq("doc_id"), "left_anti")
-    val bArr = Dedup.shingleArrays(rest).select(
+    val bArr = Pins.cache(Dedup.shingleArrays(rest).select(
       col("doc_id").as("batch_id"), col("sh"),
-      size(col("sh")).cast("long").as("nb"))
-      .cache() // read twice: band rows + exact verify
+      size(col("sh")).cast("long").as("nb"))) // read twice: band rows + exact verify
     val pb = Dedup.mdBandRows(
         bArr.select(col("batch_id").as("doc_id"), col("sh")))
       .select(col("doc_id").as("batch_id"), col("band"), col("bucket"))
-    val (cand, candCaches) = bandedProbeCandidates(pb, idx("bands"))
-    val best = cand
+    val best = bandedProbeCandidates(pb, idx("bands"))
       .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
       .join(idx("arrays").select(col("corpus_id"), col("sh").as("sc"), col("nc")),
         "corpus_id")
@@ -949,9 +921,7 @@ object StandingIndex {
         Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
       .filter(col("rn") === 1)
       .select(col("batch_id"), col("corpus_id"), lit("near").as("kind"), col("jac"))
-    val out = exact.unionByName(best).orderBy("batch_id").localCheckpoint()
-    exact.unpersist(); bArr.unpersist(); candCaches.foreach(_.unpersist())
-    out
+    Pins.checkpoint(exact.unionByName(best).orderBy("batch_id"))
   }
 
   /** The banded R-S candidate rule, factored for the cap spec: probe band
@@ -962,27 +932,28 @@ object StandingIndex {
     * its MINIMUM kept id per probe hit — linear in probe size, and the
     * minimum is exactly the representative the kept build's own star cap
     * elects, so a batch doc near a hot cluster still reaches its
-    * canonical twin. Returns the candidate frame plus the cache handle
-    * the caller releases. */
-  private[graft] def bandedProbeCandidates(pb: DataFrame, kb: DataFrame)
-      : (DataFrame, Seq[DataFrame]) = {
+    * canonical twin. */
+  private[graft] def bandedProbeCandidates(pb: DataFrame, kb: DataFrame): DataFrame = {
     val kstats = kb.groupBy("band", "bucket")
       .agg(count(lit(1)).as("ksz"), min("corpus_id").as("kmin"))
     // only buckets both sides share survive the join; stats are one
     // skinny row per standing bucket (AQE broadcasts while small)
-    val pj = pb.join(kstats, Seq("band", "bucket")).cache()
+    val pj = Pins.cache(pb.join(kstats, Seq("band", "bucket")))
     val candSmall = pj.filter(col("ksz") <= Dedup.MaxBucket)
       .join(kb, Seq("band", "bucket"))
       .select("batch_id", "corpus_id")
     val candStar = pj.filter(col("ksz") > Dedup.MaxBucket)
       .select(col("batch_id"), col("kmin").as("corpus_id"))
-    (candSmall.union(candStar).distinct(), Seq(pj))
+    candSmall.union(candStar).distinct()
   }
 
+  /** The probe's LAZY plan — split out so the plan-pin spec can assert the
+    * cur* scans stay bucketed (the public form checkpoints the result,
+    * which hides the joins behind an ExistingRDD scan). Its pins belong to
+    * the caller's scope. */
   private[graft] def curateIndexedPlan(s: SparkSession, tag: String,
                                        batch0: DataFrame,
-                                       banded: Boolean = false)
-      : (DataFrame, Seq[DataFrame], Seq[DataFrame]) = {
+                                       banded: Boolean = false): DataFrame = {
     def idx(name: String): DataFrame = s.table(s"graft_idx_cur${name}_$tag")
     val t = Threshold
     // the banded probe is the guard's named remedy — its candidate volume
@@ -994,9 +965,8 @@ object StandingIndex {
     // a streaming delta carries only (doc_id, text); n_chars feeds just
     // [[DataPrep.splitOf]]'s projection (the split itself is a pure
     // doc_id hash) and is derived when absent
-    val batch = (if (batch0.columns.contains("n_chars")) batch0
-                 else batch0.withColumn("n_chars", length(col("text"))))
-      .cache()
+    val batch = Pins.cache((if (batch0.columns.contains("n_chars")) batch0
+                 else batch0.withColumn("n_chars", length(col("text")))))
     val nullRef = lit(null).cast("long").as("ref_id")
     val nullJac = lit(null).cast("double").as("jac")
     val nullSplit = lit(null).cast("string").as("split")
@@ -1007,13 +977,12 @@ object StandingIndex {
     // incrementalDedupIndexed's `exact`; uncached, every downstream stage
     // re-evaluates the whole cascade and the planner disables the
     // bucketed digest scans it then sees many copies of
-    val exactBase = minAcrossSegments(s, tag, "cur", batch
+    val exactBase = Pins.cache(minAcrossSegments(s, tag, "cur", batch
         .select(col("doc_id"), md5(col("text")).as("h"),
           length(col("text")).as("len"))
         .join(idx("digests"), Seq("h", "len")), "doc_id", "ref_id")
       .select(col("doc_id"), lit("exact_base").as("decision"),
-        col("ref_id"), lit(1.0).as("jac"), nullSplit)
-      .cache()
+        col("ref_id"), lit(1.0).as("jac"), nullSplit))
     val r1 = batch.join(exactBase.select("doc_id"), Seq("doc_id"), "left_anti")
 
     // 1b. exact within the remaining batch (keep lowest id per text)
@@ -1022,16 +991,16 @@ object StandingIndex {
     val exactBatch = r1k.filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"), lit("exact_batch").as("decision"),
         col("keep_id").as("ref_id"), lit(1.0).as("jac"), nullSplit)
-    val r2 = r1k.filter(col("doc_id") === col("keep_id")).drop("keep_id").cache()
+    val r2 = Pins.cache(r1k.filter(col("doc_id") === col("keep_id")).drop("keep_id"))
 
     // 2a. near vs the standing kept set: batch prefixes under the FROZEN
     // curdfreq order (coalesce 0 for kept-unseen shingles — lossless, see
     // the object scaladoc), candidates off the bucketed curprefix join,
     // exact full-set verification against curarrays
-    val bArr = Dedup.shingleArrays(r2).select(
+    val bArr = Pins.cache(Dedup.shingleArrays(r2).select(
       col("doc_id").as("batch_id"), col("sh"),
-      size(col("sh")).cast("long").as("nb")).cache()
-    val (candidates, candCaches): (DataFrame, Seq[DataFrame]) = if (banded) {
+      size(col("sh")).cast("long").as("nb")))
+    val candidates = if (banded) {
       // BANDED R-S candidates: batch band rows (per-doc, computed on the
       // sliver) joined to the standing `curbands` table on the bucket
       // key. Hot standing buckets (> MaxBucket members — hash degeneracy
@@ -1061,11 +1030,13 @@ object StandingIndex {
             .as("pf"))
         .select(col("batch_id"), col("bn"), explode(col("pf")).as("e"))
         .select(col("batch_id"), col("bn"), col("e.s").as("s"))
-      (prefB.join(idx("prefix"), "s")
+      prefB.join(idx("prefix"), "s")
         .filter(col("bn") * t <= col("cn") && col("cn") * t <= col("bn"))
-        .select("batch_id", "corpus_id").distinct(), Nil)
+        .select("batch_id", "corpus_id").distinct()
     }
-    val nearBase = candidates
+    // eager + tiny: the probe (prefix join + array verify) runs once, not
+    // once for the union branch and again to populate r3's cache
+    val nearBase = Pins.checkpoint(candidates
       .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
       .join(idx("arrays").select(col("corpus_id"), col("sh").as("sc"), col("nc")),
         "corpus_id")
@@ -1077,12 +1048,8 @@ object StandingIndex {
         Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
       .filter(col("rn") === 1)
       .select(col("batch_id").as("doc_id"), lit("near_base").as("decision"),
-        col("corpus_id").as("ref_id"), col("jac"), nullSplit)
-      // eager + tiny: the probe (prefix join + array verify) runs once,
-      // not once for the union branch and again to populate r3's cache
-      .localCheckpoint()
-    val r3 = r2.join(nearBase.select("doc_id"), Seq("doc_id"), "left_anti")
-      .cache()
+        col("corpus_id").as("ref_id"), col("jac"), nullSplit))
+    val r3 = Pins.cache(r2.join(nearBase.select("doc_id"), Seq("doc_id"), "left_anti"))
 
     // 2b. near within the remaining batch — sliver-local CC collapse. The
     // banded form swaps the exact Σ df² self-join for the star-capped
@@ -1104,18 +1071,17 @@ object StandingIndex {
       .filter(col("id") =!= col("lbl"))
       .select(col("id").as("doc_id"), lit("near_batch").as("decision"),
         col("lbl").as("ref_id"), nullJac, nullSplit)
-    val r4 = r3.join(nearBatch.select("doc_id"), Seq("doc_id"), "left_anti")
-      .cache()
+    val r4 = Pins.cache(r3.join(nearBatch.select("doc_id"), Seq("doc_id"), "left_anti"))
 
     // 3./4. quality gates scored over the SLIVER only (per-doc decisions)
-    val rep = QualityFilters.repetitionFlagsOf(r4).select("doc_id").cache()
+    val rep = Pins.cache(QualityFilters.repetitionFlagsOf(r4).select("doc_id"))
     val repDrop = r4.select("doc_id").join(rep, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), lit("repetition").as("decision"),
         nullRef, nullJac, nullSplit)
-    val r5 = r4.join(rep, Seq("doc_id"), "left_anti").cache()
-    val con = QualityFilters.deconScoredOf(
+    val r5 = Pins.cache(r4.join(rep, Seq("doc_id"), "left_anti"))
+    val con = Pins.cache(QualityFilters.deconScoredOf(
         Dedup.shingles(r5), idx("bench").withColumn("hit", lit(1)))
-      .select("doc_id").cache()
+      .select("doc_id"))
     val conDrop = r5.select("doc_id").join(con, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), lit("contaminated").as("decision"),
         nullRef, nullJac, nullSplit)
@@ -1126,17 +1092,10 @@ object StandingIndex {
       .select(col("doc_id"), lit("admitted").as("decision"),
         nullRef, nullJac, col("split"))
 
-    val out = exactBase.unionByName(exactBatch).unionByName(nearBase)
+    exactBase.unionByName(exactBatch).unionByName(nearBase)
       .unionByName(nearBatch).unionByName(repDrop).unionByName(conDrop)
       .unionByName(admitted)
       .orderBy("doc_id")
-    // nearBase returns in its own slot so callers can release its
-    // CHECKPOINT blocks precisely (plain unpersist() consults only the
-    // SQL cache manager and misses LogicalRDD blocks; aiming
-    // unpersistCheckpoint at the caches would dig through to the
-    // caller's own checkpointed input frame)
-    (out, Seq(batch, bArr, exactBase, r2, r3, r4, r5, rep, con) ++ candCaches,
-      Seq(nearBase))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

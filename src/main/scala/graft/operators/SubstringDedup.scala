@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -83,10 +84,9 @@ object SubstringDedup {
     // it, and the cached result feeds both sides of the self-join with no
     // further exchange — the same measured win as the df-cap Jaccard path
     // (Dedup.jaccardNearDupDfCap)
-    val grams = positionalGrams(docs)
+    val grams = Pins.cache(positionalGrams(docs)
       .withColumn("occ", count(lit(1)).over(Window.partitionBy(col("g"))))
-      .filter(col("occ") <= OccCap).drop("occ")
-      .cache()
+      .filter(col("occ") <= OccCap).drop("occ"))
     val anchors = grams.select(col("doc_id").as("a_id"), col("pos").as("pa"), col("g"))
       .join(grams.select(col("doc_id").as("b_id"), col("pos").as("pb"), col("g")), "g")
       .filter(col("a_id") < col("b_id"))
@@ -387,10 +387,9 @@ object SubstringDedup {
   /** Write the two gram-index tables for `corpus` under `tag` (overwrite).
     * Package-visible so specs can index arbitrary corpora. */
   private[graft] def buildGramsFor(s: SparkSession, corpus: DataFrame, tag: String): Unit = {
-    val g = positionalGrams(corpus)
+    val g = Pins.cache(positionalGrams(corpus)
       .select(col("doc_id").as("corpus_id"), col("pos"), col("g"))
-      .withColumn("occ", count(lit(1)).over(Window.partitionBy(col("g"))))
-      .cache()
+      .withColumn("occ", count(lit(1)).over(Window.partitionBy(col("g")))))
     StandingIndex.save(g.filter(col("occ") <= OccCap).drop("occ"),
       tag, "grams", "g", "overwrite")
     StandingIndex.save(g.filter(col("occ") > OccCap).select("g").distinct(),
@@ -493,7 +492,7 @@ object SubstringDedup {
 
   /** [[containmentNearDup]] parametrized by the document set. */
   private[graft] def containmentFrom(docs: DataFrame): DataFrame = {
-    val docsArr = Dedup.shingleArrays(docs).cache()
+    val docsArr = Pins.cache(Dedup.shingleArrays(docs))
     val sh = docsArr.select(col("doc_id"), explode(col("sh")).as("s"))
     val sizes = docsArr.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
     val common = sh.select(col("doc_id").as("a_id"), col("s"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Pins
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -137,30 +138,33 @@ object StreamingCurate {
       sink: (Seq[CurateVerdict], Long) => Unit,
       banded: Boolean = false) {
     private val gi = new StreamingDedup.GreedyGrowingIndex(t, banded)
-    // the benchmark frame is re-joined every batch: pin it once
-    private val bench = benchShingles.withColumn("hit", lit(1)).localCheckpoint()
+    // the benchmark frame is re-joined every batch: pin it once, for the
+    // life of the stream
+    private val bench = new Pins.Ledger().within(
+      Pins.checkpoint(benchShingles.withColumn("hit", lit(1))))
     private var lastBatch = -1L
     private var lastVerdicts: Seq[CurateVerdict] = Nil
 
     def process(mb0: DataFrame, batchId: Long): Unit = {
       if (batchId == lastBatch) { sink(lastVerdicts, batchId); return }
-      val mb = mb0.select("doc_id", "text").localCheckpoint()
+      val verdicts = Pins.scope {
+        val mb = Pins.checkpoint(mb0.select("doc_id", "text"))
 
-      // ---- stage 1: greedy dedup, all docs participate (flags come later)
-      val dedup = gi.decideAndGrow(mb)
+        // ---- stage 1: greedy dedup, all docs participate (flags come later)
+        val dedup = gi.decideAndGrow(mb)
 
-      // ---- stages 2-4: per-doc, order-independent, ONE distributed pass
-      // (split assignment uses THE shared bucket column from DataPrep —
-      // one definition across batch and streaming builds)
-      val (rep, cont, splits) = statelessMeta(mb, bench, withSplits = true)
+        // ---- stages 2-4: per-doc, order-independent, ONE distributed pass
+        // (split assignment uses THE shared bucket column from DataPrep —
+        // one definition across batch and streaming builds)
+        val (rep, cont, splits) = statelessMeta(mb, bench, withSplits = true)
 
-      val verdicts = dedup.map { d =>
-        if (d.kind != "kept") CurateVerdict(d.doc_id, d.kind, d.keeper_id, "")
-        else if (rep(d.doc_id)) CurateVerdict(d.doc_id, "repetition", -1L, "")
-        else if (cont(d.doc_id)) CurateVerdict(d.doc_id, "contaminated", -1L, "")
-        else CurateVerdict(d.doc_id, "kept", -1L, splits(d.doc_id))
+        dedup.map { d =>
+          if (d.kind != "kept") CurateVerdict(d.doc_id, d.kind, d.keeper_id, "")
+          else if (rep(d.doc_id)) CurateVerdict(d.doc_id, "repetition", -1L, "")
+          else if (cont(d.doc_id)) CurateVerdict(d.doc_id, "contaminated", -1L, "")
+          else CurateVerdict(d.doc_id, "kept", -1L, splits(d.doc_id))
+        }
       }
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(mb)
       lastBatch = batchId; lastVerdicts = verdicts
       sink(verdicts, batchId)
     }
@@ -235,39 +239,42 @@ object StreamingCurate {
       benchShingles: DataFrame, t: Double,
       sink: (Seq[TrainingRow], Long) => Unit) {
     private val gi = new StreamingDedup.GreedyGrowingIndex(t)
-    private val bench = benchShingles.withColumn("hit", lit(1)).localCheckpoint()
+    private val bench = new Pins.Ledger().within(
+      Pins.checkpoint(benchShingles.withColumn("hit", lit(1))))
     private val offsets = scala.collection.mutable.Map.empty[String, Long]
     private var lastBatch = -1L
     private var lastRows: Seq[TrainingRow] = Nil
 
     def process(mb0: DataFrame, batchId: Long): Unit = {
       if (batchId == lastBatch) { sink(lastRows, batchId); return }
-      val mb = mb0.select("doc_id", "text").localCheckpoint()
-      val dedup = gi.decideAndGrow(mb)
-      val (rep, cont) = statelessFlags(mb, bench)
-      // per-doc tail-stage inputs, one distributed pass: token count, mix
-      // and split buckets, permille weight — the SHARED column helpers
-      // from DataPrep, so batch and stream cannot desynchronize
-      val meta = collectMeta(mb0)
+      lastRows = Pins.scope {
+        val mb = Pins.checkpoint(mb0.select("doc_id", "text"))
+        val dedup = gi.decideAndGrow(mb)
+        val (rep, cont) = statelessFlags(mb, bench)
+        // per-doc tail-stage inputs, one distributed pass: token count, mix
+        // and split buckets, permille weight — the SHARED column helpers
+        // from DataPrep, so batch and stream cannot desynchronize
+        val meta = collectMeta(mb0)
 
-      val rows = Seq.newBuilder[TrainingRow]
-      // dedup decisions are already in doc_id order (the greedy rule's
-      // order); offsets advance in exactly that order
-      dedup.foreach { d =>
-        if (d.kind == "kept" && !rep(d.doc_id) && !cont(d.doc_id)) {
-          val (src, nTok, mbucket, sbucket, w1000) = meta(d.doc_id)
-          val copies = copiesOf(w1000, mbucket)
-          if (copies >= 1) {
-            val split = splitLabelOf(sbucket)
-            val off = offsets.getOrElse(src, 0L)
-            rows += TrainingRow(d.doc_id, src, split, copies.toLong, nTok,
-              off / SeqTokens)
-            offsets(src) = off + copies * nTok
+        val rows = Seq.newBuilder[TrainingRow]
+        // dedup decisions are already in doc_id order (the greedy rule's
+        // order); offsets advance in exactly that order
+        dedup.foreach { d =>
+          if (d.kind == "kept" && !rep(d.doc_id) && !cont(d.doc_id)) {
+            val (src, nTok, mbucket, sbucket, w1000) = meta(d.doc_id)
+            val copies = copiesOf(w1000, mbucket)
+            if (copies >= 1) {
+              val split = splitLabelOf(sbucket)
+              val off = offsets.getOrElse(src, 0L)
+              rows += TrainingRow(d.doc_id, src, split, copies.toLong, nTok,
+                off / SeqTokens)
+              offsets(src) = off + copies * nTok
+            }
           }
         }
+        rows.result()
       }
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(mb)
-      lastBatch = batchId; lastRows = rows.result()
+      lastBatch = batchId
       sink(lastRows, batchId)
     }
   }
@@ -321,8 +328,8 @@ object StreamingCurate {
   private[graft] def durableTrainingBatch(s: org.apache.spark.sql.SparkSession,
                                           tag: String, mb0: DataFrame,
                                           batchId: Long, benchShingles: DataFrame,
-                                          t: Double = 0.5): Seq[TrainingRow] = {
-    val mb = mb0.select("doc_id", "text").localCheckpoint()
+                                          t: Double = 0.5): Seq[TrainingRow] = Pins.scope {
+    val mb = Pins.checkpoint(mb0.select("doc_id", "text"))
     val dedup = StreamingDedup.durableDecideAndGrow(s, tag, mb, batchId, t)
     val (rep, cont) = statelessFlags(mb, benchShingles.withColumn("hit", lit(1)))
     val meta = collectMeta(mb0)
@@ -343,7 +350,6 @@ object StreamingCurate {
       }
     }
     saveOffsets(tag, batchId, offsets)
-    org.apache.spark.sql.GraftShims.unpersistCheckpoint(mb)
     rows.result()
   }
 
@@ -355,7 +361,8 @@ object StreamingCurate {
                                tag: String, t: Double = 0.5)
                               (sink: (Seq[TrainingRow], Long) => Unit)
       : DataStreamWriter[Row] = {
-    val bench = benchShingles.localCheckpoint()
+    // pinned for the life of the stream, outside the session ledger
+    val bench = new Pins.Ledger().within(Pins.checkpoint(benchShingles))
     stream.toDF().writeStream.foreachBatch { (mb0: DataFrame, batchId: Long) =>
       sink(durableTrainingBatch(mb0.sparkSession, tag, mb0, batchId, bench, t),
         batchId)
@@ -396,7 +403,7 @@ object StreamingCurate {
   def lrWeightsFor(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import graft.operators.QualityFilters
     QualityFilters.lrWeights(s,
-      QualityFilters.lrFeaturesOf(graft.Tables.documents(s, dir)).cache())
+      Pins.cache(QualityFilters.lrFeaturesOf(graft.Tables.documents(s, dir))))
   }
 
   // ------------------------------------------- continuous DSIR scoring
@@ -413,7 +420,7 @@ object StreamingCurate {
   def dsirScoreStream(stream: Dataset[CurateDoc], model: DataFrame)
                      (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     import graft.operators.Curation
-    val frozen = model.localCheckpoint()
+    val frozen = new Pins.Ledger().within(Pins.checkpoint(model))
     stream.toDF().writeStream
       .foreachBatch { (mb: DataFrame, batchId: Long) =>
         sink(Curation.dsirScoreOf(Curation.docTokens(mb), frozen), batchId)
@@ -456,6 +463,8 @@ object StreamingCurate {
   class EntityResolveSession(spark: org.apache.spark.sql.SparkSession) {
     import org.apache.spark.sql.functions._
     private var seen: Option[DataFrame] = None
+    // the accumulated snapshot lives as long as the session
+    private val pins = new Pins.Ledger
     private val parent = scala.collection.mutable.Map.empty[Long, Long]
     private val inPair = scala.collection.mutable.Set.empty[Long]
 
@@ -473,9 +482,10 @@ object StreamingCurate {
       }
     }
 
-    def processBatch(mb0: DataFrame): Seq[(Long, Long)] = {
-      val mb = mb0.select(col("doc_id"), col("text")).localCheckpoint()
-      val all = seen.map(_.unionByName(mb)).getOrElse(mb).localCheckpoint()
+    def processBatch(mb0: DataFrame): Seq[(Long, Long)] = Pins.scope {
+      val mb = Pins.checkpoint(mb0.select(col("doc_id"), col("text")))
+      val all = pins.within(Pins.checkpoint(seen.map(_.unionByName(mb)).getOrElse(mb)))
+      seen.foreach(Pins.release)
       val bid = mb.select(col("doc_id").as("bid"))
       val pairs = graft.operators.Dedup.entityPairsOf(all)
         .join(broadcast(bid),
@@ -545,33 +555,34 @@ object StreamingCurate {
     val appends = new java.util.concurrent.atomic.AtomicLong(0L)
     stream.toDF().writeStream.foreachBatch { (mb0: DataFrame, batchId: Long) =>
       val s = mb0.sparkSession
-      val mb = mb0.select("doc_id", "text").localCheckpoint()
-      // eager inside (localCheckpoint) — out is independent of mb's plan.
-      // `banded = true` probes through the band table instead of the
-      // prefix index — the adversarial-vocabulary stream topology (the
-      // batch probe's mean-df guard applies per micro-batch otherwise)
-      val out =
-        if (banded) graft.operators.StandingIndex
-          .curateIncrementalBandedFor(s, tag, mb)
-        else graft.operators.StandingIndex
-          .curateIncrementalIndexedFor(s, tag, mb)
-      val decisions = out.select("doc_id", "decision", "ref_id", "jac", "split")
-        .collect().map { r =>
-          IndexedDecision(r.getLong(0), r.getString(1),
-            if (r.isNullAt(2)) None else Some(r.getLong(2)),
-            if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-            if (r.isNullAt(4)) None else Some(r.getString(4)))
-        }.toSeq
-      val admitted = decisions.filter(_.decision == "admitted").map(_.doc_id)
-      if (admitted.nonEmpty) {
-        graft.operators.StandingIndex.appendCurationFor(s, tag,
-          mb.filter(col("doc_id").isInCollection(admitted)))
-        if (compactEvery > 0 &&
-            appends.incrementAndGet() % compactEvery == 0)
-          graft.operators.StandingIndex.compact(s, tag, "cur")
+      val decisions = Pins.scope {
+        val mb = Pins.checkpoint(mb0.select("doc_id", "text"))
+        // eager inside (localCheckpoint) — out is independent of mb's plan.
+        // `banded = true` probes through the band table instead of the
+        // prefix index — the adversarial-vocabulary stream topology (the
+        // batch probe's mean-df guard applies per micro-batch otherwise)
+        val out =
+          if (banded) graft.operators.StandingIndex
+            .curateIncrementalBandedFor(s, tag, mb)
+          else graft.operators.StandingIndex
+            .curateIncrementalIndexedFor(s, tag, mb)
+        val decisions = out.select("doc_id", "decision", "ref_id", "jac", "split")
+          .collect().map { r =>
+            IndexedDecision(r.getLong(0), r.getString(1),
+              if (r.isNullAt(2)) None else Some(r.getLong(2)),
+              if (r.isNullAt(3)) None else Some(r.getDouble(3)),
+              if (r.isNullAt(4)) None else Some(r.getString(4)))
+          }.toSeq
+        val admitted = decisions.filter(_.decision == "admitted").map(_.doc_id)
+        if (admitted.nonEmpty) {
+          graft.operators.StandingIndex.appendCurationFor(s, tag,
+            mb.filter(col("doc_id").isInCollection(admitted)))
+          if (compactEvery > 0 &&
+              appends.incrementAndGet() % compactEvery == 0)
+            graft.operators.StandingIndex.compact(s, tag, "cur")
+        }
+        decisions
       }
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(out)
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(mb)
       sink(decisions, batchId)
     }
   }

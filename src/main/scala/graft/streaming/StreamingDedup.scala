@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Pins
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftShims}
 import org.apache.spark.sql.expressions.Window
@@ -65,12 +66,12 @@ object StreamingDedup {
     * shingle (the shared prefix order); `prefix`: the PPJoin prefix
     * inverted index (each corpus doc's |c| − ⌈t·|c|⌉ + 1 rarest shingles).
     * At deployment scale these are bucketed tables; here they are cached
-    * plans with identical dataflow. */
+    * plans with identical dataflow, pinned in the index's own ledger (the
+    * index outlives any one query; `releaseAll` leaves it alone). */
   final case class StandingIndex(digests: DataFrame, arrays: DataFrame,
                                  dfreq: DataFrame, prefix: DataFrame,
-                                 threshold: Double) {
-    def release(): Unit = Seq(digests, arrays, dfreq, prefix)
-      .foreach(_.unpersist(blocking = false))
+                                 threshold: Double)(pins: Pins.Ledger = new Pins.Ledger) {
+    def release(): Unit = pins.release()
   }
 
   /** Materialize the standing index for `corpus`. The prefix order is
@@ -78,30 +79,29 @@ object StreamingDedup {
     * rebuilding when a new batch arrives (the batch operator's batch∪corpus
     * df order would). */
   def buildStandingIndex(corpus: DataFrame, t: Double = 0.5): StandingIndex = {
-    val digests = corpus
-      .select(md5(col("text")).as("h"), length(col("text")).as("len"), col("doc_id"))
-      .groupBy("h", "len").agg(min("doc_id").as("corpus_id"))
-      .cache()
-    val arrays = Dedup.shingleArrays(corpus)
-      .select(col("doc_id").as("corpus_id"), col("sh"),
-        size(col("sh")).cast("long").as("nc"))
-      .cache()
-    val dfreq = arrays
-      .select(col("corpus_id"), explode(col("sh")).as("s"))
-      .groupBy("s").agg(count(lit(1)).as("df"))
-      .cache()
-    val prefix = arrays
-      .select(col("corpus_id"), col("nc"), explode(col("sh")).as("s"))
-      .join(dfreq, "s")
-      .groupBy("corpus_id", "nc")
-      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
-      .select(col("corpus_id"), col("nc"),
-        expr(s"slice(os, 1, cast(size(os) - ceil($t * size(os)) + 1 as int))")
-          .as("pf"))
-      .select(col("corpus_id"), col("nc"), explode(col("pf")).as("e"))
-      .select(col("corpus_id"), col("nc"), col("e.s").as("s"))
-      .cache()
-    StandingIndex(digests, arrays, dfreq, prefix, t)
+    val pins = new Pins.Ledger
+    pins.within {
+      val digests = Pins.cache(corpus
+        .select(md5(col("text")).as("h"), length(col("text")).as("len"), col("doc_id"))
+        .groupBy("h", "len").agg(min("doc_id").as("corpus_id")))
+      val arrays = Pins.cache(Dedup.shingleArrays(corpus)
+        .select(col("doc_id").as("corpus_id"), col("sh"),
+          size(col("sh")).cast("long").as("nc")))
+      val dfreq = Pins.cache(arrays
+        .select(col("corpus_id"), explode(col("sh")).as("s"))
+        .groupBy("s").agg(count(lit(1)).as("df")))
+      val prefix = Pins.cache(arrays
+        .select(col("corpus_id"), col("nc"), explode(col("sh")).as("s"))
+        .join(dfreq, "s")
+        .groupBy("corpus_id", "nc")
+        .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
+        .select(col("corpus_id"), col("nc"),
+          expr(s"slice(os, 1, cast(size(os) - ceil($t * size(os)) + 1 as int))")
+            .as("pf"))
+        .select(col("corpus_id"), col("nc"), explode(col("pf")).as("e"))
+        .select(col("corpus_id"), col("nc"), col("e.s").as("s")))
+      StandingIndex(digests, arrays, dfreq, prefix, t)(pins)
+    }
   }
 
   /** Decide one micro-batch of new docs against the standing index —
@@ -189,7 +189,7 @@ object StreamingDedup {
       arrays = idx("arrays"),
       dfreq = idx("dfreq"),
       prefix = idx("prefix").withColumnRenamed("cn", "nc"),
-      threshold = graft.operators.StandingIndex.Threshold)
+      threshold = graft.operators.StandingIndex.Threshold)()
   }
 
   // --------------------------------------- continuous substring-span probe
@@ -234,8 +234,8 @@ object StreamingDedup {
     * positions array), the digest set one narrow column; both broadcast
     * at probe time, so each micro-batch costs zero corpus-side work. */
   def bloomIndexOf(corpus: DataFrame): (DataFrame, DataFrame) = {
-    val bits = graft.operators.Dedup.bloomBitsOf(corpus).cache()
-    val digests = graft.operators.Dedup.bloomDigestsOf(corpus).cache()
+    val bits = Pins.cache(graft.operators.Dedup.bloomBitsOf(corpus))
+    val digests = Pins.cache(graft.operators.Dedup.bloomDigestsOf(corpus))
     (bits, digests)
   }
 
@@ -333,7 +333,7 @@ object StreamingDedup {
     * digests+shingle-arrays combined, kept prefix entries — digests and
     * arrays shared one union+checkpoint job since r20), extended per
     * batch by union + eager localCheckpoint (lineage stays O(1) deep;
-    * the superseded snapshot is unpersisted). The prefix order here is plain
+    * the superseded snapshot is released). The prefix order here is plain
     * LEXICOGRAPHIC — unlike the static twin's corpus-df order, a
     * df-based order would shift as the corpus grows and break the prefix
     * lemma's shared-order requirement across old index vs new probe; lex
@@ -406,6 +406,8 @@ object StreamingDedup {
     private var prefix: DataFrame = null  // (id, n, s)    lex-order prefix entries
     private var bands: DataFrame = null   // (id, n, band, bucket) when banded
     private var nKept = 0L                // cumulative kept docs → honest frame stats
+    // the index snapshots live as long as the stream: its own ledger
+    private val pins = new Pins.Ledger
     private def digests: DataFrame =      // (h, len, id)  kept docs
       keptAll.select("h", "len", "id")
     private def arrays: DataFrame =       // (id, sh, n)   kept docs with ≥1 shingle
@@ -417,7 +419,7 @@ object StreamingDedup {
     /** Decide `mb0` (doc_id, text, …) against the index grown from every
       * earlier call, in the greedy prefix rule's doc_id order; kept docs
       * join the index before returning. */
-    def decideAndGrow(mb0: DataFrame): Seq[CurateDecision] = {
+    def decideAndGrow(mb0: DataFrame): Seq[CurateDecision] = Pins.scope {
       val spark = mb0.sparkSession
       import spark.implicits._
       // pin the batch ONCE as a single wide frame (doc_id, h, len, sh, n) —
@@ -425,31 +427,24 @@ object StreamingDedup {
       // arrays), i.e. three per-batch driver jobs re-reading one another;
       // per-batch fixed job overhead is a real fraction of small-batch
       // latency (r20, guide §5/§1.2). The digest and shingle views below
-      // are projections of the one pinned snapshot. The shingle expression
-      // is the IF-guarded TOTAL form from [[Dedup.shingleArrays]] (short
-      // docs carry an empty array here, because the digest path must keep
-      // them; the arrays view filters them out exactly like shingleArrays'
-      // token filter did).
-      val sn = 3 // shingle width — Dedup.shingleArrays' default
-      val mbAll = mb0
+      // are projections of the one pinned snapshot. The shingles are
+      // [[Dedup.shingleSet]] (short docs carry an empty array here, because
+      // the digest path must keep them; the arrays view filters them out
+      // exactly like shingleArrays' token filter does).
+      val mbAll = Pins.checkpoint(mb0
         .select(col("doc_id"), md5(col("text")).as("h"),
           length(col("text")).as("len"), split(col("text"), " ").as("tk"))
-        .select(col("doc_id"), col("h"), col("len"),
-          array_distinct(expr(s"IF(size(tk) >= $sn, " +
-            s"transform(sequence(0, size(tk) - $sn), i -> concat_ws(' ', slice(tk, i + 1, $sn))), " +
-            "array())")).as("sh"))
+        .select(col("doc_id"), col("h"), col("len"), Dedup.shingleSet().as("sh"))
         .select(col("doc_id"), col("h"), col("len"), col("sh"),
-          size(col("sh")).cast("long").as("n"))
-        .localCheckpoint()
+          size(col("sh")).cast("long").as("n")))
       val mbKeyed = mbAll.select("doc_id", "h", "len")
       val mbArr = mbAll.filter(size(col("sh")) >= 1).select("doc_id", "sh", "n")
       // banded mode: the batch's band-bucket rows, computed ONCE and
       // reused by the index probe, the within-batch pass, and the grow
       val mbBands: DataFrame =
         if (!banded) null
-        else Dedup.xxhashBandBuckets(mbArr)
-          .join(mbArr.select(col("doc_id"), col("n")), "doc_id")
-          .localCheckpoint()
+        else Pins.checkpoint(Dedup.xxhashBandBuckets(mbArr)
+          .join(mbArr.select(col("doc_id"), col("n")), "doc_id"))
 
       // ---- distributed: candidates against the KEPT index (all final)
       // every batch-vs-index join BROADCASTS the batch side explicitly:
@@ -478,11 +473,10 @@ object StreamingDedup {
             if (banded) {
               val probeB = mbBands.select(col("doc_id").as("b_id"),
                 col("n").as("bn"), col("band"), col("bucket"))
-              bandHits = bands.join(broadcast(probeB), Seq("band", "bucket"))
+              bandHits = Pins.checkpoint(bands.join(broadcast(probeB), Seq("band", "bucket"))
                 .filter(col("n") * t <= col("bn") && col("bn") * t <= col("n"))
                 .select(col("b_id"), col("id").as("k_id"),
-                  col("band"), col("bucket"))
-                .localCheckpoint()
+                  col("band"), col("bucket")))
               // star cap per (bucket, probe doc): a hot index bucket is
               // hash degeneracy or a giant duplicate cluster — expanding
               // it is the quadratic term; the probe pairs against the
@@ -528,11 +522,10 @@ object StreamingDedup {
           // anyway), read its true count, and above the threshold fall
           // back to an unhinted join so a pathological batch degrades to
           // a shuffle instead of killing the query.
-          val candCk0 = cand.localCheckpoint()
+          val candCk0 = Pins.checkpoint(cand)
           val nCand = candCk0.count()
           // the band-hit snapshot is consumed once candCk0 materializes
-          if (bandHits != null)
-            org.apache.spark.sql.GraftShims.unpersistCheckpoint(bandHits)
+          if (bandHits != null) Pins.release(bandHits)
           // repin, per repo convention (digests/arrays/prefix below): the
           // checkpoint otherwise carries the join-PRODUCT size estimate of
           // the cand plan, which would skew planning of the unhinted
@@ -556,7 +549,7 @@ object StreamingDedup {
             .select(lit(1).as("tag"), col("b_id").as("doc_id"), col("keeper"))
           val rows = exactHits.unionByName(nearHits)
             .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-          org.apache.spark.sql.GraftShims.unpersistCheckpoint(candCk)
+          Pins.release(candCk)
           (rows.collect { case (0, d, k) => d -> k }.toMap,
            rows.collect { case (1, d, k) => d -> k }.toMap)
         }
@@ -570,9 +563,8 @@ object StreamingDedup {
       // index-probe-only before, so a hot bucket got the capped rule
       // across batches but the uncapped all-pairs rule within one): a
       // hot bucket collapses to spokes on its minimum id, the
-      // bucketCandidates rule, inlined WITHOUT its .cache() because a
-      // foreachBatch body must not accrete cache entries batch over
-      // batch — the stats diamond it would memoize is batch-bounded.
+      // bucketCandidates rule, inlined without its diamond cache: the
+      // stats diamond it would memoize is batch-bounded.
       val withinNear =
         if (!banded) Dedup.jaccardPairsFromArrays(mbArr).select("a_id", "b_id")
         else {
@@ -651,31 +643,31 @@ object StreamingDedup {
       // keep a frame that grows without bound out of broadcast plans —
       // the error direction matters, the precision does not.
       nKept += kept.size
-      keptAll = GraftShims.repinStats(
-        (if (oldAll == null) newAll else oldAll.unionByName(newAll))
-          .coalesce(par).localCheckpoint(), nKept, 16384L)
-      // the index grows by the batch's DELTA only — a lex prefix (or a
-      // minhash band row) never moves once computed, so old entries stay
-      // valid forever (this is exactly what a df-based order would break)
-      if (banded) {
-        val newBd = mbBands.join(keptIds, "doc_id")
-          .select(col("doc_id").as("id"), col("n"), col("band"), col("bucket"))
-        bands = GraftShims.repinStats(
-          (if (oldBd == null) newBd else oldBd.unionByName(newBd))
-            .coalesce(par).localCheckpoint(),
-          nKept * (Dedup.NumHashes / Dedup.BandRows), 48L)
-      } else {
-        val newPf = lexPrefix(newArr, "id")
-        prefix = GraftShims.repinStats(
-          (if (oldPf == null) newPf else oldPf.unionByName(newPf))
-            .coalesce(par).localCheckpoint(), nKept, 8192L)
+      // the new snapshots go to the stream's ledger, not the batch scope
+      pins.within {
+        keptAll = GraftShims.repinStats(
+          Pins.checkpoint((if (oldAll == null) newAll else oldAll.unionByName(newAll))
+            .coalesce(par)), nKept, 16384L)
+        // the index grows by the batch's DELTA only — a lex prefix (or a
+        // minhash band row) never moves once computed, so old entries stay
+        // valid forever (this is exactly what a df-based order would break)
+        if (banded) {
+          val newBd = mbBands.join(keptIds, "doc_id")
+            .select(col("doc_id").as("id"), col("n"), col("band"), col("bucket"))
+          bands = GraftShims.repinStats(
+            Pins.checkpoint((if (oldBd == null) newBd else oldBd.unionByName(newBd))
+              .coalesce(par)),
+            nKept * (Dedup.NumHashes / Dedup.BandRows), 48L)
+        } else {
+          val newPf = lexPrefix(newArr, "id")
+          prefix = GraftShims.repinStats(
+            Pins.checkpoint((if (oldPf == null) newPf else oldPf.unionByName(newPf))
+              .coalesce(par)), nKept, 8192L)
+        }
       }
       // superseded snapshots: safe to drop once the new eager checkpoints
-      // above have materialized
-      Seq(oldAll, oldPf, oldBd).filter(_ != null)
-        .foreach(org.apache.spark.sql.GraftShims.unpersistCheckpoint)
-      (Seq(mbAll) ++ Option(mbBands))
-        .foreach(org.apache.spark.sql.GraftShims.unpersistCheckpoint)
+      // above have materialized (the batch's own pins go with the scope)
+      Seq(oldAll, oldPf, oldBd).filter(_ != null).foreach(Pins.release)
 
       decisions.toSeq
     }
@@ -740,17 +732,16 @@ object StreamingDedup {
   private[graft] def durableDecideAndGrow(s: org.apache.spark.sql.SparkSession,
                                           tag: String, mb0: DataFrame,
                                           batchId: Long, t: Double = 0.5)
-      : Seq[CurateDecision] = {
+      : Seq[CurateDecision] = Pins.scope {
     import s.implicits._
     durableCurateInit(s, tag)
     def tbl(name: String): DataFrame = s.table(gidxTable(name, tag))
 
-    val mb = mb0.select("doc_id", "text").localCheckpoint()
-    val mbKeyed = mb.select(col("doc_id"), md5(col("text")).as("h"),
-      length(col("text")).as("len")).localCheckpoint()
-    val mbArr = Dedup.shingleArrays(mb)
-      .select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("n"))
-      .localCheckpoint()
+    val mb = Pins.checkpoint(mb0.select("doc_id", "text"))
+    val mbKeyed = Pins.checkpoint(mb.select(col("doc_id"), md5(col("text")).as("h"),
+      length(col("text")).as("len")))
+    val mbArr = Pins.checkpoint(Dedup.shingleArrays(mb)
+      .select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("n")))
 
     // ---- distributed: candidates against the durable KEPT index
     val idxExact: Map[Long, Long] =
@@ -783,7 +774,9 @@ object StreamingDedup {
         col("a.len") === col("b.len") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("lo"), col("b.doc_id").as("hi"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val nearPairs = Dedup.jaccardPairsFrom(mb)
+    // the batch is shingled once: the within-batch pairs read the pinned
+    // arrays the index probe used
+    val nearPairs = Dedup.jaccardPairsFromArrays(mbArr)
       .select("a_id", "b_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
 
@@ -819,8 +812,6 @@ object StreamingDedup {
       marker.createNewFile()
     }
 
-    Seq(mb, mbKeyed, mbArr)
-      .foreach(org.apache.spark.sql.GraftShims.unpersistCheckpoint)
     decisions.toSeq
   }
 

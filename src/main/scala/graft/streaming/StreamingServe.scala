@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Pins
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +49,8 @@ object StreamingServe {
                        corpusBands: DataFrame)
                       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val frozen = corpusBands.localCheckpoint()
+    // pinned for the life of the stream, outside the session ledger
+    val frozen = new Pins.Ledger().within(Pins.checkpoint(corpusBands))
     stream.toDF().writeStream
       .foreachBatch { (mb: DataFrame, batchId: Long) =>
         sink(graft.operators.Multimodal.imageProbe(mb, frozen), batchId)
@@ -98,19 +100,19 @@ object StreamingServe {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.toDF().writeStream.foreachBatch { (mb0: DataFrame, batchId: Long) =>
       val s = mb0.sparkSession
-      val mb = mb0.select(col("q_id").as("vec_id"), col("qv").as("v"))
-        .localCheckpoint()
-      // eager inside (the probe checkpoints its delta-sized output and
-      // releases its own caches — semanticDedupIvfIndexedFor)
-      val out = graft.operators.Similarity.semanticDedupIvfIndexedFor(s, tag, mb)
-      val decisions = out.collect()
-        .map(r => SemDecision(r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-      val kept = decisions.filter(_.kept).map(_.vec_id)
-      if (kept.nonEmpty)
-        graft.operators.Similarity.appendSemDedupFor(s, tag,
-          mb.filter(col("vec_id").isInCollection(kept)))
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(out)
-      org.apache.spark.sql.GraftShims.unpersistCheckpoint(mb)
+      val decisions = Pins.scope {
+        val mb = Pins.checkpoint(mb0.select(col("q_id").as("vec_id"), col("qv").as("v")))
+        // eager inside (the probe checkpoints its delta-sized output in
+        // its own scope — semanticDedupIvfIndexedFor)
+        val out = graft.operators.Similarity.semanticDedupIvfIndexedFor(s, tag, mb)
+        val decisions = out.collect()
+          .map(r => SemDecision(r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+        val kept = decisions.filter(_.kept).map(_.vec_id)
+        if (kept.nonEmpty)
+          graft.operators.Similarity.appendSemDedupFor(s, tag,
+            mb.filter(col("vec_id").isInCollection(kept)))
+        decisions
+      }
       sink(decisions, batchId)
     }
 }

@@ -18,22 +18,74 @@ object GraftShims {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Unpersist the RDD backing a `localCheckpoint()`ed Dataset. Iterative
-    * algorithms (e.g. connected components) checkpoint each round to
-    * truncate lineage; `Dataset.unpersist` only consults the SQL cache
-    * manager and silently misses RDD-level checkpoint blocks, which would
-    * otherwise accumulate one snapshot per round until a GC lets the
-    * ContextCleaner reclaim them. Matching on the analyzed `LogicalRDD` is
-    * `private[sql]` access — hence this shim's package. */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
-    // collectFirst, not a top-level match: narrow transforms over the
-    // checkpoint (a .drop() adds a Project above the LogicalRDD) must
-    // still find the backing RDD, else the call silently no-ops and the
-    // snapshots accumulate after all
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-    }.getOrElse(())
+  // ---- pin handles for graft.Pins: a checkpoint is its RDD, a cached
+  // frame its cache entry's builder (the identity a plan walk finds)
+
+  /** The RDD behind a freshly `localCheckpoint()`ed frame. */
+  def checkpointRdd(df: Dataset[_]): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      case p => throw new IllegalStateException(s"not a checkpoint: ${p.nodeName}")
+    }
+
+  private def cacheManager(df: Dataset[_]) =
+    df.sparkSession.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+
+  /** The cache entry of a frame `cache()` just registered. */
+  def cacheKey(df: Dataset[_]): AnyRef =
+    cacheManager(df).lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .getOrElse(throw new IllegalStateException("frame is not cached"))
+      .cachedRepresentation.cacheBuilder
+
+  /** A release for a cached frame's entry that holds only its logical
+    * plan, not the Dataset (whose executed plan may pin broadcasts). */
+  def uncacher(df: Dataset[_]): () => Unit = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val plan = df.queryExecution.analyzed
+    () => spark.sharedState.cacheManager.uncacheQuery(spark, plan,
+      cascade = false, blocking = false)
+  }
+
+  /** The pin handle `df` itself is (checkpoint RDD or cache entry), or null. */
+  def pinKey(df: Dataset[_]): AnyRef = df.queryExecution.analyzed match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    case _ => cacheManager(df).lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder).orNull
+  }
+
+  /** Every pin handle executing `df` may still read: checkpoint and
+    * persisted RDDs in the lineage of its `LogicalRDD`s, its cached
+    * entries, and — through a cache not yet materialized — whatever that
+    * cache reads in turn. */
+  def pinsRead(df: Dataset[_]): Seq[AnyRef] = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val cm = spark.sharedState.cacheManager
+    val seen = new java.util.IdentityHashMap[AnyRef, AnyRef]
+    val out = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
+    def first(k: AnyRef): Boolean = seen.put(k, k) == null
+    def lineage(r0: org.apache.spark.rdd.RDD[_]): Unit = {
+      val todo = scala.collection.mutable.Stack[org.apache.spark.rdd.RDD[_]](r0)
+      while (todo.nonEmpty) {
+        val r = todo.pop()
+        if (first(r)) { out += r; r.dependencies.foreach(d => todo.push(d.rdd)) }
+      }
+    }
+    def walk(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
+      if (first(p)) {
+        val builder = cm.lookupCachedData(spark, p).map(_.cachedRepresentation.cacheBuilder)
+        builder.foreach(b => out += b)
+        if (!builder.exists(_.isCachedColumnBuffersLoaded)) {
+          p match {
+            case r: org.apache.spark.sql.execution.LogicalRDD => lineage(r.rdd)
+            case _ =>
+          }
+          p.children.foreach(walk)
+          p.subqueries.foreach(walk)
+        }
+      }
+    walk(df.queryExecution.analyzed)
+    out.toSeq
+  }
 
   /** Replace a `localCheckpoint()`ed Dataset's CARRIED statistics with
     * measured ones. `Dataset.localCheckpoint` copies the pre-checkpoint

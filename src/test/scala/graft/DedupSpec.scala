@@ -84,10 +84,8 @@ class DedupSpec extends GraftSpec {
       .join(cArr.select(col("corpus_id"), explode(col("sh")).as("s")), "s")
       .select("batch_id", "corpus_id").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (prefCand, prefCaches) = Dedup.incrementalNearCandidates(bArr, cArr, 0.5)
-    val pref = prefCand
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    prefCaches.foreach(_.unpersist())
+    val pref = graft.Pins.scope(Dedup.incrementalNearCandidates(bArr, cArr, 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(pref.subsetOf(full), s"prefix invented pairs: ${(pref -- full).take(5)}")
     assert(pref.size < full.size,
       s"prefix index must prune the candidate space: $full vs $pref")
@@ -121,9 +119,8 @@ class DedupSpec extends GraftSpec {
       col("doc_id").as("batch_id"), col("sh"), size(col("sh")).cast("long").as("nb"))
     val cArr = Dedup.shingleArrays(corpusDocs).select(
       col("doc_id").as("corpus_id"), col("sh"), size(col("sh")).cast("long").as("nc"))
-    val (cand, caches) = Dedup.incrementalNearCandidates(bArr, cArr, 0.5)
-    val pairs = cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    caches.foreach(_.unpersist())
+    val pairs = graft.Pins.scope(Dedup.incrementalNearCandidates(bArr, cArr, 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(pairs.contains((70L, 1L)), s"J=0.5 boundary pair lost: $pairs")
   }
 

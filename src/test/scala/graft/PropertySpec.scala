@@ -490,7 +490,7 @@ class PropertySpec extends GraftSpec {
           (2000L, "zz qq ww rr")
         val diskIdx = StreamingDedup.StandingIndex(
           digests = tbl("digests"), arrays = tbl("arrays"), dfreq = tbl("dfreq"),
-          prefix = tbl("prefix").withColumnRenamed("cn", "nc"), threshold = 0.5)
+          prefix = tbl("prefix").withColumnRenamed("cn", "nc"), threshold = 0.5)()
         def decide(idx: StreamingDedup.StandingIndex) =
           StreamingDedup.decideBatch(batch.toDF("doc_id", "text"), idx).collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))

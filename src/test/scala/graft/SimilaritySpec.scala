@@ -682,10 +682,11 @@ class SimilaritySpec extends GraftSpec {
       val tag = Similarity.ensureSemDedupIndex(spark, sf0001)
       val delta = Similarity.embeddings(spark, sf0001)
         .filter(col("vec_id") % 7 === 0).select(col("vec_id"), col("v"))
-      val (probe, caches) = Similarity.semanticDedupIvfIndexedPlan(spark, tag, delta)
-      probe.collect()
-      val plan = probe.queryExecution.executedPlan.toString
-      caches.foreach(_.unpersist())
+      val plan = graft.Pins.scope {
+        val probe = Similarity.semanticDedupIvfIndexedPlan(spark, tag, delta)
+        probe.collect()
+        probe.queryExecution.executedPlan.toString
+      }
       assert(plan.contains("Bucketed: true"), plan.take(1200))
       assert(!plan.contains("Bucketed: false"),
         plan.linesIterator.filter(_.contains("Bucketed: false")).mkString("\n"))

@@ -226,14 +226,15 @@ class StandingIndexSpec extends GraftSpec {
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val (probe, caches, planCkpts) = StandingIndex.curateIndexedPlan(spark, tag, batch)
-      probe.collect()
-      val plan = probe.queryExecution.executedPlan.toString
+      val plan = graft.Pins.scope {
+        val probe = StandingIndex.curateIndexedPlan(spark, tag, batch)
+        probe.collect()
+        probe.queryExecution.executedPlan.toString
+      }
       assert(plan.contains("Bucketed: true"), plan.take(1200))
       assert(!plan.contains("Bucketed: false"),
         plan.linesIterator.filter(_.contains("Bucketed: false")).mkString("\n"))
       assert(!plan.contains("Exchange hashpartitioning(cn"), plan.take(1200))
-      caches.foreach(_.unpersist())
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     }
@@ -325,7 +326,7 @@ class StandingIndexSpec extends GraftSpec {
       def tbl(n: String) = spark.table(s"graft_idx_${n}_$tag")
       val diskIdx = StreamingDedup.StandingIndex(
         digests = tbl("digests"), arrays = tbl("arrays"), dfreq = tbl("dfreq"),
-        prefix = tbl("prefix").withColumnRenamed("cn", "nc"), threshold = 0.5)
+        prefix = tbl("prefix").withColumnRenamed("cn", "nc"), threshold = 0.5)()
       def decisions(idx: StreamingDedup.StandingIndex) =
         StreamingDedup.decideBatch(batch.toDF("doc_id", "text"), idx).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
@@ -369,7 +370,7 @@ class StandingIndexSpec extends GraftSpec {
       def tbl(n: String) = spark.table(s"graft_idx_${n}_$tag")
       val diskIdx = StreamingDedup.StandingIndex(
         digests = tbl("digests"), arrays = tbl("arrays"), dfreq = tbl("dfreq"),
-        prefix = tbl("prefix").withColumnRenamed("cn", "nc"), threshold = 0.5)
+        prefix = tbl("prefix").withColumnRenamed("cn", "nc"), threshold = 0.5)()
       def decisions(idx: StreamingDedup.StandingIndex) =
         StreamingDedup.decideBatch(batch.toDF("doc_id", "text"), idx).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
@@ -436,9 +437,11 @@ class StandingIndexSpec extends GraftSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val batch = Tables.documents(spark, sf0001)
         .filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 === 0)
-      val (probe, caches, planCkpts) = StandingIndex.curateIndexedPlan(spark, tag, batch)
-      probe.collect()
-      val plan = probe.queryExecution.executedPlan.toString
+      val plan = graft.Pins.scope {
+        val probe = StandingIndex.curateIndexedPlan(spark, tag, batch)
+        probe.collect()
+        probe.queryExecution.executedPlan.toString
+      }
       assert(plan.contains("graft_idx_cur"), plan.take(800))
       assert(plan.contains("Bucketed: true"), plan.take(1200))
       assert(!plan.contains("Bucketed: false"),
@@ -446,7 +449,6 @@ class StandingIndexSpec extends GraftSpec {
       // the prefix index (the big kept-side relation at scale) must not
       // be re-partitioned: no exchange keyed on its own columns
       assert(!plan.contains("Exchange hashpartitioning(cn"), plan.take(1200))
-      caches.foreach(_.unpersist())
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     }
@@ -533,9 +535,8 @@ class StandingIndexSpec extends GraftSpec {
         Seq((100L, 1, "S"), (101L, 1, "S"))).toDF("corpus_id", "band", "bucket")
     val pb = Seq((900L, 0, "HOT"), (900L, 1, "S"), (901L, 2, "MISS"))
       .toDF("batch_id", "band", "bucket")
-    val (cand, caches) = StandingIndex.bandedProbeCandidates(pb, kb)
-    val got = cand.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    caches.foreach(_.unpersist())
+    val got = graft.Pins.scope(StandingIndex.bandedProbeCandidates(pb, kb)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     // HOT (70 > 64): only the bucket minimum; S (2 ≤ 64): full expansion;
     // MISS (no standing rows): nothing
     assert(got == Set((900L, 1L), (900L, 100L), (900L, 101L)), got)
@@ -591,14 +592,15 @@ class StandingIndexSpec extends GraftSpec {
       val pb = graft.operators.Dedup.mdBandRows(bArr)
         .select(col("doc_id").as("batch_id"), col("band"), col("bucket"))
       val kb = spark.table(s"graft_idx_curbands_$tag1")
-      val (cand, caches) = StandingIndex.bandedProbeCandidates(pb, kb)
-      cand.collect()
-      val plan = cand.queryExecution.executedPlan.toString
+      val plan = graft.Pins.scope {
+        val cand = StandingIndex.bandedProbeCandidates(pb, kb)
+        cand.collect()
+        cand.queryExecution.executedPlan.toString
+      }
       assert(plan.contains("graft_idx_curbands"), plan.take(800))
       val bandScanLines = plan.linesIterator
         .filter(_.contains("graft_idx_curbands")).mkString("\n")
       assert(plan.contains("Bucketed: true"), bandScanLines)
-      caches.foreach(_.unpersist())
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     }

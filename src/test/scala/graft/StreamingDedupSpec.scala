@@ -661,12 +661,12 @@ class StreamingDedupSpec extends GraftSpec {
         val cardBatches = scala.collection.mutable.Set.empty[Long]
         var cardDocs = 0L; var cardTokens = 0L
         val ms = MemoryStream[DocEvent](msId, spark, None)
-        def body(mb: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
-          val firsts = mb.filter(col("doc_id") === col("keeper_id"))
-            .select("doc_id").join(docsStatic, "doc_id").localCheckpoint()
-          val gated = firsts.join(
+        def body(mb: org.apache.spark.sql.DataFrame, batchId: Long): Unit = graft.Pins.scope {
+          val firsts = graft.Pins.checkpoint(mb.filter(col("doc_id") === col("keeper_id"))
+            .select("doc_id").join(docsStatic, "doc_id"))
+          val gated = graft.Pins.checkpoint(firsts.join(
             Curation.gopherRulesOf(firsts).filter(col("pass") === 1)
-              .select("doc_id"), "doc_id").localCheckpoint()
+              .select("doc_id"), "doc_id"))
           val kept = StreamingDedup.durableDecideAndGrow(spark, tag,
               gated.select("doc_id", "text"), batchId)
             .filter(_.kind == "kept").map(_.doc_id).toSet
@@ -684,8 +684,6 @@ class StreamingDedupSpec extends GraftSpec {
               cardTokens += scored.map(_._3).sum
             }
           }
-          Seq(firsts, gated)
-            .foreach(org.apache.spark.sql.GraftShims.unpersistCheckpoint)
         }
         def start() = StreamingDedup.exactDedupTws(ms.toDS()).writeStream
           .option("checkpointLocation", s"$ckptRoot/ingest")
