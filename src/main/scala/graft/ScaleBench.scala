@@ -305,7 +305,7 @@ object ScaleBench {
     val results = scala.collection.mutable.ArrayBuffer
       .empty[(String, Long, Map[String, Double])]
     for (dir <- dirs) {
-      val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
+      val nDocs = Tables.footerRowCount(spark, dir, "documents")
       def want(build: String): Boolean =
         targets.exists(BuildConsumers(build))
       val buildFns: Seq[(String, () => Unit)] = Seq(

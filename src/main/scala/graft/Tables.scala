@@ -1,6 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (see /root/repo/FIXTURES.md).
   *
@@ -10,15 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * concern so query code never hardcodes paths.
   */
 object Tables {
-  /** Loader memo, keyed by (session, logical key). Every
-    * `spark.read.parquet` fires a small driver job for footer/schema
-    * inference and every `fanOut` pays a physical planning pass for its
-    * partition probe — per CALL. A 169-query bench touches loaders
-    * thousands of times, so the repeated per-call cost is real money for
-    * zero information: the harness tables are immutable for the life of a
+  /** Loader memo, keyed by (session, logical key). A 169-query bench
+    * touches loaders thousands of times, and the harness tables are
+    * immutable for the life of a session, so each frame is built once per
     * session. DataFrames are immutable plans, safe to share. Keyed by
     * session so tests/Verify/Bench (separate sessions with different
-    * confs) never cross-contaminate. */
+    * confs) never cross-contaminate; a fresh session sees a rewritten
+    * table. */
   private val frames =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
   private def memo(s: SparkSession, key: String)(mk: => DataFrame): DataFrame = {
@@ -36,46 +42,74 @@ object Tables {
     }
   }
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo(spark, s"raw:$dir/$name")(spark.read.parquet(s"$dir/$name.parquet"))
+  /** A parquet file version: a rewrite at the same path changes its length
+    * or modification time. */
+  private final case class FileVersion(path: String, length: Long, modified: Long)
 
-  /** Exact row count from parquet FOOTER metadata, read driver-side via
-    * parquet-hadoop — schedules NO Spark job at all (vs `df.count()`,
-    * whose metadata-only plan still runs a job per call). Query builders
-    * use this for size guards (broadcast hints, exact-baseline tripwires)
-    * so that BUILDING a query never fires an action — the engine-idiomatic
-    * contract is one action per query. Cached per path: the harness tables
-    * are immutable, so the footer sum never changes for a given path. */
-  private val footerCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  def footerRowCount(spark: SparkSession, dir: String, name: String): Long =
-    footerCounts.computeIfAbsent(s"$dir/$name.parquet",
-      path => footerSum(spark, path)).longValue()
+  /** Footer cache, keyed by table path: the footers of exactly the files
+    * the latest listing of that path returned. Shared across sessions — a
+    * footer is a property of the file version, not of a session's conf. */
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[FileVersion, ParquetMetadata]]
 
-  /** [[footerRowCount]] for an arbitrary parquet path — used by the
-    * standing-index guards, whose tables MUTATE under appends/compaction,
-    * so this form is deliberately UNCACHED (still zero Spark jobs; a
-    * driver-side footer walk over tens of files is milliseconds). */
-  def footerRowCountAt(spark: SparkSession, path: String): Long =
-    footerSum(spark, path)
-
-  private def footerSum(spark: SparkSession, path: String): Long = {
-    import org.apache.hadoop.fs.Path
+  /** The footer of every parquet file at `path` (a file, or a directory of
+    * `.parquet` files), read driver-side via parquet-hadoop — NO Spark job.
+    * Each call lists the path: an unchanged file reuses its cached footer,
+    * a new or rewritten one is read, and a file no longer listed leaves the
+    * cache (growing standing-index tables stay bounded). Racing callers may
+    * both read a changed file; either result is correct. */
+  private def footersAt(spark: SparkSession, path: String): Seq[Footer] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
     val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(st => st.isFile &&
-          st.getPath.getName.endsWith(".parquet"))
-      else Array(fs.getFileStatus(p))
-    files.map { st =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(st.getPath, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+      if (st.isDirectory)
+        fs.listStatus(p).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).toSeq
+      else Seq(st)
+    val cached = footerCache.getOrDefault(path, Map.empty)
+    val listed = files.map { f =>
+      val v = FileVersion(f.getPath.toString, f.getLen, f.getModificationTime)
+      v -> cached.getOrElse(v, {
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getFooter finally r.close()
+      })
+    }
+    footerCache.put(path, listed.toMap)
+    listed.map { case (v, m) => new Footer(new Path(v.path), m) }
   }
+
+  /** The table's schema as `spark.read.parquet` infers it, from the cached
+    * footers and under this session's SQL conf (so nanos-as-long and
+    * binary-as-string apply) — but with no inference job. Files that
+    * disagree fail here, instead of one file's schema winning silently. */
+  private def schemaAt(spark: SparkSession, path: String): StructType = {
+    val schemas = footersAt(spark, path).map(GraftParquetShims.schemaOf(spark, _)).distinct
+    if (schemas.size != 1) throw new IllegalArgumentException(
+      if (schemas.isEmpty) s"no parquet files at $path"
+      else s"parquet files at $path disagree on the schema: " +
+        schemas.map(_.simpleString).mkString(" vs "))
+    schemas.head
+  }
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    memo(spark, s"raw:$path")(spark.read.schema(schemaAt(spark, path)).parquet(path))
+  }
+
+  /** Exact row count from the cached parquet FOOTERS — schedules NO Spark
+    * job at all (vs `df.count()`, whose metadata-only plan still runs a job
+    * per call). Query builders use this for size guards (broadcast hints,
+    * exact-baseline tripwires) so that BUILDING a query never fires an
+    * action — the engine-idiomatic contract is one action per query. */
+  def footerRowCount(spark: SparkSession, dir: String, name: String): Long =
+    footerRowCountAt(spark, s"$dir/$name.parquet")
+
+  /** [[footerRowCount]] for an arbitrary parquet path — used by the
+    * standing-index guards, whose tables MUTATE under appends/compaction;
+    * the per-call listing reads only the files that changed. */
+  def footerRowCountAt(spark: SparkSession, path: String): Long =
+    footersAt(spark, path).map(_.getParquetMetadata.getBlocks.asScala.map(_.getRowCount).sum).sum
 
   /** Parquet splits at row-group granularity, and each harness file is a
     * SINGLE row group — so every scan starts as one task and all narrow
@@ -83,16 +117,20 @@ object Tables {
     * rows) runs on one core until the first shuffle; under host contention
     * that lone task stalls the whole query. No scan config can split below
     * a row group, so fact tables fan out through one cheap repartition —
-    * but only when the scan actually under-parallelizes: at corpus scale
-    * the file count far exceeds the core count, the guard never fires, and
-    * no full-data shuffle is introduced (and a well-split scan is never
-    * accidentally coalesced). Dimension tables stay on their natural
-    * partitioning so broadcast-join paths remain shuffle-free. Safe under
-    * the oracle: hash-checked queries already prove order-insensitivity
-    * (DuckDB computes in a completely different order). */
-  private def fanOut(spark: SparkSession, df: DataFrame): DataFrame = {
+    * but only when the table has fewer row groups (counted in the cached
+    * footers, no planning pass) than cores: at corpus scale the row groups
+    * far outnumber the cores, the guard never fires, and no full-data
+    * shuffle is introduced (and a well-split scan is never accidentally
+    * coalesced). Dimension tables stay on their natural partitioning so
+    * broadcast-join paths remain shuffle-free. Safe under the oracle:
+    * hash-checked queries already prove order-insensitivity (DuckDB
+    * computes in a completely different order). */
+  private def fanOut(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = table(spark, dir, name)
     val target = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    val rowGroups = footersAt(spark, s"$dir/$name.parquet")
+      .map(_.getParquetMetadata.getBlocks.size).sum
+    if (rowGroups < target) df.repartition(target) else df
   }
 
   /** Normalize `events.ts` to TimestampType regardless of how the driver
@@ -155,15 +193,15 @@ object Tables {
   def supplier(s: SparkSession, d: String): DataFrame  = table(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame      = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    =
-    memo(s, s"fan:$d/orders")(fanOut(s, table(s, d, "orders")))
+    memo(s, s"fan:$d/orders")(fanOut(s, d, "orders"))
   def lineitem(s: SparkSession, d: String): DataFrame  =
-    memo(s, s"fan:$d/lineitem")(fanOut(s, table(s, d, "lineitem")))
+    memo(s, s"fan:$d/lineitem")(fanOut(s, d, "lineitem"))
   def events(s: SparkSession, d: String): DataFrame    =
-    memo(s, s"fan:$d/events")(eventsWithTs(fanOut(s, table(s, d, "events"))))
+    memo(s, s"fan:$d/events")(eventsWithTs(fanOut(s, d, "events")))
   def documents(s: SparkSession, d: String): DataFrame =
-    memo(s, s"fan:$d/documents")(fanOut(s, table(s, d, "documents")))
+    memo(s, s"fan:$d/documents")(fanOut(s, d, "documents"))
   def embeddings(s: SparkSession, d: String): DataFrame =
-    memo(s, s"fan:$d/embeddings")(normalizeEmbedding(fanOut(s, table(s, d, "embeddings"))))
+    memo(s, s"fan:$d/embeddings")(normalizeEmbedding(fanOut(s, d, "embeddings")))
 
   /** Expected column names per table (SURVEY.md §1: fixed schemas declared
     * in code; the parquet footer is the source of truth, this asserts we

@@ -68,8 +68,7 @@ object StreamingWindows {
     * / NTZ-micros / already-timestamp) as the batch loader, so watermarks
     * (which reject TimestampNTZType) survive driver-side data regeneration. */
   def eventsFileStream(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
+    val schema = graft.Tables.table(s, dir, "events").schema
     // the driver ships single-file tables; the file stream source wants a
     // directory → stream the parent dir, glob-filtered to this table
     val raw = s.readStream.schema(schema)

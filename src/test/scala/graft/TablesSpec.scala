@@ -1,10 +1,97 @@
 package graft
 
+import java.nio.file.{Files, Path, StandardCopyOption}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.TimestampType
 
 /** Schema tripwire: if the driver regenerates testdata with different
-  * columns, fail here with a clear message instead of deep inside a query. */
+  * columns, fail here with a clear message instead of deep inside a query.
+  * Also pins the footer cache behind the loaders: registration runs no
+  * Spark job, and a rewritten or grown table is re-read. */
 class TablesSpec extends GraftSpec {
+
+  /** One fresh session for the specs that need loaders not yet memoized. */
+  private lazy val fresh = spark.newSession()
+
+  private val allTables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "documents", "embeddings", "events")
+
+  /** Write `df` as the single parquet file `target` (replacing it). */
+  private def writeFile(df: DataFrame, target: Path): Unit = {
+    val stage = Files.createTempDirectory("graft-tables-stage")
+    df.coalesce(1).write.parquet(stage.resolve("out").toString)
+    val part = Files.list(stage.resolve("out")).toArray.map(_.asInstanceOf[Path])
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("registering all ten tables in a fresh session starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-register-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    @volatile var markerSeen = false
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => jobs.add(js.jobId)
+          case `marker` => markerSeen = true
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "table registration")
+      try Tables.registerAll(fresh, sf0001) finally sc.clearJobGroup()
+      // the listener bus delivers in order: once a later marker job is
+      // seen, every registration job start has been delivered too
+      sc.setJobGroup(marker, "listener-bus marker")
+      try fresh.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "marker job never reached the listener")
+      assert(jobs.isEmpty, s"table registration started Spark jobs: $jobs")
+      assert(allTables.forall(fresh.catalog.tableExists))
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("each loader's raw schema equals Spark's own parquet inference") {
+    allTables.foreach { name =>
+      val inferred = spark.read.parquet(s"$sf0001/$name.parquet").schema
+      assert(Tables.table(spark, sf0001, name).schema == inferred, name)
+    }
+  }
+
+  test("a parquet file rewritten at the same path is re-read") {
+    val dir = Files.createTempDirectory("graft-tables-rewrite")
+    val file = dir.resolve("t.parquet")
+    writeFile(spark.range(3).toDF("a"), file)
+    assert(Tables.footerRowCount(spark, dir.toString, "t") == 3L)
+    assert(Tables.table(spark, dir.toString, "t").columns.toSeq == Seq("a"))
+    writeFile(spark.range(5).selectExpr("id AS a", "id * 2 AS b"), file)
+    assert(Tables.footerRowCount(spark, dir.toString, "t") == 5L)
+    // frames are memoized per session: a fresh session sees the rewrite
+    val t = Tables.table(fresh, dir.toString, "t")
+    assert(t.columns.toSeq == Seq("a", "b"))
+    assert(t.count() == 5L)
+  }
+
+  test("a directory that gains a file reports the new row count") {
+    val base = Files.createTempDirectory("graft-tables-grow")
+    val dir = Files.createDirectory(base.resolve("g.parquet"))
+    writeFile(spark.range(4).toDF("a"), dir.resolve("p0.parquet"))
+    assert(Tables.footerRowCountAt(spark, dir.toString) == 4L)
+    writeFile(spark.range(6).toDF("a"), dir.resolve("p1.parquet"))
+    assert(Tables.footerRowCountAt(spark, dir.toString) == 10L)
+    Files.delete(dir.resolve("p0.parquet"))
+    assert(Tables.footerRowCountAt(spark, dir.toString) == 6L)
+    // files that disagree on the schema fail, naming the path
+    writeFile(spark.range(1).toDF("b"), dir.resolve("p2.parquet"))
+    val err = intercept[IllegalArgumentException](Tables.table(fresh, base.toString, "g"))
+    assert(err.getMessage.contains(dir.toString), err.getMessage)
+  }
 
   test("every table has exactly the expected columns") {
     Tables.expectedColumns.foreach { case (name, cols) =>
