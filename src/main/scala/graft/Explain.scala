@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan/latency probe: `graft.Explain <sfDir> <queryName> [queryName ...]`
   * prints the formatted physical plan and two timed runs (cold + warm) for
   * each named query — the iterate-on-`.explain` loop SURVEY.md §7 calls for.
@@ -10,21 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Spark 4 session-artifact isolation installs an ExecutorClassLoader
-      // that resolves classes over the driver RPC file server; in long
-      // multi-query sessions the per-task class probes dominate (measured
-      // 60-90s/query late in bench runs). No artifacts are used — disable.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (names.isEmpty) {
       SparkEntry.queries.keys.toSeq.sorted.foreach(println)

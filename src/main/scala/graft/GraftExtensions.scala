@@ -32,7 +32,7 @@ import graft.functions.{DotProduct, DtwDistance, SimHashAgg, TopKByScore}
   * reaches PushedFilters (too complex for parquet), and a non-outer
   * explode of an empty array already emits zero rows - the only thing it
   * prunes is work the expression itself creates. Excluded in every
-  * session builder via this constant. */
+  * session via this constant ([[Session.builder]]). */
 object GraftExtensions {
   val ExcludedOptimizerRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale rehearsal: measure the multi-stage queries and their standing
   * builds across corpus scale factors, so the 100 TB posture rests on a
   * MEASURED scaling curve rather than plan-shape argument alone.
@@ -283,17 +281,7 @@ object ScaleBench {
         case None => Targets
       }
     targets.foreach(t => require(SparkEntry.queries.contains(t), s"unknown target: $t"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def r2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     def time(body: => Unit): Double = {

@@ -100,12 +100,17 @@ object Dedup {
     * (sf0.1 = 5 k docs, the sf1 rehearsal = 50 k) and below the
     * second-decade corpus (~500 k), where only the banded forms run. */
   private[graft] val MaxExactRowsKey = "spark.graft.exactBaseline.maxRows"
-  /** A whole-number `spark.graft.*` setting; a malformed value fails
-    * naming the key and the value instead of a bare NumberFormatException. */
-  private[operators] def longConf(s: SparkSession, key: String, default: Long): Long =
-    s.conf.getOption(key).map(v => v.trim.toLongOption.getOrElse(
-      throw new IllegalArgumentException(s"$key must be a whole number, got '$v'")))
+  /** A numeric `spark.graft.*` setting; a malformed value fails naming
+    * the key and the value instead of a bare NumberFormatException. */
+  private def numConf[T](s: SparkSession, key: String, default: T, what: String)
+                        (parse: String => Option[T]): T =
+    s.conf.getOption(key).map(v => parse(v.trim).getOrElse(
+      throw new IllegalArgumentException(s"$key must be $what, got '$v'")))
       .getOrElse(default)
+  private[operators] def longConf(s: SparkSession, key: String, default: Long): Long =
+    numConf(s, key, default, "a whole number")(_.toLongOption)
+  private[operators] def doubleConf(s: SparkSession, key: String, default: Double): Double =
+    numConf(s, key, default, "a number")(_.toDoubleOption.filterNot(_.isNaN))
 
   private[operators] def guardExactPairs(s: SparkSession, dir: String,
                                          what: String, scaleAlt: String): Unit = {
@@ -312,8 +317,7 @@ object Dedup {
       .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
     val pref = ordered.select(
       col("doc_id"), size(col("os")).cast("long").as("n"),
-      expr(s"slice(os, 1, cast(size(os) - ceil($t * size(os)) + 1 as int))")
-        .as("pf"))
+      prefixSlice(t).as("pf"))
     val idx = pref.select(col("doc_id"), col("n"), posexplode(col("pf")).as(Seq("p", "e")))
       .select(col("doc_id"), col("n"), col("p").cast("long").as("p"), col("e.s").as("s"))
     // PPJoin positional filter on each occurrence row (lossless — see
@@ -342,9 +346,10 @@ object Dedup {
   /** Exact full-set Jaccard verification of (a_id, b_id) candidate pairs:
     * join both sides back to the shingle arrays, score |a∩b| / |a∪b|, keep
     * ≥ t. This is THE semantics-critical expression every near-dup oracle
-    * hash-match rests on — one copy, shared by the prefix, df-cap, and
-    * MinHash-LSH paths so a threshold or cast change cannot desynchronize
-    * them. */
+    * hash-match rests on — one copy for the self-join pair sets, shared by
+    * the prefix, df-cap, and MinHash-LSH paths so a threshold or cast
+    * change cannot desynchronize them. Its batch→corpus twin (same score,
+    * plus the best-match pick) is [[bestCorpusMatch]]. */
   private[graft] def verifyPairs(candidates: DataFrame, docsArr: DataFrame,
                                  t: Double): DataFrame =
     candidates
@@ -357,6 +362,70 @@ object Dedup {
         col("c").cast("double") / (col("na") + col("nb") - col("c")))
       .filter(col("jac") >= t)
       .select("a_id", "b_id", "jac")
+
+  // ------------------------------------ incremental near-dup probe stages
+  // The batch, standing-index, banded and stream twins of the incremental
+  // probe (`dedup_incremental*`, `pipeline_curate_incremental*`, the
+  // continuous `decideBatch`) must agree decision for decision; each stage
+  // they share is defined once here and composed by all of them.
+
+  /** The PPJoin prefix-length rule: the first n − ⌈t·n⌉ + 1 elements of
+    * the order-sorted array `sorted`, n = size(`set`) (the same set,
+    * possibly unsorted). Only those elements of a document can witness a
+    * J ≥ t pair under the shared order. */
+  private[graft] def prefixSlice(t: Double, sorted: String = "os",
+                                 set: String = "os"): Column =
+    expr(s"slice($sorted, 1, cast(size($set) - ceil($t * size($set)) + 1 as int))")
+
+  /** Frozen-order prefix rows of an `(id, sh)` array frame: each
+    * document's shingles ranked by a stored `dfreq (s, df)` — df 0 for a
+    * shingle `dfreq` has never seen, so it sorts first — and cut by
+    * [[prefixSlice]], one `(id, n, s)` row per prefix shingle, `n` the
+    * document's shingle count. The PPJoin lemma holds for any total order
+    * both sides share, so this one stage builds a standing index's prefix
+    * table, its appends and every probe's batch side. */
+  private[graft] def prefixRows(arr: DataFrame, id: String, n: String,
+                                dfreq: DataFrame, t: Double): DataFrame =
+    arr.select(col(id), explode(col("sh")).as("s"))
+      .join(dfreq, Seq("s"), "left")
+      .withColumn("df", coalesce(col("df"), lit(0L)))
+      .groupBy(id)
+      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
+      .select(col(id), size(col("os")).cast("long").as(n), prefixSlice(t).as("pf"))
+      .select(col(id), col(n), explode(col("pf")).as("e"))
+      .select(col(id), col(n), col("e.s").as("s"))
+
+  /** Prefix candidates: batch prefix rows `(batch_id, bn, s)` joined on
+    * the shingle to standing prefix rows `(corpus_id, cn, s)` (`bn`/`cn`
+    * name the size columns), pruned by the symmetric length filter
+    * t·|b| ≤ |c| ∧ t·|c| ≤ |b| that J ≥ t implies; distinct
+    * `(batch_id, corpus_id)` pairs for [[bestCorpusMatch]]. */
+  private[graft] def prefixCandidates(bPrefix: DataFrame, bn: String,
+                                      cPrefix: DataFrame, cn: String,
+                                      t: Double): DataFrame =
+    bPrefix.join(cPrefix, "s")
+      .filter(col(bn) * t <= col(cn) && col(cn) * t <= col(bn))
+      .select("batch_id", "corpus_id").distinct()
+
+  /** Best corpus match per batch document: `(batch_id, corpus_id)`
+    * candidates joined back to the `(batch_id, sh, nb)` and
+    * `(corpus_id, sh, nc)` shingle arrays, scored by exact full-set
+    * Jaccard, kept at J ≥ t; the highest J wins, ties to the lowest
+    * `corpus_id`. Output `(batch_id, corpus_id, jac)`, at most one row per
+    * batch document. */
+  private[graft] def bestCorpusMatch(cand: DataFrame, bArr: DataFrame,
+                                     cArr: DataFrame, t: Double): DataFrame =
+    cand
+      .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
+      .join(cArr.select(col("corpus_id"), col("sh").as("sc"), col("nc")), "corpus_id")
+      .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
+      .withColumn("jac",
+        col("c").cast("double") / (col("nb") + col("nc") - col("c")))
+      .filter(col("jac") >= t)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
+      .filter(col("rn") === 1)
+      .select("batch_id", "corpus_id", "jac")
 
   /** Default document-frequency cap for [[jaccardNearDupDfCap]]. */
   private val DfCap = 128
@@ -1641,21 +1710,11 @@ object Dedup {
       col("doc_id").as("batch_id"), col("sh"), size(col("sh")).cast("long").as("nb")))
     val cArr = Pins.cache(shingleArrays(corpus).select(
       col("doc_id").as("corpus_id"), col("sh"), size(col("sh")).cast("long").as("nc")))
-    // exact full-set verification of the prefix-filtered candidates: join
-    // both arrays back, score, keep ≥ t, best corpus match per batch doc
-    // (highest Jaccard, ties to lowest corpus_id)
+    // exact full-set verification of the prefix-filtered candidates, best
+    // corpus match per batch doc
     val nearCand = incrementalNearCandidates(bArr, cArr, 0.5,
         "dedup_incremental", "dedup_incremental_banded (the banded standing probe)")
-    val best = nearCand
-      .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
-      .join(cArr.select(col("corpus_id"), col("sh").as("sc"), col("nc")), "corpus_id")
-      .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
-      .withColumn("jac",
-        col("c").cast("double") / (col("nb") + col("nc") - col("c")))
-      .filter(col("jac") >= 0.5)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
-      .filter(col("rn") === 1)
+    val best = bestCorpusMatch(nearCand, bArr, cArr, 0.5)
       .select(col("batch_id"), col("corpus_id"), lit("near").as("kind"), col("jac"))
     // the output is sliver-sized (≤1 row per duplicated batch doc) —
     // materialize eagerly; the scope releases every other pin of this run
@@ -1714,8 +1773,7 @@ object Dedup {
       .groupBy("id", "isB")
       .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
       .select(col("id"), col("isB"), size(col("os")).cast("long").as("n"),
-        expr(s"slice(os, 1, cast(size(os) - ceil($t * size(os)) + 1 as int))")
-          .as("pf"))
+        prefixSlice(t).as("pf"))
       // posexplode: each prefix row carries its 0-based position in the
       // doc's (df, s)-sorted order, feeding the PPJoin positional filter
       // in the candidate join below

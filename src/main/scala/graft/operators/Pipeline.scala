@@ -47,18 +47,22 @@ object Pipeline {
     * plan. Overridable per-session for tests and deliberate operators. */
   private val MaxBroadcastCorpusKey = "spark.graft.dropSetBroadcast.maxCorpusRows"
 
-  /** Anti-join `kept = corpus MINUS dropSet`, broadcast-hinted only when
-    * the corpus (hence the drop set) is provably small; otherwise unhinted
-    * so Catalyst/AQE chooses from actual sizes at runtime. */
+  /** `side` broadcast-hinted only while the corpus under `dir` is at most
+    * [[MaxBroadcastCorpusKey]] rows; past it unhinted, so Catalyst/AQE
+    * chooses from actual sizes at runtime. The one guard for every join
+    * side that grows with the corpus (drop sets, the corpus-derived
+    * benchmark shingles). The row count is footer metadata, driver-side
+    * and cached: the guard costs zero Spark jobs. */
+  private[operators] def broadcastIfSmallCorpus(s: SparkSession, dir: String,
+                                                side: DataFrame): DataFrame =
+    if (Tables.footerRowCount(s, dir, "documents") <=
+        Dedup.longConf(s, MaxBroadcastCorpusKey, 10000000L)) broadcast(side)
+    else side
+
+  /** Anti-join `kept = corpus MINUS dropSet` under the broadcast guard. */
   private[operators] def dropSetJoin(s: SparkSession, dir: String,
-                                     corpus: DataFrame, dropSet: DataFrame): DataFrame = {
-    val max = s.conf.getOption(MaxBroadcastCorpusKey).map(_.toLong).getOrElse(10000000L)
-    // footer metadata, driver-side, cached — the guard costs zero Spark
-    // jobs (the earlier df.count() here fired an action per build)
-    val corpusRows = Tables.footerRowCount(s, dir, "documents")
-    val drops = if (corpusRows <= max) broadcast(dropSet) else dropSet
-    corpus.join(drops, Seq("doc_id"), "left_anti")
-  }
+                                     corpus: DataFrame, dropSet: DataFrame): DataFrame =
+    corpus.join(broadcastIfSmallCorpus(s, dir, dropSet), Seq("doc_id"), "left_anti")
 
   def curate(s: SparkSession, dir: String): DataFrame =
     curateOf(s, keptDocs(s, dir))
@@ -257,16 +261,7 @@ object Pipeline {
         "pipeline_curate_incremental_banded (the banded standing probe)")
       // eager + tiny (≤1 row per batch doc): cuts the probe lineage so it
       // runs exactly once
-      Pins.checkpoint(nearCand
-        .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
-        .join(cArr.select(col("corpus_id"), col("sh").as("sc"), col("nc")), "corpus_id")
-        .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
-        .withColumn("jac",
-          col("c").cast("double") / (col("nb") + col("nc") - col("c")))
-        .filter(col("jac") >= 0.5)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
-        .filter(col("rn") === 1)
+      Pins.checkpoint(Dedup.bestCorpusMatch(nearCand, bArr, cArr, 0.5)
         .select(col("batch_id").as("doc_id"), lit("near_base").as("decision"),
           col("corpus_id").as("ref_id"), col("jac"), nullSplit))
     }

@@ -125,14 +125,10 @@ object QualityFilters {
       .withColumn("hit", lit(1))
     // the harness benchmark is corpus-DERIVED (every 10th doc), so unlike
     // a real eval suite its shingle set grows with the corpus — hint the
-    // broadcast only under the same footer-count guard as
-    // Pipeline.dropSetJoin, and let AQE pick from runtime sizes past it
-    val max = s.conf.getOption("spark.graft.dropSetBroadcast.maxCorpusRows")
-      .map(_.toLong).getOrElse(10000000L)
-    val benchSide =
-      if (Tables.footerRowCount(s, dir, "documents") <= max) broadcast(bench)
-      else bench
-    deconScoredOf(sh.filter(col("doc_id") % 10 =!= 0), benchSide)
+    // broadcast only under the drop-set guard, and let AQE pick from
+    // runtime sizes past it
+    deconScoredOf(sh.filter(col("doc_id") % 10 =!= 0),
+      Pipeline.broadcastIfSmallCorpus(s, dir, bench))
   }
 
   /** [[decontaminate]]'s scoring stage parametrized by the doc-shingle
@@ -391,13 +387,8 @@ object QualityFilters {
   def decontaminate13gram(s: SparkSession, dir: String): DataFrame = {
     val g = Dedup.shingles(Tables.documents(s, dir), 13)
     val bench = g.filter(col("doc_id") % 10 === 0).select("s").distinct()
-    val max = s.conf.getOption("spark.graft.dropSetBroadcast.maxCorpusRows")
-      .map(_.toLong).getOrElse(10000000L)
-    val benchSide =
-      if (Tables.footerRowCount(s, dir, "documents") <= max) broadcast(bench)
-      else bench
     g.filter(col("doc_id") % 10 =!= 0)
-      .join(benchSide, Seq("s"))
+      .join(Pipeline.broadcastIfSmallCorpus(s, dir, bench), Seq("s"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_colliding_13grams"))
       .orderBy("doc_id")
   }

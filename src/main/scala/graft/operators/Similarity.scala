@@ -776,7 +776,7 @@ object Similarity {
   private val MaxCellMassKey = "spark.graft.semanticProbe.maxCellMass"
   private[graft] val DefaultMaxCellMass = 65536L
   private def maxCellMassConf(s: SparkSession): Long =
-    s.conf.getOption(MaxCellMassKey).map(_.toLong).getOrElse(DefaultMaxCellMass)
+    Dedup.longConf(s, MaxCellMassKey, DefaultMaxCellMass)
 
   /** Acceptance guard on the FROZEN semantic quantizer — the
     * [[StandingIndex.guardMeanPrefixDf]] discipline for the `semc`/`sema`

@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   * bucketed by shingle, and probes it daily without reshuffling the
   * corpus"); this module IS that remedy, not a comment:
   *
-  *   - `build` writes four bucketed tables once per (session, corpus):
+  *   - `build` writes five bucketed tables once per (session, corpus):
   *       digests  (h, len, corpus_id)   bucketed by h          — stage-1 exact probe
   *       dfreq    (s, df)               bucketed by s          — the FROZEN prefix order
   *       prefix   (corpus_id, cn, s)    bucketed by s          — stage-2 candidate probe
   *       arrays   (corpus_id, sh, nc)   bucketed by corpus_id  — stage-2 exact verify
+  *       bands    (corpus_id, band, bucket) bucketed by bucket — banded candidate probe
   *   - `probe` answers a batch with NO corpus-side shuffle: every join
   *     lands on a table already bucketed on its join key, so only the
   *     batch sliver (the small side, by construction) moves.
@@ -162,16 +163,16 @@ object StandingIndex {
   private def corpusOf(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).filter(col("doc_id") % 7 =!= 0)
 
-  /** Build (once per session+dir) the four bucketed index tables and
-    * return the table-name tag. Serialized under a lock: unlike the
-    * loader memos (immutable plans, racing builds harmless), two
-    * concurrent builds here would WRITE the same table paths — the
-    * overwrite staging of one can delete files the other just committed. */
-  /** Table names of the four index tables for `tag`. */
+  /** Table names of the five index tables for `tag`. */
   private def tableNames(tag: String): Seq[String] =
     Seq("digests", "dfreq", "prefix", "arrays", "bands")
       .map(n => s"graft_idx_${n}_$tag")
 
+  /** Build (once per session+dir) the five bucketed index tables and
+    * return the table-name tag. Serialized under a lock: unlike the
+    * loader memos (immutable plans, racing builds harmless), two
+    * concurrent builds here would WRITE the same table paths — the
+    * overwrite staging of one can delete files the other just committed. */
   def ensureBuilt(s: SparkSession, dir: String): String = built.synchronized {
     val k = (s, dir)
     val existing = built.get(k)
@@ -179,7 +180,7 @@ object StandingIndex {
     else {
       val tag = tagOf(dir)
       // adopt an index another session already built: if the catalog still
-      // lists all four tables (shared metastore, or a newSession() off the
+      // lists all five tables (shared metastore, or a newSession() off the
       // same context), probing reads them as-is — the restart story the
       // durable-path knob exists for. The tag embeds a corpus fingerprint
       // + LogicVersion, so a changed corpus or changed build logic yields
@@ -208,13 +209,13 @@ object StandingIndex {
       .bucketBy(Buckets, bucketCol)
       .saveAsTable(s"graft_idx_${name}_$tag")
 
-  /** Write the four index tables for `corpus` under `tag` (overwrite).
+  /** Write the five index tables for `corpus` under `tag` (overwrite).
     * Exposed within the package so specs can index arbitrary corpora. */
   private[graft] def buildFor(s: SparkSession, corpus: DataFrame,
                               tag: String): Unit =
     writeProbeTables(corpus, tag, "")
 
-  /** The four dedup-probe tables (digests / arrays / dfreq / prefix) for
+  /** The five dedup-probe tables (digests / arrays / dfreq / prefix / bands) for
     * any document frame, table names prefixed by `p` — shared by the
     * incremental-dedup index (p = "", corpus split) and the
     * incremental-curation index (p = "cur", the standing KEPT set). */
@@ -242,19 +243,12 @@ object StandingIndex {
       size(col("sh")).cast("long").as("nc"))
     save(cArr, tag, s"${p}arrays", "corpus_id", "overwrite")
 
-    val shC = cArr.select(col("corpus_id"), explode(col("sh")).as("s"))
-    val dfreq = shC.groupBy("s").agg(count(lit(1)).as("df"))
+    val dfreq = cArr.select(col("corpus_id"), explode(col("sh")).as("s"))
+      .groupBy("s").agg(count(lit(1)).as("df"))
     save(dfreq, tag, s"${p}dfreq", "s", "overwrite")
 
-    val prefix = shC.join(dfreq, "s")
-      .groupBy("corpus_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
-      .select(col("corpus_id"), size(col("os")).cast("long").as("cn"),
-        expr(s"slice(os, 1, cast(size(os) - ceil($Threshold * size(os)) + 1 as int))")
-          .as("pf"))
-      .select(col("corpus_id"), col("cn"), explode(col("pf")).as("e"))
-      .select(col("corpus_id"), col("cn"), col("e.s").as("s"))
-    save(prefix, tag, s"${p}prefix", "s", "overwrite")
+    save(Dedup.prefixRows(cArr, "corpus_id", "cn", dfreq, Threshold),
+      tag, s"${p}prefix", "s", "overwrite")
 
     // the md5-minhash band rows ([[Dedup.mdBandRows]]), bucketed by band
     // bucket — the standing half of the BANDED probes' R-S candidate
@@ -291,7 +285,7 @@ object StandingIndex {
     appendProbeTables(s, tag, docs, "")
   }
 
-  /** The shared append body — same three writes for the dedup index
+  /** The shared append body — same four writes for the dedup index
     * (p = "") and the curation index (p = "cur"); the frozen-df /
     * per-segment-digest / exact-verify invariants in [[appendFor]]'s
     * scaladoc are prefix-independent. */
@@ -307,18 +301,9 @@ object StandingIndex {
       col("doc_id").as("corpus_id"), col("sh"),
       size(col("sh")).cast("long").as("nc"))
     save(cArr, tag, s"${p}arrays", "corpus_id", "append")
-    val prefix = cArr
-      .select(col("corpus_id"), explode(col("sh")).as("s"))
-      .join(s.table(s"graft_idx_${p}dfreq_$tag"), Seq("s"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .groupBy("corpus_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
-      .select(col("corpus_id"), size(col("os")).cast("long").as("cn"),
-        expr(s"slice(os, 1, cast(size(os) - ceil($Threshold * size(os)) + 1 as int))")
-          .as("pf"))
-      .select(col("corpus_id"), col("cn"), explode(col("pf")).as("e"))
-      .select(col("corpus_id"), col("cn"), col("e.s").as("s"))
-    save(prefix, tag, s"${p}prefix", "s", "append")
+    save(Dedup.prefixRows(cArr, "corpus_id", "cn",
+        s.table(s"graft_idx_${p}dfreq_$tag"), Threshold),
+      tag, s"${p}prefix", "s", "append")
     // band rows for the appended docs — per-doc, so append-only
     save(Dedup.mdBandRows(cArr.select(col("corpus_id").as("doc_id"), col("sh")))
         .select(col("doc_id").as("corpus_id"), col("band"), col("bucket")),
@@ -364,7 +349,7 @@ object StandingIndex {
     deleteProbeTables(s, tag, ids, remaining, "")
   }
 
-  /** The shared delete body — same three rewrites for the dedup index
+  /** The shared delete body — same four rewrites for the dedup index
     * (p = "") and the curation index (p = "cur"); the scaladoc invariants
     * on [[deleteFor]] are prefix-independent. */
   private def deleteProbeTables(s: SparkSession, tag: String, ids: DataFrame,
@@ -421,10 +406,6 @@ object StandingIndex {
       .join(broadcast(ids.select(col("doc_id"))), Seq("doc_id"), "left_anti"))
   }
 
-  /** Probe the standing index with the batch sliver (doc_id % 7 == 0) —
-    * output identical to [[Dedup.incrementalDedup]], but the corpus is
-    * never rescanned or reshuffled: all four index-side joins read
-    * bucketed tables on their join keys. */
   /** Adversarial-vocabulary guard on the standing PREFIX probes (round
     * 16, found by the second-decade scale rehearsal): the lossless
     * PPJoin candidate set is Σ_s dfB(s)·dfC(s); on a vocabulary that
@@ -454,7 +435,7 @@ object StandingIndex {
     * the same corpora the standing probes do. */
   private val MaxMeanPrefixDfKey = "spark.graft.prefixProbe.maxMeanDf"
   private def maxMeanPrefixDf(s: SparkSession): Double =
-    s.conf.getOption(MaxMeanPrefixDfKey).map(_.toDouble).getOrElse(128.0)
+    Dedup.doubleConf(s, MaxMeanPrefixDfKey, 128.0)
   private def meanPrefixDf(s: SparkSession, tag: String, p: String): Double = {
     val prefixRows = Tables.footerRowCountAt(s, tablePath(s, tag, s"${p}prefix"))
     val dfreqRows = Tables.footerRowCountAt(s, tablePath(s, tag, s"${p}dfreq")).max(1L)
@@ -551,14 +532,27 @@ object StandingIndex {
     }
   }
 
-  def incrementalDedupIndexed(s: SparkSession, dir: String): DataFrame = {
-    val tag = ensureBuilt(s, dir)
-    guardPrefixProbe(s, tag, "", "dedup_incremental_indexed",
-      "dedup_incremental_banded (the banded standing probe)")
-    def idx(name: String): DataFrame = s.table(s"graft_idx_${name}_$tag")
-    val t = Threshold
+  /** Probe the standing index with the batch sliver (doc_id % 7 == 0) —
+    * output identical to [[Dedup.incrementalDedup]], but the corpus is
+    * never rescanned or reshuffled: all four index-side joins read
+    * bucketed tables on their join keys. Lazy: its pins belong to the
+    * caller's scope. */
+  def incrementalDedupIndexed(s: SparkSession, dir: String): DataFrame =
+    dedupIndexedPlan(s, ensureBuilt(s, dir),
+      Tables.documents(s, dir).filter(col("doc_id") % 7 === 0))
 
-    val batch = Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
+  /** The standing dedup probe's LAZY plan, shared by the prefix
+    * ([[incrementalDedupIndexed]]) and banded ([[incrementalDedupBanded]])
+    * forms, which differ only in the guard and the candidate source —
+    * the dedup twin of [[curateIndexedPlan]]. Its pins belong to the
+    * caller's scope. */
+  private def dedupIndexedPlan(s: SparkSession, tag: String, batch: DataFrame,
+                               banded: Boolean = false): DataFrame = {
+    def idx(name: String): DataFrame = s.table(s"graft_idx_${name}_$tag")
+    // the banded probe is the guard's named remedy
+    if (!banded)
+      guardPrefixProbe(s, tag, "", "dedup_incremental_indexed",
+        "dedup_incremental_banded (the banded standing probe)")
     // exact probe: each digest is pre-min'd PER SEGMENT, and appends may
     // add a second segment row for a digest — [[minAcrossSegments]]
     // re-collapses to the batch operator's lowest-twin rule only when the
@@ -574,42 +568,11 @@ object StandingIndex {
       exact.select(col("batch_id").as("doc_id")), Seq("doc_id"), "left_anti")
     val bArr = Pins.cache(Dedup.shingleArrays(rest).select(
       col("doc_id").as("batch_id"), col("sh"),
-      size(col("sh")).cast("long").as("nb"))) // read twice: prefix build + exact verify
+      size(col("sh")).cast("long").as("nb"))) // read twice: candidates + exact verify
 
-    // batch prefixes under the frozen corpus order: stored df, 0 for
-    // corpus-unseen shingles (see object scaladoc for why this stays
-    // lossless)
-    val shB = bArr.select(col("batch_id"), explode(col("sh")).as("s"))
-    val prefB = shB.join(idx("dfreq"), Seq("s"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .groupBy("batch_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
-      .select(col("batch_id"), size(col("os")).cast("long").as("bn"),
-        expr(s"slice(os, 1, cast(size(os) - ceil($t * size(os)) + 1 as int))")
-          .as("pf"))
-      .select(col("batch_id"), col("bn"), explode(col("pf")).as("e"))
-      .select(col("batch_id"), col("bn"), col("e.s").as("s"))
-
-    // candidate probe: symmetric length filter rides the bucketed join
-    val candidates = prefB.join(idx("prefix"), "s")
-      .filter(col("bn") * t <= col("cn") && col("cn") * t <= col("bn"))
-      .select("batch_id", "corpus_id").distinct()
-
-    // exact full-set verification + best-match pick — same rule as the
-    // batch operator (highest Jaccard, ties to lowest corpus_id)
-    val best = candidates
-      .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
-      .join(idx("arrays").select(col("corpus_id"), col("sh").as("sc"), col("nc")),
-        "corpus_id")
-      .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
-      .withColumn("jac",
-        col("c").cast("double") / (col("nb") + col("nc") - col("c")))
-      .filter(col("jac") >= t)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
-      .filter(col("rn") === 1)
+    val best = Dedup.bestCorpusMatch(standingCandidates(bArr, idx, banded), bArr,
+        idx("arrays"), Threshold)
       .select(col("batch_id"), col("corpus_id"), lit("near").as("kind"), col("jac"))
-
     exact.unionByName(best).orderBy("batch_id")
   }
 
@@ -694,8 +657,8 @@ object StandingIndex {
   /** Build (once per session+dir) the standing curation tables
     * [[curateIncrementalIndexed]] probes, and return the tag:
     *
-    *  - `curdigests` / `curarrays` / `curdfreq` / `curprefix` — the same
-    *    four probe tables as the dedup index ([[writeProbeTables]]), but
+    *  - `curdigests` / `curarrays` / `curdfreq` / `curprefix` / `curbands`
+    *    — the same five probe tables as the dedup index ([[writeProbeTables]]), but
     *    over the BASE-KEPT set ([[Pipeline.keptDocsOf]] on the % 7 <> 0
     *    half): what a deployment materializes is the curated state, so
     *    exact/near probes land on kept docs only — a batch doc identical
@@ -892,37 +855,36 @@ object StandingIndex {
   /** [[incrementalDedupBanded]] against an explicit tag + batch frame —
     * the lifecycle/spec surface. */
   private[graft] def incrementalDedupBandedFor(s: SparkSession, tag: String,
-                                               batch: DataFrame): DataFrame = Pins.scope {
-    def idx(name: String): DataFrame = s.table(s"graft_idx_${name}_$tag")
-    val t = Threshold
-    val exact = Pins.cache(minAcrossSegments(s, tag, "", batch
-        .select(col("doc_id").as("batch_id"), md5(col("text")).as("h"),
-          length(col("text")).as("len"))
-        .join(idx("digests"), Seq("h", "len")), "batch_id", "corpus_id")
-      .select(col("batch_id"), col("corpus_id"),
-        lit("exact").as("kind"), lit(1.0).as("jac"))) // feeds both the output union and the left_anti below
-    val rest = batch.join(
-      exact.select(col("batch_id").as("doc_id")), Seq("doc_id"), "left_anti")
-    val bArr = Pins.cache(Dedup.shingleArrays(rest).select(
-      col("doc_id").as("batch_id"), col("sh"),
-      size(col("sh")).cast("long").as("nb"))) // read twice: band rows + exact verify
-    val pb = Dedup.mdBandRows(
-        bArr.select(col("batch_id").as("doc_id"), col("sh")))
-      .select(col("doc_id").as("batch_id"), col("band"), col("bucket"))
-    val best = bandedProbeCandidates(pb, idx("bands"))
-      .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
-      .join(idx("arrays").select(col("corpus_id"), col("sh").as("sc"), col("nc")),
-        "corpus_id")
-      .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
-      .withColumn("jac",
-        col("c").cast("double") / (col("nb") + col("nc") - col("c")))
-      .filter(col("jac") >= t)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
-      .filter(col("rn") === 1)
-      .select(col("batch_id"), col("corpus_id"), lit("near").as("kind"), col("jac"))
-    Pins.checkpoint(exact.unionByName(best).orderBy("batch_id"))
-  }
+                                               batch: DataFrame): DataFrame =
+    Pins.scope(Pins.checkpoint(dedupIndexedPlan(s, tag, batch, banded = true)))
+
+  /** Batch→standing near candidates `(batch_id, corpus_id)` for a probe
+    * batch's `(batch_id, sh, nb)` arrays against one index family's
+    * tables (`idx` names them). The two standing sources:
+    *  - BANDED: the batch's md5-minhash band rows (per-doc, computed on
+    *    the sliver) against the standing `bands` rows on the bucket key.
+    *    Hot standing buckets (> MaxBucket members — hash degeneracy or a
+    *    giant kept cluster) collapse to their minimum id, the star rule
+    *    every banded generator in the family uses: candidate volume is
+    *    ≤ MaxBucket × |batch bands| + |hot-bucket hits|, INDEPENDENT of
+    *    the vocabulary shape that makes the lossless prefix stream
+    *    quadratic on a saturated vocabulary. Recall is the band family's
+    *    (~0.9 at J = 0.5, measured by dedup_minhash_recall); each banded
+    *    oracle models the banding end-to-end, so the trade is gated.
+    *  - LOSSLESS prefix: the batch's prefixes under the FROZEN `dfreq`
+    *    order (df 0 for index-unseen shingles — see the object scaladoc
+    *    for why this stays lossless) against the bucketed `prefix` rows. */
+  private def standingCandidates(bArr: DataFrame, idx: String => DataFrame,
+                                 banded: Boolean): DataFrame =
+    if (banded)
+      bandedProbeCandidates(
+        Dedup.mdBandRows(bArr.select(col("batch_id").as("doc_id"), col("sh")))
+          .select(col("doc_id").as("batch_id"), col("band"), col("bucket")),
+        idx("bands"))
+    else
+      Dedup.prefixCandidates(
+        Dedup.prefixRows(bArr, "batch_id", "bn", idx("dfreq"), Threshold), "bn",
+        idx("prefix"), "cn", Threshold)
 
   /** The banded R-S candidate rule, factored for the cap spec: probe band
     * rows (batch_id, band, bucket) × standing band rows (corpus_id, band,
@@ -993,60 +955,16 @@ object StandingIndex {
         col("keep_id").as("ref_id"), lit(1.0).as("jac"), nullSplit)
     val r2 = Pins.cache(r1k.filter(col("doc_id") === col("keep_id")).drop("keep_id"))
 
-    // 2a. near vs the standing kept set: batch prefixes under the FROZEN
-    // curdfreq order (coalesce 0 for kept-unseen shingles — lossless, see
-    // the object scaladoc), candidates off the bucketed curprefix join,
-    // exact full-set verification against curarrays
+    // 2a. near vs the standing kept set: candidates off the curprefix or
+    // curbands rows ([[standingCandidates]]), exact full-set verification
+    // against curarrays, best match wins
     val bArr = Pins.cache(Dedup.shingleArrays(r2).select(
       col("doc_id").as("batch_id"), col("sh"),
       size(col("sh")).cast("long").as("nb")))
-    val candidates = if (banded) {
-      // BANDED R-S candidates: batch band rows (per-doc, computed on the
-      // sliver) joined to the standing `curbands` table on the bucket
-      // key. Hot standing buckets (> MaxBucket members — hash degeneracy
-      // or a giant kept cluster) collapse to their minimum kept id, the
-      // star rule every banded generator in the family uses: candidate
-      // volume is ≤ MaxBucket × |batch bands| + |hot-bucket hits|,
-      // INDEPENDENT of the vocabulary shape that makes the lossless
-      // prefix stream quadratic on a saturated vocabulary. Recall is the
-      // band family's (~0.9 at J = 0.5, measured by dedup_minhash_recall);
-      // the oracle models the banding end-to-end, so the trade is gated,
-      // not assumed.
-      val pb = Dedup.mdBandRows(
-          bArr.select(col("batch_id").as("doc_id"), col("sh")))
-        .select(col("doc_id").as("batch_id"), col("band"), col("bucket"))
-      bandedProbeCandidates(pb, idx("bands"))
-    } else {
-      // LOSSLESS prefix candidates: batch prefixes under the FROZEN
-      // curdfreq order (coalesce 0 for kept-unseen shingles — see the
-      // object scaladoc), joined to the bucketed curprefix table
-      val shB = bArr.select(col("batch_id"), explode(col("sh")).as("s"))
-      val prefB = shB.join(idx("dfreq"), Seq("s"), "left")
-        .withColumn("df", coalesce(col("df"), lit(0L)))
-        .groupBy("batch_id")
-        .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
-        .select(col("batch_id"), size(col("os")).cast("long").as("bn"),
-          expr(s"slice(os, 1, cast(size(os) - ceil($t * size(os)) + 1 as int))")
-            .as("pf"))
-        .select(col("batch_id"), col("bn"), explode(col("pf")).as("e"))
-        .select(col("batch_id"), col("bn"), col("e.s").as("s"))
-      prefB.join(idx("prefix"), "s")
-        .filter(col("bn") * t <= col("cn") && col("cn") * t <= col("bn"))
-        .select("batch_id", "corpus_id").distinct()
-    }
-    // eager + tiny: the probe (prefix join + array verify) runs once, not
-    // once for the union branch and again to populate r3's cache
-    val nearBase = Pins.checkpoint(candidates
-      .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
-      .join(idx("arrays").select(col("corpus_id"), col("sh").as("sc"), col("nc")),
-        "corpus_id")
-      .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
-      .withColumn("jac",
-        col("c").cast("double") / (col("nb") + col("nc") - col("c")))
-      .filter(col("jac") >= t)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
-      .filter(col("rn") === 1)
+    // eager + tiny: the probe (candidate join + array verify) runs once,
+    // not once for the union branch and again to populate r3's cache
+    val nearBase = Pins.checkpoint(Dedup.bestCorpusMatch(
+        standingCandidates(bArr, idx, banded), bArr, idx("arrays"), t)
       .select(col("batch_id").as("doc_id"), lit("near_base").as("decision"),
         col("corpus_id").as("ref_id"), col("jac"), nullSplit))
     val r3 = Pins.cache(r2.join(nearBase.select("doc_id"), Seq("doc_id"), "left_anti"))

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.Pins
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftShims}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
   TimerValues, TTLConfig, ValueState}
@@ -90,16 +89,7 @@ object StreamingDedup {
       val dfreq = Pins.cache(arrays
         .select(col("corpus_id"), explode(col("sh")).as("s"))
         .groupBy("s").agg(count(lit(1)).as("df")))
-      val prefix = Pins.cache(arrays
-        .select(col("corpus_id"), col("nc"), explode(col("sh")).as("s"))
-        .join(dfreq, "s")
-        .groupBy("corpus_id", "nc")
-        .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
-        .select(col("corpus_id"), col("nc"),
-          expr(s"slice(os, 1, cast(size(os) - ceil($t * size(os)) + 1 as int))")
-            .as("pf"))
-        .select(col("corpus_id"), col("nc"), explode(col("pf")).as("e"))
-        .select(col("corpus_id"), col("nc"), col("e.s").as("s")))
+      val prefix = Pins.cache(Dedup.prefixRows(arrays, "corpus_id", "nc", dfreq, t))
       StandingIndex(digests, arrays, dfreq, prefix, t)(pins)
     }
   }
@@ -127,31 +117,9 @@ object StreamingDedup {
     // batch-side prefix under the SHARED corpus-df order; shingles the
     // corpus has never seen take df = 0 (sort first — they are exactly the
     // shingles that cannot produce a corpus candidate anyway)
-    val bPrefix = bArr
-      .select(col("batch_id"), col("nb"), explode(col("sh")).as("s"))
-      .join(idx.dfreq, Seq("s"), "left")
-      .na.fill(0L, Seq("df"))
-      .groupBy("batch_id", "nb")
-      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("os"))
-      .select(col("batch_id"), col("nb"),
-        expr(s"slice(os, 1, cast(size(os) - ceil($t * size(os)) + 1 as int))")
-          .as("pf"))
-      .select(col("batch_id"), col("nb"), explode(col("pf")).as("e"))
-      .select(col("batch_id"), col("nb"), col("e.s").as("s"))
-    val cand = bPrefix.join(idx.prefix, "s")
-      .filter(col("nb") * t <= col("nc") && col("nc") * t <= col("nb"))
-      .select("batch_id", "corpus_id").distinct()
-    val best = cand
-      .join(bArr.select(col("batch_id"), col("sh").as("sb"), col("nb")), "batch_id")
-      .join(idx.arrays.select(col("corpus_id"), col("sh").as("sc"), col("nc")),
-        "corpus_id")
-      .withColumn("c", size(array_intersect(col("sb"), col("sc"))).cast("long"))
-      .withColumn("jac",
-        col("c").cast("double") / (col("nb") + col("nc") - col("c")))
-      .filter(col("jac") >= t)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("batch_id").orderBy(col("jac").desc, col("corpus_id"))))
-      .filter(col("rn") === 1)
+    val cand = Dedup.prefixCandidates(Dedup.prefixRows(bArr, "batch_id", "nb", idx.dfreq, t),
+      "nb", idx.prefix, "nc", t)
+    val best = Dedup.bestCorpusMatch(cand, bArr, idx.arrays, t)
       .select(col("batch_id"), col("corpus_id"), lit("near").as("kind"), col("jac"))
     exact.unionByName(best)
   }
@@ -678,8 +646,7 @@ object StreamingDedup {
     * so old prefix entries stay valid forever (a df order would not). */
   private def lexPrefixOf(arr: DataFrame, idCol: String, t: Double): DataFrame =
     arr.select(col(idCol).as("id"), col("n"),
-        expr(s"slice(sort_array(sh), 1, cast(size(sh) - ceil($t * size(sh)) + 1 as int))")
-          .as("pf"))
+        Dedup.prefixSlice(t, "sort_array(sh)", "sh").as("pf"))
       .select(col("id"), col("n"), explode(col("pf")).as("s"))
 
   // ------------------------------------------- durable growing curation

@@ -384,6 +384,22 @@ class PipelineSpec extends GraftSpec {
     } finally spark.conf.unset(key)
   }
 
+  test("a malformed drop-set broadcast guard fails naming the key and the value") {
+    val key = "spark.graft.dropSetBroadcast.maxCorpusRows"
+    spark.conf.set(key, "10M")
+    try {
+      // the pipelines' drop-set anti-join and both decontamination bench
+      // sides read the one guard (the scope drops what curate pinned
+      // before the guard threw)
+      Seq[() => Any](() => Pins.scope(Pipeline.curate(spark, sf0001)),
+          () => QualityFilters.decontaminate(spark, sf0001),
+          () => QualityFilters.decontaminate13gram(spark, sf0001)).foreach { mk =>
+        val ex = intercept[IllegalArgumentException](mk())
+        assert(ex.getMessage.contains(key) && ex.getMessage.contains("'10M'"), ex.getMessage)
+      }
+    } finally spark.conf.unset(key)
+  }
+
   test("exact composed forms refuse past the corpus tripwire, naming their banded twins") {
     // the exact Σ df² pair stage measured 6.3–6.7× cost at 10× data
     // (SCALE.md run E) — a config mistake must not quietly schedule it

@@ -758,6 +758,17 @@ class SimilaritySpec extends GraftSpec {
     assert(ok == Seq((5001L, 0L, false)), ok.toString)
   }
 
+  test("a malformed semantic-probe cell-mass threshold fails naming the key and the value") {
+    import spark.implicits._
+    val key = "spark.graft.semanticProbe.maxCellMass"
+    spark.conf.set(key, "lots")
+    try {
+      val ex = intercept[IllegalArgumentException](Similarity.guardSemanticCellMass(
+        spark, Seq(1L, 1L, 2L).toDF("c_id"), "spec_malformed", "spec"))
+      assert(ex.getMessage.contains(key) && ex.getMessage.contains("'lots'"), ex.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
   test("hard-negative mining matches an independent pure-Scala reference") {
     val rows = Similarity.hardNegatives(spark, sf0001).collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2), r.getDouble(3),

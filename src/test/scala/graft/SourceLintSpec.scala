@@ -4,20 +4,39 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Every cache and checkpoint lifetime in `src/main` goes through
-  * [[Pins]]: no raw pin or release call may appear anywhere else. */
+/** Ideas with one home in `src/main` stay there: every cache and
+  * checkpoint lifetime goes through [[Pins]], every SparkSession starts
+  * from [[Session.builder]], and the incremental near-dup probe stages
+  * the twins share are defined once in `Dedup`. */
 class SourceLintSpec extends AnyFunSuite {
-  test("no .cache(), .persist(, .localCheckpoint( or unpersist in src/main outside Pins.scala") {
-    val banned = Seq(".cache()", ".persist(", ".localCheckpoint(", "unpersist")
+  /** `src/main` lines matching `hit`, outside the file named `home`. */
+  private def hitsOutside(home: String)(hit: String => Boolean): Seq[String] = {
     val files = Files.walk(Paths.get("src/main")).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Pins.scala")
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != home)
       .toSeq
     assert(files.size > 50, s"src/main not found from ${Paths.get("").toAbsolutePath}")
-    val hits = files.flatMap { (p: Path) =>
+    files.flatMap { (p: Path) =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if banned.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
+        case (line, i) if hit(line) => s"$p:${i + 1}: ${line.trim}"
       }
     }
+  }
+
+  test("no .cache(), .persist(, .localCheckpoint( or unpersist in src/main outside Pins.scala") {
+    val banned = Seq(".cache()", ".persist(", ".localCheckpoint(", "unpersist")
+    val hits = hitsOutside("Pins.scala")(line => banned.exists(line.contains))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no SparkSession.builder in src/main outside Session.scala") {
+    val hits = hitsOutside("Session.scala")(_.contains("SparkSession.builder"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the PPJoin prefix slice and the best-match window live only in Dedup.scala") {
+    val prefixSlice = """slice\(.*ceil\(""".r
+    val hits = hitsOutside("Dedup.scala")(line =>
+      prefixSlice.findFirstIn(line).isDefined || line.contains("""orderBy(col("jac").desc"""))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

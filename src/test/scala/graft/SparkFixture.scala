@@ -5,20 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (Spark
   * sessions are expensive; ScalaTest may run suites concurrently, and
-  * `getOrCreate` makes this race-safe). Config mirrors the driver harness
-  * (`Verify.scala`): UTC, small shuffle partition count, nanos-as-long for
-  * the events table. */
+  * `getOrCreate` makes this race-safe). Config is the mains' own
+  * ([[Session.builder]]) over 4 cores. */
 object SparkFixture {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = Session.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.artifact.isolation.enabled", "false")
-    .config("spark.sql.optimizer.excludedRules", GraftExtensions.ExcludedOptimizerRules)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       System.getProperty("java.io.tmpdir") + "/graft_warehouse")
     .getOrCreate()

@@ -273,6 +273,16 @@ class StandingIndexSpec extends GraftSpec {
     assert(StandingIndex.incrementalDedupIndexed(spark, sf0001).count() > 0)
   }
 
+  test("a malformed prefix-probe mean-df threshold fails naming the key and the value") {
+    val key = "spark.graft.prefixProbe.maxMeanDf"
+    spark.conf.set(key, "1e2x")
+    try {
+      val ex = intercept[IllegalArgumentException](StandingIndex.guardMeanPrefixDf(
+        spark, 1.0, "spec statistic", "spec", "the banded twin"))
+      assert(ex.getMessage.contains(key) && ex.getMessage.contains("'1e2x'"), ex.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
   test("auto-routed probes pick prefix vs banded from the footer statistic and equal the routed target") {
     // the dispatcher uses the SAME zero-job statistic the guard reads, so
     // a deployment gets the right plan without catching exceptions; both
