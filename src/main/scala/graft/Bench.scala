@@ -23,6 +23,12 @@ object Bench {
       .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
   }.getOrElse(-1L)
 
+  /** Generated classes Janino has compiled in this JVM. Its delta over an
+    * observation is that query's `codegen_compiles`: about 0 in pass 2
+    * unless the codegen class cache is too small for the suite. */
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Co-tenant CPU share of the whole machine over an interval:
     * (/proc/stat busy fraction) − (this JVM's CPU fraction). The 1-min
     * loadavg cannot distinguish co-tenant load from the bench's own 32
@@ -104,18 +110,19 @@ object Bench {
       s"SPARK_GRAFT_BENCH_ONLY names unknown query: $n")))
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    final case class Obs(elapsed: Double, startEpochMs: Long, load: Double, other: Double)
+    final case class Obs(elapsed: Double, startEpochMs: Long, load: Double, other: Double,
+                         compiles: Long)
     val obs = scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[Obs]]
     val loadStart = loadavg1()
     var qIdx = 0
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Obs = {
       val ld = loadavg1()
       val wall = System.currentTimeMillis()
-      val s0 = procStat(); val c0 = processCpuNs()
+      val s0 = procStat(); val c0 = processCpuNs(); val k0 = compiles()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      val s1 = procStat(); val c1 = processCpuNs()
+      val s1 = procStat(); val c1 = processCpuNs(); val k1 = compiles()
       // queries that cache intermediates (LSH, SimHash) must not leak
       // cached blocks into later queries' memory budget; cleanup is billed
       // to no query (elapsed captured above). The explicit GC makes
@@ -130,7 +137,7 @@ object Bench {
       Pins.releaseAll() // session-ledger pins (checkpoints, persisted sorts), same deal
       qIdx += 1
       if (qIdx % gcEvery == 0) System.gc()
-      Obs(elapsed, wall, ld, otherCpuFrac(s0, s1, c0, c1))
+      Obs(elapsed, wall, ld, otherCpuFrac(s0, s1, c0, c1), k1 - k0)
     }
     for (pass <- 1 to passes; (name, fn) <- names) {
       System.err.println(s"[bench] pass $pass start $name")
@@ -299,6 +306,7 @@ object Bench {
           ",\"t0_ms\":[" + os.map(_.startEpochMs).mkString(",") + "]" +
           ",\"load\":[" + os.map(o => r2(o.load)).mkString(",") + "]" +
           ",\"other_cpu\":[" + os.map(o => r2(o.other)).mkString(",") + "]" +
+          ",\"codegen_compiles\":[" + os.map(_.compiles).mkString(",") + "]" +
           ",\"contended\":" + contendedQ.contains(k) + "}"
       }.mkString("{", ",", "}")
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),

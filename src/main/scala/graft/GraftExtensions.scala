@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.{GraftShims, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{DotProduct, DtwDistance, SimHashAgg, TopKByScore}
@@ -36,6 +37,30 @@ import graft.functions.{DotProduct, DtwDistance, SimHashAgg, TopKByScore}
 object GraftExtensions {
   val ExcludedOptimizerRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+
+  /** Generated classes a JVM keeps compiled (Spark's default is 100). One
+    * pass of the 16-query interactive mix or the four dedup jobs generates
+    * about 300 distinct classes, so at 100 a closed loop evicted every
+    * class before its reuse and Janino recompiled each one (10-25 ms) on
+    * the driver and again in tasks, every pass and every micro-batch.
+    * `graft.Bench` over the 261 declared queries at sf0.01 compiled about
+    * 5,900 classes in each pass at 100 entries; at 8192 it compiles about
+    * 3,000 in its first pass and 200 in its second. */
+  val CodegenCacheEntries = 8192
+
+  /** Finished SQL executions the status store keeps when the UI is off:
+    * only the latest. Nothing reads that history without the UI, and at
+    * Spark's 1000 it holds every query's plan description and metrics. */
+  val RetainedSqlExecutions = 1
+
+  /** Graft's defaults for two of Spark's static SQL confs, written into
+    * `conf` unless it already sets them (an explicit value wins); the SQL
+    * history is trimmed only when `spark.ui.enabled` is false. */
+  def defaultStaticConfs(conf: SparkConf): Unit = {
+    conf.setIfMissing("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    if (!conf.getBoolean("spark.ui.enabled", defaultValue = true))
+      conf.setIfMissing("spark.sql.ui.retainedExecutions", RetainedSqlExecutions.toString)
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -78,6 +103,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Extensions apply after the SparkContext starts and before the
+    // session's shared state copies its conf: the one point every graft
+    // session passes where static confs can still take effect. The codegen
+    // cache is sized once, at the JVM's first code generation.
+    GraftShims.updateActiveConf(GraftExtensions.defaultStaticConfs)
+
     // optimizer rule: prune non-matching rows BEFORE the generator
     // explodes them (see the rule's Scaladoc for the soundness argument)
     ext.injectOptimizerRule(_ => graft.plans.PushStartsWithThroughExplode)

@@ -18,6 +18,12 @@ object GraftShims {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Apply `f` to the active SparkContext's own conf (`private[spark]`),
+    * the conf a session's shared state copies when it is created. Does
+    * nothing when no context is active. */
+  def updateActiveConf(f: org.apache.spark.SparkConf => Unit): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(sc => f(sc.conf))
+
   // ---- pin handles for graft.Pins: a checkpoint is its RDD, a cached
   // frame its cache entry's builder (the identity a plan walk finds)
 

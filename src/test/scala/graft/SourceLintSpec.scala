@@ -6,13 +6,14 @@ import scala.jdk.CollectionConverters._
 
 /** Ideas with one home in `src/main` stay there: every cache and
   * checkpoint lifetime goes through [[Pins]], every SparkSession starts
-  * from [[Session.builder]], and the incremental near-dup probe stages
-  * the twins share are defined once in `Dedup`. */
+  * from [[Session.builder]], the incremental near-dup probe stages the
+  * twins share are defined once in `Dedup`, and Spark's static confs are
+  * written only by [[GraftExtensions]] through the `GraftShims` bridge. */
 class SourceLintSpec extends AnyFunSuite {
-  /** `src/main` lines matching `hit`, outside the file named `home`. */
-  private def hitsOutside(home: String)(hit: String => Boolean): Seq[String] = {
+  /** `src/main` lines matching `hit`, outside the files named `homes`. */
+  private def hitsOutside(homes: String*)(hit: String => Boolean): Seq[String] = {
     val files = Files.walk(Paths.get("src/main")).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != home)
+      .filter(p => p.toString.endsWith(".scala") && !homes.contains(p.getFileName.toString))
       .toSeq
     assert(files.size > 50, s"src/main not found from ${Paths.get("").toAbsolutePath}")
     files.flatMap { (p: Path) =>
@@ -37,6 +38,14 @@ class SourceLintSpec extends AnyFunSuite {
     val prefixSlice = """slice\(.*ceil\(""".r
     val hits = hitsOutside("Dedup.scala")(line =>
       prefixSlice.findFirstIn(line).isDefined || line.contains("""orderBy(col("jac").desc"""))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("Spark's static codegen and SQL-history confs are set only in GraftExtensions and GraftShims") {
+    val banned = Seq("spark.sql.codegen.cache.maxEntries", "spark.sql.ui.retainedExecutions",
+      "SparkConf", "setIfMissing")
+    val hits = hitsOutside("GraftExtensions.scala", "GraftShims.scala")(line =>
+      banned.exists(line.contains))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
