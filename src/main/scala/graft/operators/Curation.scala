@@ -480,14 +480,10 @@ object Curation {
       .filter((nw >= 30L) && (nw <= 100000L) &&
               (meanWl >= 3.0) && (meanWl <= 10.0) &&
               (fracAlpha >= 0.8) && (stopCnt >= 2L))
-    val w = Window.partitionBy(md5(col("text")), length(col("text")))
     // cache: the survivor set feeds BOTH the model fit and the scoring pass
     // (and through them four aggregate subtrees) — without it every stage
     // re-runs the gate + dedup window from the scan
-    val deduped = Pins.cache(gated
-      .withColumn("rn", row_number().over(w.orderBy(col("doc_id"))))
-      .filter(col("rn") === 1)
-      .select("doc_id", "text", "source"))
+    val deduped = Pins.cache(Dedup.exactSurvivors(gated).select("doc_id", "text", "source"))
     val scored = dsirScoreOf(docTokens(deduped), dsirModelOf(docTokens(deduped)))
     val budget = scored.agg(expr("sum(n_toks) div 2").as("budget"))
     val cum = Window.orderBy(col("dsir_logweight").desc, col("doc_id"))
@@ -626,11 +622,10 @@ object Curation {
     val pass = ((nw >= 30L) && (nw <= 100000L) &&
                 (meanWl >= 3.0) && (meanWl <= 10.0) &&
                 (fracAlpha >= 0.8) && (stopCnt >= 2L)).cast("int")
-    val w = Window.partitionBy(md5(col("text")), length(col("text")))
     Tables.documents(s, dir)
       .withColumn("pass", pass)
       .withColumn("n_toks", nw)
-      .withColumn("dup", (count(lit(1)).over(w) > 1L).cast("int"))
+      .withColumn("dup", (count(lit(1)).over(Dedup.sameText) > 1L).cast("int"))
       .groupBy("pass", "dup")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
       .orderBy("pass", "dup")

@@ -59,15 +59,24 @@ object Dedup {
     * the full text never leaves the scan except for the single survivor.
     * (Collision risk of md5 on equality grouping is ~2^-64 at corpus scale —
     * the standard trade; a paranoid variant adds length to the key.) */
-  def exactDedup(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(md5(col("text")), length(col("text")))
+  def exactDedup(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .withColumn("rn", row_number().over(w.orderBy(col("doc_id"))))
-      .withColumn("n_copies", count(lit(1)).over(w))
+      .withColumn("rn", row_number().over(sameText.orderBy(col("doc_id"))))
+      .withColumn("n_copies", count(lit(1)).over(sameText))
       .filter(col("rn") === 1)
       .select("doc_id", "n_copies", "lang", "source", "n_chars")
       .orderBy("doc_id")
-  }
+
+  /** The content-identity window every exact-dedup rule partitions by:
+    * (md5, length) of the text, so the shuffle key is a digest and never
+    * the document itself. */
+  private[graft] val sameText = Window.partitionBy(md5(col("text")), length(col("text")))
+
+  /** The exact-dedup survivor rule: the lowest doc_id of each identical
+    * text, full rows, column order unchanged. */
+  private[graft] def exactSurvivors(docs: DataFrame): DataFrame =
+    docs.withColumn("rn", row_number().over(sameText.orderBy(col("doc_id"))))
+      .filter(col("rn") === 1).drop("rn")
 
   val exactDedupSql: String =
     """SELECT doc_id, count(*) OVER (PARTITION BY text) AS n_copies,
@@ -136,9 +145,29 @@ object Dedup {
     * cache/analysis boundary kept EliminateSorts from removing (r20
     * optimization, guide §2.4: "an orderBy used only to make output
     * deterministic"). Query-level callers that declare ordered output
-    * sort at their own tail. */
+    * sort at their own tail. The exact [[PairSource]]. */
   private[graft] def jaccardPairsFrom(docs: DataFrame, t: Double = 0.5): DataFrame =
     jaccardPairsFromArrays(Pins.cache(shingleArrays(docs)), t)
+
+  /** A near-dup pair generator: (doc_id, text) documents and a Jaccard
+    * threshold t in, unordered (a_id < b_id, jac ≥ t) pairs out. Every
+    * self-join consumer (ER, the curation pipelines, the standing probe's
+    * within-batch pass) takes one, so the exact and banded twins differ
+    * in this argument only: [[jaccardPairsFrom]] (all pairs, Σ df²) or
+    * [[bandedPairsFrom]] (md5-minhash band candidates, verified). */
+  private[graft] type PairSource = (DataFrame, Double) => DataFrame
+
+  /** The banded [[PairSource]]: md5-minhash band candidates
+    * ([[minhashMd5CandidatesFrom]], star cap included) through exact
+    * verification — a subset of [[jaccardPairsFrom]]'s pairs with the
+    * same `jac`, missing a pair only by the band family's recall. */
+  private[graft] def bandedPairsFrom(docs: DataFrame, t: Double = 0.5): DataFrame =
+    bandedPairsFromArrays(Pins.cache(shingleArrays(docs)), t)
+
+  /** [[bandedPairsFrom]] over an already-built (doc_id, sh) shingle-array
+    * frame, beside [[jaccardPairsFromArrays]]. */
+  private[graft] def bandedPairsFromArrays(docsArr: DataFrame, t: Double = 0.5): DataFrame =
+    verifyPairs(minhashMd5CandidatesFrom(docsArr), docsArr, t)
 
   /** [[jaccardPairsFrom]] over an ALREADY-BUILT (doc_id, sh) shingle-array
     * frame (callers that hold one cached — the incremental batch stages —
@@ -680,11 +709,8 @@ object Dedup {
     * exists to PROVE the banding/candidate/verify machinery end-to-end
     * against an independent engine rather than against our own spec.
     * Same 4-shuffle, candidates-not-n² scale story as [[minhashLsh]]. */
-  def minhashMd5(s: SparkSession, dir: String): DataFrame = {
-    val docsArr = Pins.cache(shingleArrays(Tables.documents(s, dir)))
-    verifyPairs(minhashMd5CandidatesFrom(docsArr), docsArr, 0.5)
-      .orderBy("a_id", "b_id")
-  }
+  def minhashMd5(s: SparkSession, dir: String): DataFrame =
+    bandedPairsFrom(Tables.documents(s, dir)).orderBy("a_id", "b_id")
 
   /** The candidate stage of [[minhashMd5]] — factored so the recall report
     * ([[minhashRecall]]) measures EXACTLY the pair set the production query
@@ -1155,11 +1181,14 @@ object Dedup {
     * clusters are dense, so a handful; the classic large-star/small-star
     * variant gets O(log n) on adversarial graphs). The driver loop holds
     * only a changed-row COUNT, never data. Deterministic (min over ids) →
-    * oracle-checked against a DuckDB recursive-CTE reachability closure. */
+    * oracle-checked against a DuckDB recursive-CTE reachability closure.
+    * The pairs are [[jaccardPairsFrom]]'s unordered set, not the declared
+    * [[jaccardNearDup]]: that query's presentation orderBy would reach
+    * the CC edge checkpoint as two range-partition Exchanges and Sorts. */
   def nearDupClusters(s: SparkSession, dir: String): DataFrame = {
     guardExactPairs(s, dir, "neardup_clusters",
       "connectedComponents over neardup_minhash_md5 pairs")
-    connectedComponents(jaccardNearDup(s, dir).select("a_id", "b_id"))
+    connectedComponents(jaccardPairsFrom(Tables.documents(s, dir)).select("a_id", "b_id"))
   }
 
   // --------------------------------------------- cluster canonicalization
@@ -1183,7 +1212,7 @@ object Dedup {
     val scored = Tables.documents(s, dir)
       .select(col("doc_id"),
         round(size(array_distinct(t)).cast("double") / size(t), 6).as("ttr"))
-    val labels = ccLabels(jaccardNearDup(s, dir).select("a_id", "b_id"))
+    val labels = ccLabels(jaccardPairsFrom(Tables.documents(s, dir)).select("a_id", "b_id"))
       .withColumnRenamed("id", "doc_id")
     val w = Window.partitionBy(col("lbl"))
       .orderBy(col("ttr").desc, col("doc_id"))
@@ -1273,8 +1302,9 @@ object Dedup {
   }
 
   /** The label table behind [[connectedComponents]]: one (id, lbl) row
-    * per clustered doc, lbl = the component's minimum id. The curation
-    * pipeline consumes this directly (drop every id ≠ lbl). */
+    * per clustered doc, lbl = the component's minimum id. Its eager edge
+    * checkpoint is where a collapse's pair edges are materialized, and it
+    * reads `pairs` once, so callers hand in lazy pair plans. */
   private[graft] def ccLabels(pairs: DataFrame): DataFrame = {
     // The fixpoint loop below is the ONE place a query builder legitimately
     // runs eager jobs (localCheckpoint materialization + convergence
@@ -1288,6 +1318,11 @@ object Dedup {
     try ccLabelsInner(pairs)
     finally sc.setLocalProperty(CcFixpointTag, prevTag)
   }
+
+  /** The near-dup collapse: every clustered doc that is not its
+    * component's minimum id, as (id, lbl) rows — drop `id`, keep `lbl`. */
+  private[graft] def nonRepresentatives(pairs: DataFrame): DataFrame =
+    ccLabels(pairs.select("a_id", "b_id")).filter(col("id") =!= col("lbl"))
 
   private[graft] val CcFixpointTag = "graft.cc.fixpoint"
 
@@ -1311,9 +1346,14 @@ object Dedup {
     var nEdges = 0L
     val edges = {
       // ids cast to long here, so every path below (the driver collect's
-      // getLong included) holds for any integral id type
-      val e = pairs.select(col("a_id").cast("long").as("src"), col("b_id").cast("long").as("dst"))
-      val e0 = Pins.checkpoint(e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
+      // getLong included) holds for any integral id type. Both directions
+      // come from one explode, so the checkpoint evaluates `pairs` once
+      // (a union of the two directions would run its plan twice)
+      val (a, b) = (col("a_id").cast("long"), col("b_id").cast("long"))
+      val e0 = Pins.checkpoint(pairs
+        .select(explode(array(struct(a.as("src"), b.as("dst")), struct(b.as("src"), a.as("dst"))))
+          .as("e"))
+        .select("e.src", "e.dst"))
       nEdges = e0.count()
       GraftShims.repinStats(e0, nEdges, 16L)
     }
@@ -1457,24 +1497,28 @@ object Dedup {
     * does) so the third signal can never drift from the gated query. */
   def entityResolution(s: SparkSession, dir: String): DataFrame = {
     guardExactPairs(s, dir, "entity_resolution", "entity_resolution_lsh")
-    connectedComponents(entityPairsOf(Tables.documents(s, dir)))
+    entitiesOf(Tables.documents(s, dir), jaccardPairsFrom)
+  }
+
+  private def entitiesOf(docs: DataFrame, pairs: PairSource): DataFrame =
+    connectedComponents(entityPairsOf(docs, pairs))
       .select(col("cluster_rep").as("entity_rep"),
         col("cluster_size").as("entity_size"), col("member_ids"))
       .orderBy("entity_rep")
-  }
 
-  /** The three-signal edge set behind [[entityResolution]], parametrized by
-    * the document set — also the per-batch pair source of the CONTINUOUS
-    * resolver ([[graft.streaming.StreamingCurate.EntityResolveSession]]),
-    * which must use these exact signals so the stream can never drift from
-    * the batch query. */
-  private[graft] def entityPairsOf(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(md5(col("text")), length(col("text")))
+  /** The three-signal edge set behind [[entityResolution]] and
+    * [[entityResolutionLsh]], parametrized by the document set and the
+    * near-text [[PairSource]] — also the per-batch pair source of the
+    * CONTINUOUS resolver
+    * ([[graft.streaming.StreamingCurate.EntityResolveSession]]), which must
+    * use these exact signals so the stream can never drift from the batch
+    * query. */
+  private[graft] def entityPairsOf(docs: DataFrame, pairs: PairSource): DataFrame = {
     val exact = docs
-      .withColumn("bmin", min(col("doc_id")).over(w))
+      .withColumn("bmin", min(col("doc_id")).over(sameText))
       .filter(col("doc_id") =!= col("bmin"))
       .select(col("bmin").as("a_id"), col("doc_id").as("b_id"))
-    val near = jaccardPairsFrom(docs, 0.7).select(col("a_id"), col("b_id"))
+    val near = pairs(docs, 0.7).select(col("a_id"), col("b_id"))
     // corpus-faithful media signal: ER asserts identity over REAL docs;
     // the sentinel fixture is confined to the mm_* gate registrations
     val media = Multimodal.imageNearDupOf(docs, sentinels = false)
@@ -1552,27 +1596,7 @@ object Dedup {
     * gated number (`dedup_minhash_recall`); at J ≥ 0.7 with 8 bands × 2
     * rows a qualifying pair is missed w.p. (1 − 0.7²)⁸ ≈ 0.5%. */
   def entityResolutionLsh(s: SparkSession, dir: String): DataFrame =
-    connectedComponents(entityPairsLshOf(Tables.documents(s, dir)))
-      .select(col("cluster_rep").as("entity_rep"),
-        col("cluster_size").as("entity_size"), col("member_ids"))
-      .orderBy("entity_rep")
-
-  /** The banded-candidate edge set behind [[entityResolutionLsh]] — exact
-    * and media signals identical to [[entityPairsOf]]; only the near-text
-    * candidate generator differs. */
-  private[graft] def entityPairsLshOf(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(md5(col("text")), length(col("text")))
-    val exact = docs
-      .withColumn("bmin", min(col("doc_id")).over(w))
-      .filter(col("doc_id") =!= col("bmin"))
-      .select(col("bmin").as("a_id"), col("doc_id").as("b_id"))
-    val docsArr = Pins.cache(shingleArrays(docs))
-    val near = verifyPairs(minhashMd5CandidatesFrom(docsArr), docsArr, 0.7)
-      .select(col("a_id"), col("b_id"))
-    val media = Multimodal.imageNearDupOf(docs, sentinels = false)
-      .select(col("a_id"), col("b_id"))
-    exact.unionAll(near).unionAll(media).distinct()
-  }
+    entitiesOf(Tables.documents(s, dir), bandedPairsFrom)
 
   /** DuckDB mirror of [[entityResolutionLsh]]: the faithful media chain +
     * the md5-minhash band chain (signatures, string band buckets, the

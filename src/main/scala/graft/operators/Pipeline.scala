@@ -20,8 +20,11 @@ import org.apache.spark.sql.functions._
   *                               benchmark set)
   *     → split assignment       (hash-keyed train/valid/test)
   *
+  * The chain is written once, [[keptDocsOf]], and takes its near-dup
+  * pairs from a [[Dedup.PairSource]]: the exact queries pass
+  * [[Dedup.jaccardPairsFrom]], the `_lsh` twins [[Dedup.bandedPairsFrom]].
   * Every stage is the SAME logic as its stand-alone oracle-checked query
-  * (shared code: [[Dedup.jaccardPairsFrom]], [[Dedup.ccLabels]],
+  * (shared code: [[Dedup.exactSurvivors]], [[Dedup.nonRepresentatives]],
   * [[QualityFilters.repetitionFilter]], [[QualityFilters.decontaminate]],
   * [[DataPrep.splitOf]]), so the composition itself is what this query
   * verifies — drop-set semantics, stage ordering, and the final schema.
@@ -68,9 +71,9 @@ object Pipeline {
     curateOf(s, keptDocs(s, dir))
 
   /** [[curate]]'s LSH-banded scale twin: the identical five-stage chain,
-    * but the near-dup collapse arrives through the md5-minhash BAND
-    * candidates ([[Dedup.minhashMd5CandidatesFrom]]) with exact J ≥ 0.5
-    * verification instead of the full inverted-index pair join — the same
+    * but the near-dup collapse arrives through [[Dedup.bandedPairsFrom]]
+    * (md5-minhash BAND candidates with exact J ≥ 0.5 verification)
+    * instead of the full inverted-index pair join — the same
     * swap `entity_resolution_lsh` proved for the ER capstone. Why it is a
     * gated query: the round-13 scale rehearsal (SCALE.md) measured the
     * exact pair stage inside this pipeline at 5.7× for 10× data (Σ df² ∝
@@ -89,59 +92,51 @@ object Pipeline {
       .select("doc_id", "lang", "source", "n_chars", "split")
       .orderBy("doc_id")
 
-  /** The curation chain's survivor set (full document rows) — shared by
-    * [[curate]] and [[trainingSet]]. */
+  /** The non-benchmark corpus every curation chain runs over. */
+  private def corpusOf(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
+
+  /** The curation chain's survivor set (full document rows) with the
+    * exact pair stage — shared by [[curate]] and [[trainingSet]]. */
   private[operators] def keptDocs(s: SparkSession, dir: String): DataFrame = {
     Dedup.guardExactPairs(s, dir, "pipeline_curate/pipeline_training_set (exact form)",
       "pipeline_curate_lsh / pipeline_training_set_lsh")
-    keptDocsVia(s, dir) { exact =>
-      Dedup.jaccardPairsFrom(exact).select("a_id", "b_id")
-    }
+    keptDocsOf(s, dir, corpusOf(s, dir), Dedup.jaccardPairsFrom)
   }
 
-  /** Survivor set with the BANDED near-dup stage — shared by
-    * [[curateLsh]] and [[trainingSetLsh]]. Only stage 2's pair generator
-    * differs from [[keptDocs]]; stages 1/3/4/5 are the same code. */
+  /** Survivor set with the BANDED pair stage — shared by [[curateLsh]]
+    * and [[trainingSetLsh]]. */
   private[operators] def keptDocsLsh(s: SparkSession, dir: String): DataFrame =
-    keptDocsVia(s, dir)(bandedNearPairs)
+    keptDocsOf(s, dir, corpusOf(s, dir), Dedup.bandedPairsFrom)
 
-  /** The banded near-dup pair generator over the exact survivors —
-    * stage 2 of [[keptDocsLsh]] and [[funnelReportLsh]] (package-wide so
-    * the streaming-fold specs can rebuild the SAME banded kept state). */
+  /** The banded near-dup pairs of `exact`, materialized: the stage the
+    * perfbench `pipeline.near_pairs` probe times on its own. */
   private[graft] def bandedNearPairs(exact: DataFrame): DataFrame = Pins.scope {
-    val arr = Pins.cache(Dedup.shingleArrays(exact))
-    // the checkpoint is EAGER: the verified pair set (two longs per row,
-    // tiny vs the shingle arrays) is materialized right here, so the scope
-    // releases the arr cache on return — the downstream CC fixpoint
-    // re-checkpoints and repins its own edge stats anyway
-    Pins.checkpoint(Dedup.verifyPairs(Dedup.minhashMd5CandidatesFrom(arr), arr, 0.5)
-      .select("a_id", "b_id"))
+    Pins.checkpoint(Dedup.bandedPairsFrom(exact).select("a_id", "b_id"))
   }
 
-  private def keptDocsVia(s: SparkSession, dir: String)
-                         (nearPairsOf: DataFrame => DataFrame): DataFrame =
-    keptDocsOf(s, dir,
-      Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))(nearPairsOf)
+  /** Stage 2, the near-dup collapse over the exact survivors: the
+    * non-representative ids (`doc_id`) of `pairs`' components. It runs in
+    * its own scope, so the pair source's shingle arrays are released once
+    * [[Dedup.ccLabels]] has materialized the edges. */
+  private def nearDupDrops(exact: DataFrame, pairs: Dedup.PairSource): DataFrame =
+    Pins.scope(Dedup.nonRepresentatives(pairs(exact, 0.5)).select(col("id").as("doc_id")))
 
-  /** [[keptDocsVia]] parametrized by the corpus frame — the reusable form
-    * [[curateIncremental]] runs over the BASE half of the corpus to build
-    * the standing kept state a delta batch probes against. */
+  /** The curation chain's survivor set over `corpus`, with the near-dup
+    * collapse's pairs from `pairs` — the one definition behind every
+    * curation query ([[keptDocs]], [[keptDocsLsh]], [[funnelReport]]'s
+    * stages) and the standing kept state [[curateIncremental]] and the
+    * standing curation index build over the BASE half of the corpus. */
   private[graft] def keptDocsOf(s: SparkSession, dir: String, corpus: DataFrame,
-                        repFlags: Option[DataFrame] = None,
-                        conFlags: Option[DataFrame] = None)
-                        (nearPairsOf: DataFrame => DataFrame): DataFrame = {
+                                pairs: Dedup.PairSource,
+                                repFlags: Option[DataFrame] = None,
+                                conFlags: Option[DataFrame] = None): DataFrame = {
     // 1. exact dedup WITHIN the corpus (a benchmark twin must not decide
     // survivorship for a train doc)
-    val w = Window.partitionBy(md5(col("text")), length(col("text")))
-      .orderBy(col("doc_id"))
-    val exact = corpus.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
+    val exact = Dedup.exactSurvivors(corpus)
 
-    // 2. near-dup collapse over the exact survivors: every clustered doc
-    // that is not its component's minimum id is dropped
-    val nonReps = Dedup.ccLabels(nearPairsOf(exact))
-      .filter(col("id") =!= col("lbl"))
-      .select(col("id").as("doc_id"))
+    // 2. near-dup collapse over the exact survivors
+    val nonReps = nearDupDrops(exact, pairs)
 
     // 3./4. per-doc quality flags are corpus-independent decisions, so the
     // standalone operators' outputs ARE the drop sets (callers that need
@@ -155,6 +150,23 @@ object Pipeline {
     val dropSet = nonReps.union(repFlagged).union(contaminated).distinct()
 
     dropSetJoin(s, dir, exact, dropSet)
+  }
+
+  /** Stage 2b of both incremental curation probes ([[curateIncremental]]
+    * and the standing index's): the within-batch near-dup collapse over
+    * the batch docs still undecided (`rest`), read from the batch's
+    * shingle arrays (`bArr`, keyed `batch_id`) through `pairs`, one of
+    * the `…FromArrays` pair sources. One decision row per
+    * non-representative, ref_id = its component's minimum. */
+  private[operators] def nearBatchDecisions(bArr: DataFrame, rest: DataFrame, t: Double,
+                                            pairs: Dedup.PairSource): DataFrame = {
+    val restArr = bArr
+      .join(rest.select(col("doc_id").as("batch_id")), Seq("batch_id"), "left_semi")
+      .select(col("batch_id").as("doc_id"), col("sh"))
+    Dedup.nonRepresentatives(pairs(restArr, t))
+      .select(col("id").as("doc_id"), lit("near_batch").as("decision"),
+        col("lbl").as("ref_id"), lit(null).cast("double").as("jac"),
+        lit(null).cast("string").as("split"))
   }
 
   /** INCREMENTAL composed curation — the job a deployment actually runs
@@ -200,7 +212,7 @@ object Pipeline {
     * (CC components cannot bridge through dropped docs); the oracle pins
     * the incremental semantics themselves, row-for-row. */
   def curateIncremental(s: SparkSession, dir: String): DataFrame = Pins.scope {
-    val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
+    val corpus = corpusOf(s, dir)
     val base  = corpus.filter(col("doc_id") % 7 =!= 0)
     val batch = Pins.cache(corpus.filter(col("doc_id") % 7 === 0))
     // the per-doc quality flags serve BOTH the base-kept build and the
@@ -214,7 +226,7 @@ object Pipeline {
     // swap [[curateLsh]] made on stage 2, with the oracle's base-kept
     // chain banded to match — the hash gate still covers the build
     // semantics end-to-end, now of the plan a deployment would run
-    val kept = Pins.cache(keptDocsOf(s, dir, base, Some(rep), Some(con))(bandedNearPairs))
+    val kept = Pins.cache(keptDocsOf(s, dir, base, Dedup.bandedPairsFrom, Some(rep), Some(con)))
 
     def keyed(d: DataFrame, as: String): DataFrame = d.select(
       col("doc_id").as(as), md5(col("text")).as("h"),
@@ -232,8 +244,7 @@ object Pipeline {
     val r1 = batch.join(exactBase.select("doc_id"), Seq("doc_id"), "left_anti")
 
     // 1b. exact within the remaining batch (keep lowest id per text)
-    val grp = Window.partitionBy(md5(col("text")), length(col("text")))
-    val r1k = r1.withColumn("keep_id", min("doc_id").over(grp))
+    val r1k = r1.withColumn("keep_id", min("doc_id").over(Dedup.sameText))
     val exactBatch = r1k.filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"), lit("exact_batch").as("decision"),
         col("keep_id").as("ref_id"), lit(1.0).as("jac"), nullSplit)
@@ -271,14 +282,8 @@ object Pipeline {
     // The sliver's shingle arrays are already sitting in the bArr cache
     // (r2 ⊇ r3, shingleArrays is per-row): a semi-join reads them back
     // instead of re-tokenizing r3's texts (r20, guide §5 reuse)
-    val nearBatch = Pins.checkpoint(Dedup.ccLabels(
-        Dedup.jaccardPairsFromArrays(bArr
-          .join(r3.select(col("doc_id").as("batch_id")), Seq("batch_id"), "left_semi")
-          .select(col("batch_id").as("doc_id"), col("sh")))
-          .select("a_id", "b_id"))
-      .filter(col("id") =!= col("lbl"))
-      .select(col("id").as("doc_id"), lit("near_batch").as("decision"),
-        col("lbl").as("ref_id"), nullJac, nullSplit))
+    val nearBatch = Pins.checkpoint(
+      nearBatchDecisions(bArr, r3, 0.5, Dedup.jaccardPairsFromArrays))
     val r4 = r3.join(nearBatch.select("doc_id"), Seq("doc_id"), "left_anti")
 
     // 3./4. per-doc quality gates, in stage order (flags shared with the
@@ -705,7 +710,7 @@ object Pipeline {
     * stages, the quality gates or the decision tail.
     *
     * The base-kept build is BANDED (round 16), mirroring the Scala side's
-    * [[bandedNearPairs]] swap — spliced from the SAME CTE builder the
+    * [[Dedup.bandedPairsFrom]] swap — spliced from the SAME CTE builder the
     * curate_lsh/training_set_lsh oracles use, so the incremental oracles'
     * banding can never drift from theirs. Mid-chain CTEs are pinned
     * MATERIALIZED (bmbands feeds bmbstats AND bmjoined; bmjoined
@@ -988,30 +993,24 @@ object Pipeline {
     * unioned, so the whole report is one action. */
   def funnelReport(s: SparkSession, dir: String): DataFrame = {
     Dedup.guardExactPairs(s, dir, "pipeline_funnel_report", "pipeline_funnel_report_lsh")
-    funnelReportVia(s, dir) { exact =>
-      Dedup.jaccardPairsFrom(exact).select("a_id", "b_id")
-    }
+    funnelReportVia(s, dir, Dedup.jaccardPairsFrom)
   }
 
   /** [[funnelReport]]'s LSH-banded scale twin: the same five-row funnel,
-    * but stage 3's drop set arrives through [[bandedNearPairs]] — the
+    * but stage 3's drop set arrives through [[Dedup.bandedPairsFrom]] — the
     * single-stage swap [[curateLsh]]/[[trainingSetLsh]] make, so the
     * funnel a curator prints at 100 TB reports the SAME chain the banded
     * pipelines actually run (its row-5 count IS `count(curateLsh)`), not
     * the exact chain's counts. Gated against the banded kept-CTE oracle. */
   def funnelReportLsh(s: SparkSession, dir: String): DataFrame =
-    funnelReportVia(s, dir)(bandedNearPairs)
+    funnelReportVia(s, dir, Dedup.bandedPairsFrom)
 
-  private def funnelReportVia(s: SparkSession, dir: String)
-                             (nearPairsOf: DataFrame => DataFrame): DataFrame = {
-    val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
-    val w = Window.partitionBy(md5(col("text")), length(col("text")))
-      .orderBy(col("doc_id"))
-    val exact = Pins.cache(corpus.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn"))
-    val nonReps = Dedup.ccLabels(nearPairsOf(exact))
-      .filter(col("id") =!= col("lbl"))
-      .select(col("id").as("doc_id"))
+  // the [[keptDocsOf]] stages, each counted after it applies
+  private def funnelReportVia(s: SparkSession, dir: String,
+                              pairs: Dedup.PairSource): DataFrame = {
+    val corpus = corpusOf(s, dir)
+    val exact = Pins.cache(Dedup.exactSurvivors(corpus))
+    val nonReps = nearDupDrops(exact, pairs)
     val afterNear = Pins.cache(exact.join(nonReps, Seq("doc_id"), "left_anti"))
     val afterRep = Pins.cache(afterNear.join(
       QualityFilters.repetitionFlagsOf(Tables.documents(s, dir)).select("doc_id"),

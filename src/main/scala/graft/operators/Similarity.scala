@@ -486,7 +486,14 @@ object Similarity {
   def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     guardExactBaseline(s, dir, "semantic_dedup",
       "semantic_dedup_ivf (IVF-clustered SemDeDup: emb_kmeans_fit cells + per-cluster dedup)")
-    val labels = Dedup.ccLabels(signGridPairs(s, dir).select("a_id", "b_id"))
+    semDedupDecisions(s, dir, signGridPairs(s, dir))
+  }
+
+  /** The semantic-dedup decision table over the (a_id, b_id) cosine pairs:
+    * one (vec_id, cluster_rep, kept) row per embedding, cluster_rep = the
+    * CC component minimum (the vector itself when unpaired). */
+  private def semDedupDecisions(s: SparkSession, dir: String, pairs: DataFrame): DataFrame = {
+    val labels = Dedup.ccLabels(pairs.select("a_id", "b_id"))
       .withColumnRenamed("id", "vec_id")
     embeddings(s, dir).select(col("vec_id"))
       .join(labels, Seq("vec_id"), "left")
@@ -637,9 +644,9 @@ object Similarity {
     // cached: the within-cell pair stage references the assignment on
     // BOTH self-join sides, and the Lloyd chain's broadcast stages are
     // not covered by exchange reuse — without the cache the 3-round fit
-    // executed twice (r19 optimization; ccLabels materializes the pair
-    // edges eagerly right below, so the result no longer reads the cache
-    // and the scope releases it)
+    // executed twice (r19 optimization; the ccLabels inside
+    // semDedupDecisions materializes the pair edges eagerly, so the result
+    // no longer reads the cache and the scope releases it)
     val assigned = Pins.cache(kmeansAssignments(s, dir, KmeansIters))
     val pairs = assigned.select(col("c_id"), col("vec_id").as("a_id"), col("v").as("va"))
       .join(assigned.select(col("c_id"), col("vec_id").as("b_id"), col("v").as("vb")),
@@ -647,14 +654,7 @@ object Similarity {
       .filter(col("a_id") < col("b_id"))
       .withColumn("score", cosine(col("va"), col("vb")))
       .filter(col("score") >= 0.4)
-    val labels = Dedup.ccLabels(pairs.select("a_id", "b_id"))
-      .withColumnRenamed("id", "vec_id")
-    embeddings(s, dir).select(col("vec_id"))
-      .join(labels, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("lbl"), col("vec_id")).as("cluster_rep"),
-        (coalesce(col("lbl"), col("vec_id")) === col("vec_id")).as("kept"))
-      .orderBy("vec_id")
+    semDedupDecisions(s, dir, pairs)
   }
 
   /** [[semanticDedupIvf]]'s twin: the shared unrolled-Lloyd chain

@@ -3,7 +3,6 @@ package graft.operators
 import graft.Pins
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Materialized standing dedup index — the production form of
@@ -697,7 +696,7 @@ object StandingIndex {
       .filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 =!= 0)
     // banded pair stage, matching [[Pipeline.curateIncremental]]'s kept
     // build (round 16) — the two must agree because they share one oracle
-    val kept = Pipeline.keptDocsOf(s, dir, base)(Pipeline.bandedNearPairs)
+    val kept = Pipeline.keptDocsOf(s, dir, base, Dedup.bandedPairsFrom)
     buildCurationFromKept(s, kept,
       Tables.documents(s, dir).filter(col("doc_id") % 10 === 0), tag)
   }
@@ -948,8 +947,7 @@ object StandingIndex {
     val r1 = batch.join(exactBase.select("doc_id"), Seq("doc_id"), "left_anti")
 
     // 1b. exact within the remaining batch (keep lowest id per text)
-    val grp = Window.partitionBy(md5(col("text")), length(col("text")))
-    val r1k = r1.withColumn("keep_id", min("doc_id").over(grp))
+    val r1k = r1.withColumn("keep_id", min("doc_id").over(Dedup.sameText))
     val exactBatch = r1k.filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"), lit("exact_batch").as("decision"),
         col("keep_id").as("ref_id"), lit(1.0).as("jac"), nullSplit)
@@ -974,21 +972,8 @@ object StandingIndex {
     // band candidates here too: on the vocabulary shapes this probe
     // exists for, the SLIVER is itself corpus-proportional and the exact
     // within-batch join inherits the same quadratic term.
-    val batchPairs =
-      if (banded) {
-        val r3Arr = bArr
-          .join(r3.select(col("doc_id").as("batch_id")), Seq("batch_id"),
-            "left_semi")
-          .select(col("batch_id").as("doc_id"), col("sh"))
-        Dedup.verifyPairs(Dedup.minhashMd5CandidatesFrom(r3Arr), r3Arr, t)
-      } else Dedup.jaccardPairsFromArrays(bArr
-        .join(r3.select(col("doc_id").as("batch_id")), Seq("batch_id"),
-          "left_semi")
-        .select(col("batch_id").as("doc_id"), col("sh")))
-    val nearBatch = Dedup.ccLabels(batchPairs.select("a_id", "b_id"))
-      .filter(col("id") =!= col("lbl"))
-      .select(col("id").as("doc_id"), lit("near_batch").as("decision"),
-        col("lbl").as("ref_id"), nullJac, nullSplit)
+    val nearBatch = Pipeline.nearBatchDecisions(bArr, r3, t,
+      if (banded) Dedup.bandedPairsFromArrays else Dedup.jaccardPairsFromArrays)
     val r4 = Pins.cache(r3.join(nearBatch.select("doc_id"), Seq("doc_id"), "left_anti"))
 
     // 3./4. quality gates scored over the SLIVER only (per-doc decisions)

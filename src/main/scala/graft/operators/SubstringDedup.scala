@@ -263,10 +263,7 @@ object SubstringDedup {
     * scaladoc), stage 3 row-local — no new shuffles beyond the standalone
     * operators'. */
   def substringCurate(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(md5(col("text")), length(col("text")))
-    val exact = Tables.documents(s, dir)
-      .withColumn("rn", row_number().over(w.orderBy(col("doc_id"))))
-      .filter(col("rn") === 1).drop("rn")
+    val exact = Dedup.exactSurvivors(Tables.documents(s, dir))
     val ivs = substringSpansFrom(exact)
       .select(col("b_id").as("doc_id"), col("b_start").as("s"),
         (col("b_start") + col("span_len") - 1).as("e"))

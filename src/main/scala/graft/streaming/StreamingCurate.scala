@@ -487,7 +487,7 @@ object StreamingCurate {
       val all = pins.within(Pins.checkpoint(seen.map(_.unionByName(mb)).getOrElse(mb)))
       seen.foreach(Pins.release)
       val bid = mb.select(col("doc_id").as("bid"))
-      val pairs = graft.operators.Dedup.entityPairsOf(all)
+      val pairs = graft.operators.Dedup.entityPairsOf(all, graft.operators.Dedup.jaccardPairsFrom)
         .join(broadcast(bid),
           col("a_id") === col("bid") || col("b_id") === col("bid"), "left_semi")
         .collect().map(r => (r.getLong(0), r.getLong(1)))

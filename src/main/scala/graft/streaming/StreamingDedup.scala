@@ -556,36 +556,21 @@ object StreamingDedup {
         }
       // the batch's own doc-id list rides the SAME action as the two pair
       // families (tag 2) — it was a separate collect before (r20)
-      val pairRows = mbKeyed.alias("a")
-        .join(mbKeyed.alias("b"), col("a.h") === col("b.h") &&
-          col("a.len") === col("b.len") && col("a.doc_id") < col("b.doc_id"))
-        .select(lit(0).as("tag"), col("a.doc_id").as("lo"), col("b.doc_id").as("hi"))
+      val pairRows = withinBatchExactPairs(mbKeyed)
+        .select(lit(0).as("tag"), col("lo"), col("hi"))
         .unionByName(withinNear
           .select(lit(1).as("tag"), col("a_id").as("lo"), col("b_id").as("hi")))
         .unionByName(mbAll
           .select(lit(2).as("tag"), col("doc_id").as("lo"), lit(-1L).as("hi")))
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      val exactPairs = pairRows.collect { case (0, a, b) => (a, b) }
-      val nearPairs = pairRows.collect { case (1, a, b) => (a, b) }
-      val batchIds = pairRows.collect { case (2, a, _) => a }
-
       // ---- driver: greedy resolution in doc order (batch-sized, serial)
-      val exactBy = exactPairs.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).toSeq }
-      val nearBy = nearPairs.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).toSeq }
-      val kept = scala.collection.mutable.TreeSet.empty[Long]
-      val decisions = scala.collection.mutable.ArrayBuffer.empty[CurateDecision]
-      batchIds.sorted.foreach { id =>
-        val exactK: Option[Long] = (idxExact.get(id).toSeq ++
-          exactBy.getOrElse(id, Nil).filter(kept)).minOption
-        lazy val nearK: Option[Long] = (idxNear.get(id).toSeq ++
-          nearBy.getOrElse(id, Nil).filter(kept)).minOption
-        if (exactK.isDefined) decisions += CurateDecision(id, "exact", exactK.get)
-        else if (nearK.isDefined) decisions += CurateDecision(id, "near", nearK.get)
-        else { kept += id; decisions += CurateDecision(id, "kept", -1L) }
-      }
+      val decisions = greedyResolve(pairRows.collect { case (2, a, _) => a }.toSeq,
+        idxExact, idxNear, pairRows.collect { case (0, a, b) => (a, b) }.toSeq,
+        pairRows.collect { case (1, a, b) => (a, b) }.toSeq)
+      val kept = keptIn(decisions)
 
       // ---- grow the index with this batch's kept docs
-      val keptIds = kept.toSeq.toDF("doc_id")
+      val keptIds = kept.toDF("doc_id")
       val newAll = mbAll.join(keptIds, "doc_id")
         .select(col("doc_id").as("id"), col("h"), col("len"),
           col("sh"), col("n"))
@@ -637,9 +622,43 @@ object StreamingDedup {
       // above have materialized (the batch's own pins go with the scope)
       Seq(oldAll, oldPf, oldBd).filter(_ != null).foreach(Pins.release)
 
-      decisions.toSeq
+      decisions
     }
   }
+
+  /** Within-batch exact-content pairs of a (doc_id, h, len) digest frame,
+    * as (lo, hi) rows with lo < hi. */
+  private def withinBatchExactPairs(keyed: DataFrame): DataFrame =
+    keyed.alias("a")
+      .join(keyed.alias("b"), col("a.h") === col("b.h") &&
+        col("a.len") === col("b.len") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("lo"), col("b.doc_id").as("hi"))
+
+  /** The greedy prefix rule over one batch, decided on the driver in
+    * doc_id order: a doc is an `exact` dup of the smallest of its index
+    * hit (`idxExact`, doc → keeper) and the lower-id KEPT batch docs it
+    * pairs with in `exactPairs`; failing that a `near` dup, by the same
+    * rule over `idxNear` and `nearPairs`; otherwise it is kept, and only
+    * then can it keep later batch docs out. Pairs are (lo, hi), lo < hi.
+    * Pure, and shared by both growing indexes. */
+  private[graft] def greedyResolve(batchIds: Seq[Long],
+                                   idxExact: Map[Long, Long], idxNear: Map[Long, Long],
+                                   exactPairs: Seq[(Long, Long)],
+                                   nearPairs: Seq[(Long, Long)]): Seq[CurateDecision] = {
+    def lowerBy(pairs: Seq[(Long, Long)]) = pairs.groupMap(_._2)(_._1)
+    val (exactBy, nearBy) = (lowerBy(exactPairs), lowerBy(nearPairs))
+    val kept = scala.collection.mutable.Set.empty[Long]
+    batchIds.sorted.map { id =>
+      val exactK = (idxExact.get(id).toSeq ++ exactBy.getOrElse(id, Nil).filter(kept)).minOption
+      lazy val nearK = (idxNear.get(id).toSeq ++ nearBy.getOrElse(id, Nil).filter(kept)).minOption
+      if (exactK.isDefined) CurateDecision(id, "exact", exactK.get)
+      else if (nearK.isDefined) CurateDecision(id, "near", nearK.get)
+      else { kept += id; CurateDecision(id, "kept", -1L) }
+    }
+  }
+
+  private def keptIn(decisions: Seq[CurateDecision]): Seq[Long] =
+    decisions.collect { case d if d.kind == "kept" => d.doc_id }
 
   /** Lex-order PPJoin prefix entries of a shingle-array frame — the
     * growing-index order: lexicographic never shifts as the corpus grows,
@@ -736,10 +755,7 @@ object StreamingDedup {
     }
 
     // ---- distributed: WITHIN-batch candidate pairs (driver resolves)
-    val exactPairs = mbKeyed.alias("a")
-      .join(mbKeyed.alias("b"), col("a.h") === col("b.h") &&
-        col("a.len") === col("b.len") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("lo"), col("b.doc_id").as("hi"))
+    val exactPairs = withinBatchExactPairs(mbKeyed)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // the batch is shingled once: the within-batch pairs read the pinned
     // arrays the index probe used
@@ -748,24 +764,13 @@ object StreamingDedup {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
 
     // ---- driver: greedy resolution in doc order (batch-sized, serial)
-    val exactBy = exactPairs.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).toSeq }
-    val nearBy = nearPairs.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).toSeq }
-    val kept = scala.collection.mutable.TreeSet.empty[Long]
-    val decisions = scala.collection.mutable.ArrayBuffer.empty[CurateDecision]
-    mb.select("doc_id").collect().map(_.getLong(0)).sorted.foreach { id =>
-      val exactK: Option[Long] = (idxExact.get(id).toSeq ++
-        exactBy.getOrElse(id, Nil).filter(kept)).minOption
-      lazy val nearK: Option[Long] = (idxNear.get(id).toSeq ++
-        nearBy.getOrElse(id, Nil).filter(kept)).minOption
-      if (exactK.isDefined) decisions += CurateDecision(id, "exact", exactK.get)
-      else if (nearK.isDefined) decisions += CurateDecision(id, "near", nearK.get)
-      else { kept += id; decisions += CurateDecision(id, "kept", -1L) }
-    }
+    val decisions = greedyResolve(mb.select("doc_id").collect().map(_.getLong(0)).toSeq,
+      idxExact, idxNear, exactPairs.toSeq, nearPairs.toSeq)
 
     // ---- grow the durable index with this batch's kept docs (guarded)
     val marker = new java.io.File(gidxPath(tag, s"_applied_$batchId"))
     if (!marker.exists()) {
-      val keptIds = kept.toSeq.toDF("doc_id")
+      val keptIds = keptIn(decisions).toDF("doc_id")
       def appendTo(df: DataFrame, name: String, bucketCol: String): Unit =
         df.write.mode("append").option("path", gidxPath(tag, name))
           .bucketBy(8, bucketCol).saveAsTable(gidxTable(name, tag))
@@ -779,7 +784,7 @@ object StreamingDedup {
       marker.createNewFile()
     }
 
-    decisions.toSeq
+    decisions
   }
 
   /** Streaming wiring for [[durableDecideAndGrow]] — same contract as

@@ -177,6 +177,60 @@ class DedupSpec extends GraftSpec {
     assert(fast._1.nonEmpty && fast._2.nonEmpty)
   }
 
+  test("ccLabels reads its pair input once: both edge directions come from one pass") {
+    // a union of the two directions ran the pair plan twice; every caller
+    // hands ccLabels a lazy plan, so a second read repeats the whole join
+    import org.apache.spark.sql.functions.{col, udf}
+    val reads = spark.sparkContext.longAccumulator("cc_pair_reads")
+    val tick = udf { (x: Long) => reads.add(1); x }
+    val n = 50L
+    val pairs = spark.range(n)
+      .select(tick(col("id") * 2).as("a_id"), (col("id") * 2 + 1).as("b_id"))
+    val labels = Dedup.ccLabels(pairs).collect()
+    assert(labels.length == 2 * n)
+    assert(reads.value == n, s"the pair plan was evaluated ${reads.value / n.toDouble} times")
+  }
+
+  test("neardup_clusters' CC edge checkpoint carries no presentation sort") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint" && qe.analyzed.output.map(_.name) == Seq("src", "dst"))
+          plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Pins.scope(Dedup.nearDupClusters(spark, sf0001).collect())
+    finally {
+      Thread.sleep(1000) // the listener bus is async
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val edgePlans = plans.asScala.toSeq
+    assert(edgePlans.nonEmpty, "no CC edge checkpoint was seen")
+    val globalSort = """Sort \[.*\], true""".r
+    edgePlans.foreach { p =>
+      assert(!p.contains("rangepartitioning") && globalSort.findFirstIn(p).isEmpty,
+        s"edge checkpoint plan sorts its pairs:\n$p")
+    }
+  }
+
+  test("pair-source contract: banded pairs are a subset of exact pairs with equal jac") {
+    val docs = graft.Tables.documents(spark, sf0001)
+    def pairsOf(src: Dedup.PairSource, t: Double): Map[(Long, Long), Double] =
+      src(docs, t).collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    for (t <- Seq(0.5, 0.7)) Pins.scope {
+      val exact = pairsOf(Dedup.jaccardPairsFrom, t)
+      val banded = pairsOf(Dedup.bandedPairsFrom, t)
+      assert(banded.nonEmpty, s"t=$t: no banded pairs on the harness corpus")
+      assert(banded.forall { case (k, j) => k._1 < k._2 && j >= t && exact.get(k).contains(j) },
+        s"t=$t: banded pairs outside the exact set: " +
+        banded.filterNot { case (k, j) => exact.get(k).contains(j) }.take(3))
+    }
+  }
+
   test("oversized buckets emit star candidates that keep giant clusters fully connected") {
     // a true near-dup cluster larger than MaxBucket(=64) lands in the same
     // oversized bucket in EVERY band — dropping the bucket would lose the

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Ideas with one home in `src/main` stay there: every cache and
   * checkpoint lifetime goes through [[Pins]], every SparkSession starts
   * from [[Session.builder]], the incremental near-dup probe stages the
-  * twins share are defined once in `Dedup`, and Spark's static confs are
+  * twins share, the exact-dedup window, the near-dup collapse and the
+  * md5 band candidates are defined once in `Dedup`, and Spark's static confs are
   * written only by [[GraftExtensions]] through the `GraftShims` bridge. */
 class SourceLintSpec extends AnyFunSuite {
   /** `src/main` lines matching `hit`, outside the files named `homes`. */
@@ -38,6 +39,13 @@ class SourceLintSpec extends AnyFunSuite {
     val prefixSlice = """slice\(.*ceil\(""".r
     val hits = hitsOutside("Dedup.scala")(line =>
       prefixSlice.findFirstIn(line).isDefined || line.contains("""orderBy(col("jac").desc"""))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the content window, the non-representative filter and the md5 band candidates live only in Dedup.scala") {
+    val banned = Seq("""partitionBy(md5(col("text")), length(col("text")))""",
+      """col("id") =!= col("lbl")""", "minhashMd5CandidatesFrom(")
+    val hits = hitsOutside("Dedup.scala")(line => banned.exists(line.contains))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -73,9 +73,7 @@ class StandingIndexSpec extends GraftSpec {
 
     // fresh rebuild over kept ∪ admitted under its own tag
     val base = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 =!= 0)
-    val kept = Pipeline.keptDocsOf(spark, sf0001, base) { exact =>
-      Dedup.jaccardPairsFrom(exact).select("a_id", "b_id")
-    }
+    val kept = Pipeline.keptDocsOf(spark, sf0001, base, Dedup.jaccardPairsFrom)
     StandingIndex.buildCurationFromKept(spark,
       kept.unionByName(admittedDocs), docs.filter(col("doc_id") % 10 === 0), tag2)
     val fresh = dec(StandingIndex.curateIncrementalIndexedFor(spark, tag2, batch))
@@ -98,9 +96,7 @@ class StandingIndexSpec extends GraftSpec {
     val sfx = System.nanoTime()
     val tag1 = s"curdel1_$sfx"; val tag2 = s"curdel2_$sfx"
     val base = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 =!= 0)
-    val kept = Pipeline.keptDocsOf(spark, sf0001, base) { exact =>
-      Dedup.jaccardPairsFrom(exact).select("a_id", "b_id")
-    }.cache()
+    val kept = Pipeline.keptDocsOf(spark, sf0001, base, Dedup.jaccardPairsFrom).cache()
     val bench = docs.filter(col("doc_id") % 10 === 0)
     StandingIndex.buildCurationFromKept(spark, kept, bench, tag1)
     val batch = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 === 0)
@@ -187,9 +183,7 @@ class StandingIndexSpec extends GraftSpec {
     import graft.operators.{Dedup, Pipeline}
     val docs = Tables.documents(spark, sf0001)
     val base = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 =!= 0)
-    val kept = Pipeline.keptDocsOf(spark, sf0001, base) { exact =>
-      Dedup.jaccardPairsFrom(exact).select("a_id", "b_id")
-    }
+    val kept = Pipeline.keptDocsOf(spark, sf0001, base, Dedup.jaccardPairsFrom)
     val bench = docs.filter(col("doc_id") % 10 === 0)
     val tag = s"curcompact_${System.nanoTime()}"
     StandingIndex.buildCurationFromKept(spark, kept, bench, tag)
@@ -577,7 +571,7 @@ class StandingIndexSpec extends GraftSpec {
     val day2 = dec(StandingIndex.curateIncrementalBandedFor(spark, tag1, batch))
 
     val base = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 =!= 0)
-    val kept = Pipeline.keptDocsOf(spark, sf0001, base)(Pipeline.bandedNearPairs)
+    val kept = Pipeline.keptDocsOf(spark, sf0001, base, Dedup.bandedPairsFrom)
     StandingIndex.buildCurationFromKept(spark,
       kept.unionByName(admittedDocs),
       docs.filter(col("doc_id") % 10 === 0), tag2)
@@ -623,7 +617,7 @@ class StandingIndexSpec extends GraftSpec {
     val sfx = System.nanoTime()
     val tag1 = s"curbandd1_$sfx"; val tag2 = s"curbandd2_$sfx"
     val base = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 =!= 0)
-    val kept = Pipeline.keptDocsOf(spark, sf0001, base)(Pipeline.bandedNearPairs)
+    val kept = Pipeline.keptDocsOf(spark, sf0001, base, Dedup.bandedPairsFrom)
       .cache()
     val bench = docs.filter(col("doc_id") % 10 === 0)
     StandingIndex.buildCurationFromKept(spark, kept, bench, tag1)

@@ -436,7 +436,7 @@ class StreamingCurateSpec extends GraftSpec {
       "the stream must append its admitted docs (maintenance marker)")
 
     // 2. random slicings == day-by-day fold over fresh rebuilds
-    val kept0 = Pipeline.keptDocsOf(spark, sf0001, base)(Pipeline.bandedNearPairs)
+    val kept0 = Pipeline.keptDocsOf(spark, sf0001, base, graft.operators.Dedup.bandedPairsFrom)
       .cache()
     for ((seed, msId) <- Seq((17, 372), (41, 373))) {
       val rnd = new scala.util.Random(seed)
@@ -515,7 +515,7 @@ class StreamingCurateSpec extends GraftSpec {
       s"${one.diff(batchRef).take(3)} vs ${batchRef.diff(one).take(3)}")
 
     // 2. a random slicing == the day-by-day BANDED fold over fresh rebuilds
-    val kept0 = Pipeline.keptDocsOf(spark, sf0001, base)(Pipeline.bandedNearPairs)
+    val kept0 = Pipeline.keptDocsOf(spark, sf0001, base, graft.operators.Dedup.bandedPairsFrom)
       .cache()
     val rnd = new scala.util.Random(29)
     val chunks = splitChunks(delta, 2 + rnd.nextInt(3), rnd).filter(_.nonEmpty)

@@ -252,6 +252,51 @@ class StreamingDedupSpec extends GraftSpec {
     }
   }
 
+  test("greedyResolve == O(n²) greedy reference over index hits and within-batch pairs") {
+    // the driver half both growing indexes share, pure: the index hits and
+    // the within-batch pairs are computed here from text and shingle sets,
+    // and the decisions must equal the reference's over one id-ordered run
+    def shingles(text: String): Set[String] = {
+      val tk = text.split(" ", -1)
+      if (tk.length < 3) Set.empty else tk.sliding(3).map(_.mkString(" ")).toSet
+    }
+    def jac(a: Set[String], b: Set[String]): Double = {
+      val c = (a & b).size
+      val d = a.size + b.size - c
+      if (d == 0) 0.0 else c.toDouble / d
+    }
+    val rnd = new scala.util.Random(23)
+    val vocab = Seq("a", "b", "c", "d")
+    for (trial <- 0 until 30) {
+      val docs = (1L to 30L).map(id =>
+        id -> Seq.fill(3 + rnd.nextInt(3))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      val sh = docs.map { case (id, text) => id -> shingles(text) }.toMap
+      val text = docs.toMap
+      val kept = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val expected = docs.map { case (id, _) =>
+        val exactK = kept.filter(k => text(k) == text(id)).minOption
+        lazy val nearK = kept.filter(k => jac(sh(k), sh(id)) >= 0.5).minOption
+        (exactK, nearK) match {
+          case (Some(k), _) => StreamingDedup.CurateDecision(id, "exact", k)
+          case (None, Some(k)) => StreamingDedup.CurateDecision(id, "near", k)
+          case _ => kept += id; StreamingDedup.CurateDecision(id, "kept", -1L)
+        }
+      }
+      val cut = rnd.nextInt(docs.size)
+      val (idx, batch) = (docs.take(cut).map(_._1), docs.drop(cut).map(_._1))
+      val idxKept = idx.filter(kept.contains)
+      def hits(m: (Long, Long) => Boolean): Map[Long, Long] =
+        batch.flatMap(b => idxKept.filter(m(_, b)).minOption.map(b -> _)).toMap
+      def pairs(m: (Long, Long) => Boolean): Seq[(Long, Long)] =
+        for (a <- batch; b <- batch if a < b && m(a, b)) yield (a, b)
+      val sameText = (a: Long, b: Long) => text(a) == text(b)
+      val near = (a: Long, b: Long) => jac(sh(a), sh(b)) >= 0.5
+      val got = StreamingDedup.greedyResolve(rnd.shuffle(batch),
+        hits(sameText), hits(near), pairs(sameText), pairs(near))
+      assert(got == expected.drop(cut), s"trial $trial, cut $cut")
+    }
+  }
+
   test("growing-corpus curation == independent greedy reference, any micro-batch splits") {
     // The greedy prefix rule (drop iff exact/near match against an earlier
     // KEPT doc, decided in doc order) is order-deterministic, so the
