@@ -164,8 +164,7 @@ object Dedup {
   private[graft] def bandedPairsFrom(docs: DataFrame, t: Double = 0.5): DataFrame =
     bandedPairsFromArrays(Pins.cache(shingleArrays(docs)), t)
 
-  /** [[bandedPairsFrom]] over an already-built (doc_id, sh) shingle-array
-    * frame, beside [[jaccardPairsFromArrays]]. */
+  /** [[bandedPairsFrom]] over a built shingle-array frame (cf. [[jaccardPairsFromArrays]]). */
   private[graft] def bandedPairsFromArrays(docsArr: DataFrame, t: Double = 0.5): DataFrame =
     verifyPairs(minhashMd5CandidatesFrom(docsArr), docsArr, t)
 

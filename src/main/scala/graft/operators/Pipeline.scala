@@ -84,7 +84,7 @@ object Pipeline {
     * Candidate recall vs the exact pair set is itself a gated number
     * (`dedup_minhash_recall`). */
   def curateLsh(s: SparkSession, dir: String): DataFrame =
-    curateOf(s, keptDocsLsh(s, dir))
+    curateOf(s, keptDocsOf(s, dir, corpusOf(s, dir), Dedup.bandedPairsFrom))
 
   private def curateOf(s: SparkSession, kept: DataFrame): DataFrame =
     DataPrep.splitOf(kept)
@@ -104,16 +104,9 @@ object Pipeline {
     keptDocsOf(s, dir, corpusOf(s, dir), Dedup.jaccardPairsFrom)
   }
 
-  /** Survivor set with the BANDED pair stage — shared by [[curateLsh]]
-    * and [[trainingSetLsh]]. */
-  private[operators] def keptDocsLsh(s: SparkSession, dir: String): DataFrame =
-    keptDocsOf(s, dir, corpusOf(s, dir), Dedup.bandedPairsFrom)
-
-  /** The banded near-dup pairs of `exact`, materialized: the stage the
-    * perfbench `pipeline.near_pairs` probe times on its own. */
-  private[graft] def bandedNearPairs(exact: DataFrame): DataFrame = Pins.scope {
-    Pins.checkpoint(Dedup.bandedPairsFrom(exact).select("a_id", "b_id"))
-  }
+  /** The banded pairs of `exact`, materialized (perfbench's `pipeline.near_pairs` probe). */
+  private[graft] def bandedNearPairs(exact: DataFrame): DataFrame =
+    Pins.scope(Pins.checkpoint(Dedup.bandedPairsFrom(exact).select("a_id", "b_id")))
 
   /** Stage 2, the near-dup collapse over the exact survivors: the
     * non-representative ids (`doc_id`) of `pairs`' components. It runs in
@@ -124,7 +117,7 @@ object Pipeline {
 
   /** The curation chain's survivor set over `corpus`, with the near-dup
     * collapse's pairs from `pairs` — the one definition behind every
-    * curation query ([[keptDocs]], [[keptDocsLsh]], [[funnelReport]]'s
+    * curation query ([[keptDocs]], the `_lsh` twins, [[funnelReport]]'s
     * stages) and the standing kept state [[curateIncremental]] and the
     * standing curation index build over the BASE half of the corpus. */
   private[graft] def keptDocsOf(s: SparkSession, dir: String, corpus: DataFrame,
@@ -132,10 +125,8 @@ object Pipeline {
                                 repFlags: Option[DataFrame] = None,
                                 conFlags: Option[DataFrame] = None): DataFrame = {
     // 1. exact dedup WITHIN the corpus (a benchmark twin must not decide
-    // survivorship for a train doc)
+    // survivorship for a train doc); 2. near-dup collapse over its survivors
     val exact = Dedup.exactSurvivors(corpus)
-
-    // 2. near-dup collapse over the exact survivors
     val nonReps = nearDupDrops(exact, pairs)
 
     // 3./4. per-doc quality flags are corpus-independent decisions, so the
@@ -784,14 +775,14 @@ object Pipeline {
     trainingSetOf(keptDocs(s, dir))
 
   /** [[trainingSet]]'s LSH-banded scale twin: the identical PII-scrub /
-    * mixture / split / chunking stages over [[keptDocsLsh]]'s survivor
+    * mixture / split / chunking stages over the banded [[keptDocsOf]] survivor
     * set — the same single-stage swap [[curateLsh]] makes on [[curate]],
     * so at 100 TB the full training-set build (not just the curate
     * report) has a plan whose near-dup stage is banded rather than the
     * Σ df² pair join. Gated end-to-end against the banded kept-CTE
     * oracle exactly like the exact form. */
   def trainingSetLsh(s: SparkSession, dir: String): DataFrame =
-    trainingSetOf(keptDocsLsh(s, dir))
+    trainingSetOf(keptDocsOf(s, dir, corpusOf(s, dir), Dedup.bandedPairsFrom))
 
   private def trainingSetOf(kept0: DataFrame): DataFrame = {
     val kept = kept0

@@ -567,7 +567,7 @@ object StreamingDedup {
       val decisions = greedyResolve(pairRows.collect { case (2, a, _) => a }.toSeq,
         idxExact, idxNear, pairRows.collect { case (0, a, b) => (a, b) }.toSeq,
         pairRows.collect { case (1, a, b) => (a, b) }.toSeq)
-      val kept = keptIn(decisions)
+      val kept = decisions.collect { case d if d.kind == "kept" => d.doc_id }
 
       // ---- grow the index with this batch's kept docs
       val keptIds = kept.toDF("doc_id")
@@ -641,12 +641,10 @@ object StreamingDedup {
     * rule over `idxNear` and `nearPairs`; otherwise it is kept, and only
     * then can it keep later batch docs out. Pairs are (lo, hi), lo < hi.
     * Pure, and shared by both growing indexes. */
-  private[graft] def greedyResolve(batchIds: Seq[Long],
-                                   idxExact: Map[Long, Long], idxNear: Map[Long, Long],
-                                   exactPairs: Seq[(Long, Long)],
-                                   nearPairs: Seq[(Long, Long)]): Seq[CurateDecision] = {
-    def lowerBy(pairs: Seq[(Long, Long)]) = pairs.groupMap(_._2)(_._1)
-    val (exactBy, nearBy) = (lowerBy(exactPairs), lowerBy(nearPairs))
+  private[graft] def greedyResolve(batchIds: Seq[Long], idxExact: Map[Long, Long],
+      idxNear: Map[Long, Long], exactPairs: Seq[(Long, Long)],
+      nearPairs: Seq[(Long, Long)]): Seq[CurateDecision] = {
+    val (exactBy, nearBy) = (exactPairs.groupMap(_._2)(_._1), nearPairs.groupMap(_._2)(_._1))
     val kept = scala.collection.mutable.Set.empty[Long]
     batchIds.sorted.map { id =>
       val exactK = (idxExact.get(id).toSeq ++ exactBy.getOrElse(id, Nil).filter(kept)).minOption
@@ -656,9 +654,6 @@ object StreamingDedup {
       else { kept += id; CurateDecision(id, "kept", -1L) }
     }
   }
-
-  private def keptIn(decisions: Seq[CurateDecision]): Seq[Long] =
-    decisions.collect { case d if d.kind == "kept" => d.doc_id }
 
   /** Lex-order PPJoin prefix entries of a shingle-array frame — the
     * growing-index order: lexicographic never shifts as the corpus grows,
@@ -770,7 +765,7 @@ object StreamingDedup {
     // ---- grow the durable index with this batch's kept docs (guarded)
     val marker = new java.io.File(gidxPath(tag, s"_applied_$batchId"))
     if (!marker.exists()) {
-      val keptIds = keptIn(decisions).toDF("doc_id")
+      val keptIds = decisions.collect { case d if d.kind == "kept" => d.doc_id }.toDF("doc_id")
       def appendTo(df: DataFrame, name: String, bucketCol: String): Unit =
         df.write.mode("append").option("path", gidxPath(tag, name))
           .bucketBy(8, bucketCol).saveAsTable(gidxTable(name, tag))
