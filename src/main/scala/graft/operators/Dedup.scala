@@ -151,9 +151,10 @@ object Dedup {
 
   /** A near-dup pair generator: (doc_id, text) documents and a Jaccard
     * threshold t in, unordered (a_id < b_id, jac ≥ t) pairs out. Every
-    * self-join consumer (ER, the curation pipelines, the standing probe's
-    * within-batch pass) takes one, so the exact and banded twins differ
-    * in this argument only: [[jaccardPairsFrom]] (all pairs, Σ df²) or
+    * self-join consumer over documents (ER, the curation pipelines) takes
+    * one, so the exact and banded twins differ in this argument only
+    * (the incremental probes' within-batch pass takes the
+    * [[ArrayPairSource]] form): [[jaccardPairsFrom]] (all pairs, Σ df²) or
     * [[bandedPairsFrom]] (md5-minhash band candidates, verified). */
   private[graft] type PairSource = (DataFrame, Double) => DataFrame
 
@@ -165,14 +166,27 @@ object Dedup {
     bandedPairsFromArrays(Pins.cache(shingleArrays(docs)), t)
 
   /** [[bandedPairsFrom]] over a built shingle-array frame (cf. [[jaccardPairsFromArrays]]). */
-  private[graft] def bandedPairsFromArrays(docsArr: DataFrame, t: Double = 0.5): DataFrame =
+  private def bandedPairsFromArrays(docsArr: DataFrame, t: Double): DataFrame =
     verifyPairs(minhashMd5CandidatesFrom(docsArr), docsArr, t)
+
+  /** A pair source over an already-built (doc_id, sh) shingle-array frame
+    * instead of (doc_id, text) documents: the form callers that hold the
+    * arrays cached read, so they skip re-tokenizing. A class, not an alias
+    * of [[PairSource]], so neither form can be passed where the other's
+    * input is expected. */
+  private[graft] final class ArrayPairSource(f: (DataFrame, Double) => DataFrame) {
+    def apply(docsArr: DataFrame, t: Double = 0.5): DataFrame = f(docsArr, t)
+  }
+
+  /** [[jaccardPairsFrom]] and [[bandedPairsFrom]] over built shingle arrays. */
+  private[graft] val jaccardArrayPairs = new ArrayPairSource(jaccardPairsFromArrays)
+  private[graft] val bandedArrayPairs = new ArrayPairSource(bandedPairsFromArrays)
 
   /** [[jaccardPairsFrom]] over an ALREADY-BUILT (doc_id, sh) shingle-array
     * frame (callers that hold one cached — the incremental batch stages —
     * skip re-tokenizing the same documents; r20, guide §5 reuse). The
     * array column must be [[shingleArrays]]' row-local distinct form. */
-  private[graft] def jaccardPairsFromArrays(docsArr0: DataFrame, t: Double = 0.5): DataFrame = {
+  private def jaccardPairsFromArrays(docsArr0: DataFrame, t: Double): DataFrame = {
     // per-row distinct shingle ARRAYS (no shuffle), exploded for the
     // inverted index — same distinct-shingle semantics as an
     // explode+distinct, minus its (doc_id, shingle) shuffle; per-doc set

@@ -146,11 +146,11 @@ object Pipeline {
   /** Stage 2b of both incremental curation probes ([[curateIncremental]]
     * and the standing index's): the within-batch near-dup collapse over
     * the batch docs still undecided (`rest`), read from the batch's
-    * shingle arrays (`bArr`, keyed `batch_id`) through `pairs`, one of
-    * the `…FromArrays` pair sources. One decision row per
+    * shingle arrays (`bArr`, keyed `batch_id`) through `pairs`, an
+    * array-form pair source. One decision row per
     * non-representative, ref_id = its component's minimum. */
   private[operators] def nearBatchDecisions(bArr: DataFrame, rest: DataFrame, t: Double,
-                                            pairs: Dedup.PairSource): DataFrame = {
+                                            pairs: Dedup.ArrayPairSource): DataFrame = {
     val restArr = bArr
       .join(rest.select(col("doc_id").as("batch_id")), Seq("batch_id"), "left_semi")
       .select(col("batch_id").as("doc_id"), col("sh"))
@@ -274,7 +274,7 @@ object Pipeline {
     // (r2 ⊇ r3, shingleArrays is per-row): a semi-join reads them back
     // instead of re-tokenizing r3's texts (r20, guide §5 reuse)
     val nearBatch = Pins.checkpoint(
-      nearBatchDecisions(bArr, r3, 0.5, Dedup.jaccardPairsFromArrays))
+      nearBatchDecisions(bArr, r3, 0.5, Dedup.jaccardArrayPairs))
     val r4 = r3.join(nearBatch.select("doc_id"), Seq("doc_id"), "left_anti")
 
     // 3./4. per-doc quality gates, in stage order (flags shared with the

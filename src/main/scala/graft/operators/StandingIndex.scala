@@ -973,7 +973,7 @@ object StandingIndex {
     // exists for, the SLIVER is itself corpus-proportional and the exact
     // within-batch join inherits the same quadratic term.
     val nearBatch = Pipeline.nearBatchDecisions(bArr, r3, t,
-      if (banded) Dedup.bandedPairsFromArrays else Dedup.jaccardPairsFromArrays)
+      if (banded) Dedup.bandedArrayPairs else Dedup.jaccardArrayPairs)
     val r4 = Pins.cache(r3.join(nearBatch.select("doc_id"), Seq("doc_id"), "left_anti"))
 
     // 3./4. quality gates scored over the SLIVER only (per-doc decisions)

@@ -534,7 +534,7 @@ object StreamingDedup {
       // bucketCandidates rule, inlined without its diamond cache: the
       // stats diamond it would memoize is batch-bounded.
       val withinNear =
-        if (!banded) Dedup.jaccardPairsFromArrays(mbArr).select("a_id", "b_id")
+        if (!banded) Dedup.jaccardArrayPairs(mbArr).select("a_id", "b_id")
         else {
           val bb = mbBands.select("doc_id", "band", "bucket")
           val bstats = bb.groupBy("band", "bucket")
@@ -754,7 +754,7 @@ object StreamingDedup {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // the batch is shingled once: the within-batch pairs read the pinned
     // arrays the index probe used
-    val nearPairs = Dedup.jaccardPairsFromArrays(mbArr)
+    val nearPairs = Dedup.jaccardArrayPairs(mbArr)
       .select("a_id", "b_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
 
