@@ -152,10 +152,9 @@ object Dedup {
   /** A near-dup pair generator: (doc_id, text) documents and a Jaccard
     * threshold t in, unordered (a_id < b_id, jac ≥ t) pairs out. Every
     * self-join consumer over documents (ER, the curation pipelines) takes
-    * one, so the exact and banded twins differ in this argument only
-    * (the incremental probes' within-batch pass takes the
-    * [[ArrayPairSource]] form): [[jaccardPairsFrom]] (all pairs, Σ df²) or
-    * [[bandedPairsFrom]] (md5-minhash band candidates, verified). */
+    * one, so the exact and banded twins differ in this argument only:
+    * [[jaccardPairsFrom]] (all pairs, Σ df²) or [[bandedPairsFrom]]
+    * (md5-minhash band candidates, verified). */
   private[graft] type PairSource = (DataFrame, Double) => DataFrame
 
   /** The banded [[PairSource]]: md5-minhash band candidates
@@ -163,24 +162,17 @@ object Dedup {
     * verification — a subset of [[jaccardPairsFrom]]'s pairs with the
     * same `jac`, missing a pair only by the band family's recall. */
   private[graft] def bandedPairsFrom(docs: DataFrame, t: Double = 0.5): DataFrame =
-    bandedPairsFromArrays(Pins.cache(shingleArrays(docs)), t)
+    bandedArrayPairs(Pins.cache(shingleArrays(docs)), t)
 
-  /** [[bandedPairsFrom]] over a built shingle-array frame (cf. [[jaccardPairsFromArrays]]). */
-  private def bandedPairsFromArrays(docsArr: DataFrame, t: Double): DataFrame =
-    verifyPairs(minhashMd5CandidatesFrom(docsArr), docsArr, t)
-
-  /** A pair source over an already-built (doc_id, sh) shingle-array frame
-    * instead of (doc_id, text) documents: the form callers that hold the
-    * arrays cached read, so they skip re-tokenizing. A class, not an alias
-    * of [[PairSource]], so neither form can be passed where the other's
-    * input is expected. */
+  /** A pair source over a built (doc_id, sh) shingle-array frame, for callers
+    * that hold the arrays cached. A class, not a [[PairSource]] alias, so the
+    * compiler rejects either form where the other's input is expected. */
   private[graft] final class ArrayPairSource(f: (DataFrame, Double) => DataFrame) {
     def apply(docsArr: DataFrame, t: Double = 0.5): DataFrame = f(docsArr, t)
   }
-
-  /** [[jaccardPairsFrom]] and [[bandedPairsFrom]] over built shingle arrays. */
   private[graft] val jaccardArrayPairs = new ArrayPairSource(jaccardPairsFromArrays)
-  private[graft] val bandedArrayPairs = new ArrayPairSource(bandedPairsFromArrays)
+  private[graft] val bandedArrayPairs =
+    new ArrayPairSource((arr, t) => verifyPairs(minhashMd5CandidatesFrom(arr), arr, t))
 
   /** [[jaccardPairsFrom]] over an ALREADY-BUILT (doc_id, sh) shingle-array
     * frame (callers that hold one cached — the incremental batch stages —

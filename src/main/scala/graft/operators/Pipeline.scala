@@ -144,11 +144,10 @@ object Pipeline {
   }
 
   /** Stage 2b of both incremental curation probes ([[curateIncremental]]
-    * and the standing index's): the within-batch near-dup collapse over
-    * the batch docs still undecided (`rest`), read from the batch's
-    * shingle arrays (`bArr`, keyed `batch_id`) through `pairs`, an
-    * array-form pair source. One decision row per
-    * non-representative, ref_id = its component's minimum. */
+    * and the standing index's): the within-batch near-dup collapse over the
+    * undecided batch docs `rest`, read from the batch's shingle arrays
+    * (`bArr`, keyed `batch_id`). One decision row per non-representative,
+    * ref_id = its component's minimum. */
   private[operators] def nearBatchDecisions(bArr: DataFrame, rest: DataFrame, t: Double,
                                             pairs: Dedup.ArrayPairSource): DataFrame = {
     val restArr = bArr
